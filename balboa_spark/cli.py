@@ -102,11 +102,6 @@ def build_parser() -> argparse.ArgumentParser:
         "(KenLM convention; denominators stay un-pruned)",
     )
     s.add_argument(
-        "--approx-vocab", dest="approx_vocab", action="store_true",
-        help="HLL vocabulary estimate instead of the exact distinct "
-        "shuffle (~2%% rsd)",
-    )
-    s.add_argument(
         "--smoothing", choices=("addalpha", "kn", "mkn"),
         default="addalpha",
         help="addalpha (default), kn (interpolated Kneser-Ney), or "
@@ -438,13 +433,11 @@ def run(args: argparse.Namespace, spark=None) -> int:
         from balboa_spark.operators import lm
 
         docs = spark.read.parquet(args.input)
-        if args.smoothing != "addalpha" and (
-            args.min_count != 1 or args.approx_vocab
-        ):
+        if args.smoothing != "addalpha" and args.min_count != 1:
             # loud failure, not a silently unpruned artifact: the KN
-            # trainers take neither option
+            # trainers do not prune
             raise SystemExit(
-                "--min-count/--approx-vocab apply only to "
+                "--min-count applies only to "
                 "--smoothing addalpha; the kn/mkn trainers keep every "
                 "gram type (their statistics are type-count-derived, "
                 "so pruning would change the model, not just its size)"
@@ -460,10 +453,7 @@ def run(args: argparse.Namespace, spark=None) -> int:
         else:
             lm.save_bigram_lm(
                 lm.train_bigram_lm(
-                    docs,
-                    alpha=args.alpha,
-                    min_count=args.min_count,
-                    approx_vocab=args.approx_vocab,
+                    docs, alpha=args.alpha, min_count=args.min_count
                 ),
                 args.model,
             )

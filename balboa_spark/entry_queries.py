@@ -735,7 +735,7 @@ _TAIL = [
     "corpus_pack_boundaries",  # packer boundary twin
     "corpus_lm_kn_perplexity", # KN scorer green r12+r13; KN arithmetic
                                # graded in-cap via pipeline_ccnet_approx/_par
-    "lm_store_kn_perplexity",  # NgramCountStore KN twin, green r12+r13
+    "lm_store_kn_perplexity",  # n=2 count-store KN twin, green r12+r13
     "corpus_lm_kn5_perplexity",# order-5 twin, green r12+r13
     "corpus_lm_kn_by_source",  # grouped-KN twin, green r12+r13
     # --- demoted r14: r5+r13 double-greens, kernels unchanged ---
@@ -840,7 +840,7 @@ _TAIL = [
     "events_interval_join",    # green r5-r7+r11 (4x)
     "corpus_lm_perplexity",    # add-alpha bigram
     "corpus_lm3_perplexity",   # add-alpha order-3
-    "lm_store_perplexity",     # BigramCountStore roundtrip
+    "lm_store_perplexity",     # n=2 count-store add-alpha roundtrip
     "corpus_leakage_split",    # group-aware split kernel
     "events_skew_metrics",     # keyed skew-stats kernel
     # (the whole former r11-demotion block — the 17-entry r10 cohort,

@@ -1,26 +1,49 @@
-"""Corpus-trained n-gram language-model scoring (CCNet-style quality
-filter).
+"""Corpus-trained n-gram language models (CCNet-style quality filter).
 
 CCNet (Wenzek et al., 2020) filters CommonCrawl by per-document
 perplexity under a KenLM n-gram model trained on a clean corpus;
-Gopher/Dolma-style pipelines use the same shape. This module trains an
-add-alpha-smoothed word-BIGRAM model with plain DataFrame aggregations
-and scores every document by mean log-probability / perplexity — no
-external LM library, no UDF, everything whole-stage-codegen.
+Gopher/Dolma-style pipelines use the same shape. Everything here is
+plain DataFrame aggregation and joins — no external LM library, no
+UDF, whole-stage codegen.
 
-Scale shape (100 TB):
-- Training is two corpus-sized groupBy counts (bigram and
-  bigram-context) — map-side partial aggregation makes the shuffle
-  carry only distinct grams per partition.
-- Scoring is two shuffle joins of the corpus bigram stream against the
-  count tables keyed on the gram. The count tables are corpus-derived
-  and therefore NOT broadcast (a multilingual corpus has an unbounded
-  distinct-bigram set — same hazard note as
-  ``corpus.trigram_familiarity``); AQE handles the join strategy and
-  the hot-context skew (stopwords like "the" as w1) via skew-join
-  splitting.
-- The only driver-side state is the vocabulary size — one
-  ``count()`` scalar.
+One core, one scorer per smoothing:
+
+- The count relation ``(k, ctx, w, c)`` (``_all_order_counts``): ONE
+  corpus pass emits every k-gram of every order 1..n into a single
+  exploded stream and one groupBy counts them (map-side partial
+  aggregation: the shuffle carries distinct grams per partition).
+  ``ctx`` is the space-joined (k-1)-token prefix (``''`` at k=1), so
+  growing n widens the shuffle KEY, not the number of shuffles. The
+  k=1 rows are the unigram table and their row count is the
+  vocabulary V — no separate distinct-token pass. An optional group
+  column keys one relation per group (CCNet's per-language LMs).
+- Each smoothing scores against that relation once it is
+  materialized (checkpoint, parquet artifact, or ``NgramCountStore``
+  fold): add-alpha (``ngram_lm_perplexity``), interpolated
+  Kneser-Ney with per-order adjusted continuation counts
+  (``kn_ngram_lm_perplexity``, per group
+  ``kn_ngram_lm_perplexity_by_group``) and stupid backoff
+  (``stupid_backoff_perplexity``). Modified KN is the KN scorer with
+  a discount-by-count expression at the top order, at n=2 only.
+- Every scorer reads one stream (``_score_stream``: each position
+  with a full (n-1)-token context, carrying every suffix context) and
+  folds it per document one way (``_per_doc``): ``(id, n_grams,
+  avg_logprob, perplexity = exp(-avg_logprob))``. Documents with
+  fewer than n tokens are absent.
+- The bigram names (``bigram_lm_perplexity``,
+  ``train_/score_/save_bigram_lm``, their ``kn``/``mkn`` twins and
+  ``BigramCountStore``) are n=2 views of the same core. They keep
+  their ``n_bigrams`` column and the parquet artifact format —
+  ``c12`` (w1, w2, c12) plus a ``meta`` row carrying ``kind``
+  (add-alpha also writes ``c1``) — that ``load_any_lm``, the
+  ``lm-score`` CLI and the streaming perplexity monitor read.
+
+Scale shape (100 TB): count tables are corpus-derived (a multilingual
+crawl has an unbounded distinct-gram set) and are never
+force-broadcast; AQE picks the join strategy and splits hot contexts
+(stopwords like "the" as ctx). Driver-side state is a handful of
+scalars (V, count-of-counts discounts) collected from the
+materialized count table.
 
 This complements ``corpus.trigram_familiarity`` (a char-level mean
 corpus-frequency proxy): here the score is a real probability model
@@ -33,743 +56,167 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from balboa_spark.operators.text import tokens
 
-#: Laplace smoothing mass added to every bigram count.
+#: Laplace smoothing mass added to every gram count.
 DEFAULT_ALPHA = 1.0
 
-# Bigrams of a token-array column `tk` as an array of (w1, w2) structs.
-# Spark SQL array subscripts are 0-based; sequence(1, size-1) yields
-# i = 1..n-1 so (tk[i-1], tk[i]) walks every adjacent pair. Guarded by
-# a size >= 2 filter upstream (sequence(1, 0) would DESCEND — the same
-# footgun ``corpus.char_trigrams`` documents).
-_BIGRAMS_EXPR = (
-    "transform(sequence(1, size(tk) - 1), "
-    "i -> struct(tk[i - 1] AS w1, tk[i] AS w2))"
-)
+
+# ---------------------------------------------------------------------------
+# The core: one count relation, one scoring stream, one per-document fold
+# ---------------------------------------------------------------------------
+
+def _all_order_counts(
+    train_df: DataFrame, n: int, text_col: str, group_col: str | None = None
+) -> DataFrame:
+    """LAZY (k, ctx, w, c) count relation for every order 1..n from ONE
+    corpus pass: each position emits its k-gram struct per order into a
+    unioned exploded stream, one groupBy shuffles them together (k=1
+    rows carry ctx='' and double as the unigram table). With
+    ``group_col`` every row is additionally keyed by ``_g`` — the
+    per-group training tables from the same single shuffle, not a
+    per-group loop. Callers materialize (checkpoint or parquet) before
+    multi-consumer use."""
+    keys = [] if group_col is None else ["_g"]
+    arms = ", ".join(
+        f"if(size(tk) >= {k}, transform(sequence(1, size(tk) - {k - 1}), "
+        f"i -> struct({k} AS k, "
+        + (
+            f"array_join(slice(tk, i, {k - 1}), ' ') AS ctx, "
+            if k > 1
+            else "'' AS ctx, "
+        )
+        + f"tk[i + {k - 2}] AS w)), "
+        f"cast(array() as array<struct<k int, ctx string, w string>>))"
+        for k in range(1, n + 1)
+    )
+    return (
+        train_df.select(
+            *([F.col(group_col).alias("_g")] if keys else []),
+            tokens(F.col(text_col)).alias("tk"),
+        )
+        .where(F.size("tk") >= 1)
+        .select(*keys, F.explode(F.expr(f"flatten(array({arms}))")).alias("g"))
+        .select(*keys, "g.k", "g.ctx", "g.w")
+        .groupBy(*keys, "k", "ctx", "w")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
 
 
-def _bigram_stream(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, w1, w2) — one row per adjacent token pair per document."""
-    staged = df.select(
-        F.col(id_col), tokens(F.col(text_col)).alias("tk")
-    ).where(F.size("tk") >= 2)
-    return staged.select(
-        F.col(id_col), F.explode(F.expr(_BIGRAMS_EXPR)).alias("bg")
-    ).select(id_col, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+def _score_stream(
+    df: DataFrame,
+    n: int,
+    text_col: str,
+    id_col: str,
+    group_col: str | None = None,
+) -> DataFrame:
+    """(id[, _g], ctx2..ctxn, w): one row per position with a full
+    (n-1)-token context; ``ctx{k}`` is the (k-1)-token suffix context
+    an order-k lookup joins on (``ctx{n}`` the full one)."""
+    keys = [] if group_col is None else ["_g"]
+    sfx_cols = ", ".join(
+        f"array_join(slice(tk, i + {n - k}, {k - 1}), ' ') AS ctx{k}"
+        for k in range(2, n + 1)
+    )
+    score_expr = (
+        f"transform(sequence(1, size(tk) - {n - 1}), "
+        f"i -> struct({sfx_cols}, tk[i + {n - 2}] AS w))"
+    )
+    return (
+        df.select(
+            F.col(id_col),
+            *([F.col(group_col).alias("_g")] if keys else []),
+            tokens(F.col(text_col)).alias("tk"),
+        )
+        .where(F.size("tk") >= n)
+        .select(F.col(id_col), *keys, F.explode(F.expr(score_expr)).alias("g"))
+        .select(id_col, *keys, "g.*")
+    )
 
 
-class BigramLM(NamedTuple):
-    """A trained model: the distinct-bigram count relation, the
-    context-count relation (the per-w1 row sums of ``c12``, kept
-    explicit so bigram pruning cannot corrupt the denominators), the
-    vocabulary size, and the smoothing mass. Both relations are
-    gram-type-sized — typically orders of magnitude below the corpus
-    — and are the only distributed state."""
+def _per_doc(
+    lp: DataFrame, keys: list[str], avg_col: str = "avg_logprob"
+) -> DataFrame:
+    """Fold per-position log scores (column ``lp``) per ``keys``:
+    ``(keys, n_grams, avg_col, perplexity = exp(-avg_col))``."""
+    return (
+        lp.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n_grams"), F.sum("lp").alias("_s"))
+        .withColumn(avg_col, F.col("_s") / F.col("n_grams"))
+        .withColumn("perplexity", F.exp(-F.col(avg_col)))
+        .drop("_s")
+    )
 
-    c12: DataFrame
-    c1: DataFrame
+
+def _bigrams(scored: DataFrame) -> DataFrame:
+    """The bigram names' output contract: ``n_grams`` is ``n_bigrams``."""
+    return scored.withColumnRenamed("n_grams", "n_bigrams")
+
+
+def _ney(n1: int, n2: int) -> float:
+    """Ney's absolute discount ``n1 / (n1 + 2 n2)`` from a table's
+    count-of-counts; 0.5 when the table has no singleton/doubleton."""
+    return n1 / (n1 + 2 * n2) if (n1 + 2 * n2) else 0.5
+
+
+# ---------------------------------------------------------------------------
+# Add-alpha
+# ---------------------------------------------------------------------------
+
+class _AddAlphaLM(NamedTuple):
+    """Add-alpha order-n model: the order-n rows ``grams`` (ctx, w, c)
+    of the count relation (``min_count``-pruned), the context totals
+    ``ctx`` (ctx, c_ctx) derived from the UNPRUNED rows, V and alpha."""
+
+    n: int
+    grams: DataFrame
+    ctx: DataFrame
     vocab: int
     alpha: float
 
 
-def train_bigram_lm(
-    train_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    alpha: float = DEFAULT_ALPHA,
-    min_count: int = 1,
-    approx_vocab: bool = False,
-) -> BigramLM:
-    """Count-train the model: one corpus-sized groupBy for the bigram
-    counts plus one countDistinct scalar for the vocabulary (over ALL
-    training tokens, including 1-token docs that contribute no
-    bigram). Context counts c(w1 ·) derive from the bigram table's
-    row sums — the second aggregation reads the distinct-bigram
-    relation, never a second corpus pass. NOTE: the returned relations
-    are LAZY; a consumer that references both (scoring joins each)
-    re-executes the shared c12 lineage per reference (measured:
-    Catalyst does NOT exchange-reuse across these branches). At scale,
-    ``save_bigram_lm`` first and score from the parquet artifact —
-    then training is the only corpus pass and scoring reads
-    gram-type-sized parquet twice.
-
-    ``min_count`` > 1 prunes bigram types below the threshold from
-    the stored model (the KenLM convention — web-scale gram tables
-    are Zipf-distributed, so dropping singletons alone typically
-    shrinks the artifact by well over half). Pruning happens AFTER
-    the context counts are derived: a pruned gram still contributes
-    to its context's denominator and simply scores as unseen
-    (smoothing mass only) — probabilities stay <= 1 and sum to < 1
-    over the vocabulary, exactly like an unseen gram.
-
-    ``approx_vocab`` swaps the exact token countDistinct (a full
-    shuffle of distinct tokens, for ONE scalar) for HyperLogLog++
-    (partial-aggregated sketch, default ~2% rsd) — V only sets the
-    smoothing denominator, so a few percent of error moves every
-    score by a shared near-constant and leaves the RANKING that
-    filtering uses effectively untouched. The exact default is what
-    the SQL oracle replays."""
-    train_bg = _bigram_stream(train_df, text_col, id_col)
-    c12 = train_bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
+def _addalpha_model(
+    counts: DataFrame, n: int, alpha: float, min_count: int = 1
+) -> _AddAlphaLM:
+    """Add-alpha view of a materialized count relation. ``min_count``
+    > 1 prunes gram types below the threshold (the KenLM convention —
+    Zipfian gram tables shrink by well over half without singletons)
+    AFTER the context totals are derived: a pruned gram still counts
+    in its context's denominator and simply scores as unseen, so
+    probabilities stay <= 1."""
+    grams = counts.where(F.col("k") == n).select("ctx", "w", "c")
+    ctx = grams.groupBy("ctx").agg(F.sum("c").alias("c_ctx"))
     if min_count > 1:
-        c12 = c12.where(F.col("c12") >= min_count)
-    vocab_agg = (
-        F.approx_count_distinct("t") if approx_vocab else F.countDistinct("t")
-    )
-    vocab = (
-        train_df.select(F.explode(tokens(F.col(text_col))).alias("t"))
-        .agg(vocab_agg)
-        .collect()[0][0]
-    ) or 0
-    return BigramLM(c12=c12, c1=c1, vocab=vocab, alpha=float(alpha))
+        grams = grams.where(F.col("c") >= min_count)
+    vocab = counts.where(F.col("k") == 1).count()
+    return _AddAlphaLM(n, grams, ctx, vocab, float(alpha))
 
 
-def score_bigram_lm(
-    df: DataFrame,
-    model: BigramLM,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+def _addalpha_score(
+    df: DataFrame, model: _AddAlphaLM, text_col: str, id_col: str
 ) -> DataFrame:
-    """Score ``df`` against a trained model — see
-    ``bigram_lm_perplexity`` for the output contract. The two count
-    joins each evaluate their model relation's lineage: cheap when the
-    model is parquet-backed (``load_bigram_lm`` / ``BigramCountStore``
-    — the intended shape at scale), repeated corpus passes when the
-    model relations are still lazy plans over the training corpus."""
-    c1 = model.c1
-    score_bg = _bigram_stream(df, text_col, id_col)
+    """``P(w | ctx) = (c(ctx w) + alpha) / (c(ctx ·) + alpha · V)``:
+    two gram-keyed left joins, unseen grams carry the smoothing mass."""
+    key = f"ctx{model.n}"
     lp = F.log(
-        (F.coalesce(F.col("c12"), F.lit(0)).cast("double") + F.lit(model.alpha))
+        (F.coalesce(F.col("c"), F.lit(0)).cast("double") + F.lit(model.alpha))
         / (
-            F.coalesce(F.col("c1"), F.lit(0)).cast("double")
+            F.coalesce(F.col("c_ctx"), F.lit(0)).cast("double")
             + F.lit(model.alpha * model.vocab)
         )
     )
-    return (
-        score_bg.join(model.c12, ["w1", "w2"], "left")
-        .join(c1, ["w1"], "left")
-        .select(F.col(id_col), lp.alias("lp"))
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.sum("lp").alias("_sum_lp"),
-        )
-        .withColumn("avg_logprob", F.col("_sum_lp") / F.col("n_bigrams"))
-        .withColumn("perplexity", F.exp(-F.col("avg_logprob")))
-        .drop("_sum_lp")
+    g = (
+        _score_stream(df, model.n, text_col, id_col)
+        .join(model.grams.withColumnRenamed("ctx", key), [key, "w"], "left")
+        .join(model.ctx.withColumnRenamed("ctx", key), [key], "left")
     )
-
-
-def save_bigram_lm(model: BigramLM, path: str) -> None:
-    """Persist the model as a parquet artifact: ``<path>/c12`` and
-    ``<path>/c1`` hold the count relations, ``<path>/meta`` one
-    (vocab, alpha) row — the shape a streaming monitor or a later
-    scoring job re-reads without retraining."""
-    model.c12.write.mode("overwrite").parquet(os.path.join(path, "c12"))
-    model.c1.write.mode("overwrite").parquet(os.path.join(path, "c1"))
-    spark = model.c12.sparkSession
-    (
-        spark.createDataFrame(
-            [(model.vocab, model.alpha)], "vocab long, alpha double"
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "meta"))
-    )
-
-
-def load_bigram_lm(spark: SparkSession, path: str) -> BigramLM:
-    meta = spark.read.parquet(os.path.join(path, "meta")).collect()[0]
-    return BigramLM(
-        c12=spark.read.parquet(os.path.join(path, "c12")),
-        c1=spark.read.parquet(os.path.join(path, "c1")),
-        vocab=meta["vocab"],
-        alpha=meta["alpha"],
-    )
-
-
-def save_kn_bigram_lm(model: KNBigramLM, path: str) -> None:
-    """Persist interpolated KN as a parquet artifact: only ``c12`` and
-    the scalar meta row travel — ctx/cont are gram-type-sized
-    DERIVATIONS of c12 and are rebuilt lazily on load, so the artifact
-    stays one relation and can never desync from its statistics."""
-    model.c12.write.mode("overwrite").parquet(os.path.join(path, "c12"))
-    spark = model.c12.sparkSession
-    (
-        spark.createDataFrame(
-            [("kn", model.types, model.vocab, model.discount, model.alpha_c)],
-            "kind string, types long, vocab long, discount double,"
-            " alpha_c double",
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "meta"))
-    )
-
-
-def load_kn_bigram_lm(spark: SparkSession, path: str) -> KNBigramLM:
-    meta = spark.read.parquet(os.path.join(path, "meta")).collect()[0]
-    if meta["kind"] != "kn":
-        raise ValueError(f"artifact at {path} is kind={meta['kind']!r}, not kn")
-    c12 = spark.read.parquet(os.path.join(path, "c12"))
-    return KNBigramLM(
-        c12=c12,
-        ctx=c12.groupBy("w1").agg(
-            F.sum("c12").alias("c1"), F.count(F.lit(1)).alias("n1p_fw")
-        ),
-        cont=c12.groupBy("w2").agg(F.count(F.lit(1)).alias("n1p_bw")),
-        types=meta["types"],
-        vocab=meta["vocab"],
-        discount=meta["discount"],
-        alpha_c=meta["alpha_c"],
-    )
-
-
-def save_mkn_bigram_lm(model: MKNBigramLM, path: str) -> None:
-    """Modified-KN artifact: c12 + the scalar meta row (three
-    discounts); ctx buckets and continuation counts rebuild from c12
-    on load, same single-relation shape as the KN artifact."""
-    model.c12.write.mode("overwrite").parquet(os.path.join(path, "c12"))
-    spark = model.c12.sparkSession
-    (
-        spark.createDataFrame(
-            [(
-                "mkn", model.types, model.vocab,
-                model.d1, model.d2, model.d3, model.alpha_c,
-            )],
-            "kind string, types long, vocab long, d1 double, d2 double,"
-            " d3 double, alpha_c double",
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "meta"))
-    )
-
-
-def load_mkn_bigram_lm(spark: SparkSession, path: str) -> MKNBigramLM:
-    meta = spark.read.parquet(os.path.join(path, "meta")).collect()[0]
-    if meta["kind"] != "mkn":
-        raise ValueError(
-            f"artifact at {path} is kind={meta['kind']!r}, not mkn"
-        )
-    c12 = spark.read.parquet(os.path.join(path, "c12"))
-    return MKNBigramLM(
-        c12=c12,
-        ctx=c12.groupBy("w1").agg(
-            F.sum("c12").alias("c1"),
-            F.sum((F.col("c12") == 1).cast("long")).alias("kn1"),
-            F.sum((F.col("c12") == 2).cast("long")).alias("kn2"),
-            F.sum((F.col("c12") >= 3).cast("long")).alias("kn3p"),
-        ),
-        cont=c12.groupBy("w2").agg(F.count(F.lit(1)).alias("n1p_bw")),
-        types=meta["types"],
-        vocab=meta["vocab"],
-        d1=meta["d1"],
-        d2=meta["d2"],
-        d3=meta["d3"],
-        alpha_c=meta["alpha_c"],
-    )
-
-
-def load_any_lm(spark: SparkSession, path: str):
-    """Artifact dispatcher: read the meta row's ``kind`` (absent on
-    pre-r11 add-alpha artifacts) and return ``(model, score_fn)`` where
-    ``score_fn(df, model, text_col, id_col)`` is the matching scorer —
-    the seam the streaming monitor and the lm-score CLI share so a
-    frozen artifact of ANY smoothing drops in."""
-    meta = spark.read.parquet(os.path.join(path, "meta")).collect()[0]
-    kind = meta["kind"] if "kind" in meta.__fields__ else "addalpha"
-    if kind == "kn":
-        return load_kn_bigram_lm(spark, path), score_kn_bigram_lm
-    if kind == "mkn":
-        return load_mkn_bigram_lm(spark, path), score_mkn_bigram_lm
-    return load_bigram_lm(spark, path), score_bigram_lm
-
-
-class BigramCountStore:
-    """Incrementally-updatable gram counts on disk — the artifact that
-    keeps a deployed LM fresh from a stream without ever retraining on
-    the full corpus.
-
-    Layout: ``<path>/grams/epoch=<scope>/`` holds one epoch's
-    batch-local (w1, w2, c12) partial counts, ``<path>/uni/epoch=
-    <scope>/`` its (t, c) unigram counts (vocab-sized — kept so the
-    vocabulary stays exact across epochs, including tokens of
-    one-token documents). Counts are associative sums, so
-    merge-on-read (one groupBy over the live epoch dirs) equals the
-    one-shot model — the same fold-on-read argument as the
-    observation store's delta path (``plans/layout.py``).
-
-    Consistency: each epoch write is O(batch) and lands with
-    mode=overwrite under its stream-scoped epoch dir, so a
-    foreachBatch replay rewrites the same state (idempotent, no gate
-    needed — unlike the dedup stores, no DECISION depends on history
-    here, only counts). The manifest's ``live`` list is the readers'
-    truth: a dir written but not yet listed (torn batch) is invisible
-    until the replay re-lands it, and ``compact()`` flips the list to
-    the folded generation ATOMICALLY (tmp + os.replace) before
-    deleting folded dirs.
-
-    Replay vs compaction: an epoch folded into a base generation by
-    ``compact()`` leaves the live list, so "is my scope already
-    listed?" alone cannot gate a replay that races a compaction. The
-    manifest therefore also keeps a per-stream ``applied`` high-water
-    mark that SURVIVES compaction (the same persistent epoch gate as
-    ``plans/layout.py``'s ``last_epochs``): a replayed epoch at or
-    below the mark whose dir is no longer live was folded — skipped,
-    not re-appended.
-
-    Single-writer contract, now DETECTED (r11): manifest updates are
-    read-modify-write, serialized by foreachBatch within one query;
-    two QUERIES writing the same store concurrently would lose an
-    update. Every commit carries the commit-seq CAS
-    (``genstore.flip_manifest``): the losing writer's commit raises
-    ``ConcurrentWriterError`` instead of silently dropping the
-    winner's epoch — give each stream its own store (or serialize
-    externally), same contract as the other persisted stores."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        self._man_path = os.path.join(path, "manifest.json")
-
-    # -- manifest ----------------------------------------------------
-    def _manifest(self) -> dict:
-        if not os.path.exists(self._man_path):
-            return {"format": 1, "live": [], "applied": {}}
-        with open(self._man_path) as f:
-            man = json.load(f)
-        man.setdefault("applied", {})
-        return man
-
-    def _live(self) -> list[str]:
-        return self._manifest()["live"]
-
-    def _write_manifest(self, man: dict, expected_seq: int | None = None) -> None:
-        from balboa_spark.plans.genstore import flip_manifest
-
-        flip_manifest(self.path, man, "manifest.json", expected_seq=expected_seq)
-
-    # -- writes ------------------------------------------------------
-    def process_batch(
-        self,
-        batch: DataFrame,
-        epoch_id: int,
-        stream_id: str = "default",
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        max_live_epochs: int | None = None,
-    ) -> None:
-        """Fold ONE batch's gram/unigram counts and land them under
-        the stream-scoped epoch. O(batch): the store is never read.
-        Empty batches record nothing (a schema-less parquet dir as the
-        store's FIRST epoch would break schema inference on read).
-
-        ``max_live_epochs`` arms size-triggered auto-compaction (the
-        RocksDB L0 file-count trigger, not just a caller-scheduled
-        cadence): when the committed live list exceeds it, ``compact()``
-        runs inline — same atomic flip — so a misconfigured cadence can
-        no longer let merge-on-read cost grow unboundedly."""
-        if not re.fullmatch(r"[A-Za-z0-9_.]+", stream_id) or stream_id == "base":
-            # "base" is reserved for compaction generations; path-ish
-            # characters would silently split the epoch directory name
-            raise ValueError(f"invalid stream_id {stream_id!r}")
-        man = self._manifest()
-        expected_seq = man.get("commit_seq", 0)
-        scope = f"{stream_id}-{epoch_id}"
-        if (
-            epoch_id <= man["applied"].get(stream_id, -1)
-            and scope not in man["live"]
-        ):
-            # replayed epoch whose dir was folded into a base
-            # generation by compact(): re-appending would double-count
-            return
-        if batch.isEmpty():
-            return
-        # tokenize ONCE for both counts (the batch is micro-batch-sized,
-        # so the eager materialization is cheap and halves the source
-        # scans + regex tokenize of the hot path)
-        tk_df = batch.select(
-            F.col(id_col), tokens(F.col(text_col)).alias("tk")
-        ).localCheckpoint(eager=True)
-        (
-            tk_df.where(F.size("tk") >= 2)
-            .select(F.explode(F.expr(_BIGRAMS_EXPR)).alias("bg"))
-            .select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-            .groupBy("w1", "w2")
-            .agg(F.count(F.lit(1)).alias("c12"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(self.path, "grams", f"epoch={scope}"))
-        )
-        (
-            tk_df.select(F.explode("tk").alias("t"))
-            .groupBy("t")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(self.path, "uni", f"epoch={scope}"))
-        )
-        if scope not in man["live"]:
-            man["live"] = man["live"] + [scope]
-        man["applied"][stream_id] = max(
-            epoch_id, man["applied"].get(stream_id, -1)
-        )
-        # CAS against the INITIAL read (the decision point): another
-        # writer landing in this batch's write window raises loudly
-        # instead of having its live-list entry silently dropped
-        self._write_manifest(man, expected_seq=expected_seq)
-        if max_live_epochs is not None and len(man["live"]) > max_live_epochs:
-            self.compact()
-
-    # -- reads -------------------------------------------------------
-    def _read_live(self, sub: str) -> DataFrame | None:
-        live = self._live()
-        if not live:
-            return None
-        df = self.spark.read.parquet(os.path.join(self.path, sub))
-        # epoch is a partition column: orphan dirs (torn writes,
-        # compacted-away epochs) prune out at the scan. One JVM-parsed
-        # SQL string, NOT isin(*live): between compactions the live
-        # list grows per micro-batch, and isin marshals every literal
-        # as its own Py4J call (the psl.py lesson). Scopes are
-        # charset-validated at write time, so quoting is safe.
-        in_list = ", ".join("'" + s.replace("'", "''") + "'" for s in live)
-        return df.where(F.expr(f"epoch IN ({in_list})"))
-
-    def counts(self) -> DataFrame | None:
-        """Current (w1, w2, c12) — the merge-on-read fold."""
-        g = self._read_live("grams")
-        if g is None:
-            return None
-        return g.groupBy("w1", "w2").agg(F.sum("c12").alias("c12"))
-
-    def model(
-        self, alpha: float = DEFAULT_ALPHA, min_count: int = 1
-    ) -> BigramLM:
-        """The current model. Context counts derive from the folded
-        UNPRUNED bigram counts; vocabulary is the exact distinct-token
-        count across all live epochs (one count over the vocab-sized
-        unigram fold)."""
-        c12 = self.counts()
-        if c12 is None:
-            raise ValueError(f"empty store at {self.path}")
-        c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
-        if min_count > 1:
-            c12 = c12.where(F.col("c12") >= min_count)
-        vocab = (
-            self._read_live("uni").select("t").distinct().count()
-        )
-        return BigramLM(c12=c12, c1=c1, vocab=vocab, alpha=float(alpha))
-
-    def kn_model(
-        self, discount: float | None = None, alpha_c: float = 1.0
-    ) -> "KNBigramLM":
-        """Interpolated-KN model from the folded counts (r11): every
-        KN relation — context totals, forward/backward continuation
-        type counts, the Ney discount's count-of-counts — derives from
-        the merged bigram TYPE table, and type counts are a function
-        of the folded sums alone, so the incremental store yields
-        exactly the model a one-shot ``train_kn_bigram_lm`` over the
-        full history would (the same associativity argument as
-        ``model()``, extended to the derived statistics)."""
-        c12 = self.counts()
-        if c12 is None:
-            raise ValueError(f"empty store at {self.path}")
-        c12 = c12.localCheckpoint(eager=True)
-        ctx = c12.groupBy("w1").agg(
-            F.sum("c12").alias("c1"), F.count(F.lit(1)).alias("n1p_fw")
-        )
-        cont = c12.groupBy("w2").agg(F.count(F.lit(1)).alias("n1p_bw"))
-        stats = c12.agg(
-            F.count(F.lit(1)).alias("types"),
-            F.sum((F.col("c12") == 1).cast("long")).alias("n1"),
-            F.sum((F.col("c12") == 2).cast("long")).alias("n2"),
-        ).collect()[0]
-        types = stats["types"] or 0
-        if discount is None:
-            n1, n2 = stats["n1"] or 0, stats["n2"] or 0
-            discount = n1 / (n1 + 2 * n2) if (n1 + 2 * n2) else 0.5
-        vocab = self._read_live("uni").select("t").distinct().count()
-        return KNBigramLM(
-            c12=c12,
-            ctx=ctx,
-            cont=cont,
-            types=types,
-            vocab=vocab,
-            discount=float(discount),
-            alpha_c=float(alpha_c),
-        )
-
-    # -- maintenance -------------------------------------------------
-    def compact(self, vacuum: bool = False) -> None:
-        """Fold every live epoch into one base generation: write the
-        folded counts under a fresh scope, then flip the manifest
-        (atomic os.replace — the commit point). Merge-on-read cost
-        resets from O(#epochs) dirs to one.
-
-        Folded dirs get a ONE-GENERATION grace (r11, mirroring the
-        observation store's retired_deltas): a ``model()``/``counts()``
-        plan built before the flip still lazily reads the old live
-        list and would hit FileNotFound if the dirs vanished mid-query,
-        so this compaction KEEPS its folded dirs, records them in the
-        manifest's ``retired`` map, and reclaims the PREVIOUS
-        compaction's retired dirs — default-mode compaction no longer
-        leaks dead directories indefinitely. Pass ``vacuum=True`` to
-        delete this compaction's folded dirs immediately (only when no
-        plans from before the flip can still run)."""
-        import shutil
-
-        man = self._manifest()
-        expected_seq = man.get("commit_seq", 0)
-        live = man["live"]
-        if len(live) <= 1:
-            return
-        gen = 1 + max(
-            (int(s.rsplit("-", 1)[1]) for s in live if s.startswith("base-")),
-            default=0,
-        )
-        new = f"base-{gen}"
-        c12 = self.counts()
-        c12.write.mode("overwrite").parquet(
-            os.path.join(self.path, "grams", f"epoch={new}")
-        )
-        (
-            self._read_live("uni")
-            .groupBy("t")
-            .agg(F.sum("c").alias("c"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(self.path, "uni", f"epoch={new}"))
-        )
-        # earlier compactions' retired scopes: their grace generation
-        # has passed — reclaim them after this flip. (Every recorded
-        # retired gen is < this gen by construction: its base scope was
-        # folded into our live list.) Entries whose dirs already
-        # vanished are pruned rather than re-deleted.
-        reclaim = [
-            s
-            for s in (man.get("retired") or {})
-            if os.path.isdir(os.path.join(self.path, "grams", f"epoch={s}"))
-            or os.path.isdir(os.path.join(self.path, "uni", f"epoch={s}"))
-        ]
-        retired = {} if vacuum else {s: gen for s in live}
-        # the commit point — the applied marks survive the flip (they
-        # are the only record that a folded epoch ever happened, which
-        # is exactly what gates its replay)
-        self._write_manifest(
-            {**man, "live": [new], "retired": retired},
-            expected_seq=expected_seq,
-        )
-        doomed = reclaim + (list(live) if vacuum else [])
-        for sub in ("grams", "uni"):
-            for s in doomed:
-                shutil.rmtree(
-                    os.path.join(self.path, sub, f"epoch={s}"),
-                    ignore_errors=True,
-                )
-
-
-class NgramCountStore:
-    """Order-n generalization of :class:`BigramCountStore` (r11): one
-    on-disk (k, ctx, w, c) count relation covering EVERY order 1..n,
-    folded incrementally from a stream — the artifact that keeps the
-    order-n interpolated-KN and stupid-backoff scorers fresh without
-    retraining, the same way the bigram store serves the order-2
-    models. Same manifest protocol end to end (live list as the
-    readers' truth, per-stream applied marks surviving compaction,
-    commit-seq CAS, retired-scope grace, ``max_live_epochs`` size
-    trigger) — the only differences are the row schema and that the
-    epoch dirs are additionally partitioned by ``k`` so single-order
-    readers prune.
-
-    Associativity argument: per-batch counts sum across epochs, and
-    every statistic the scorers derive (adjusted continuation tables,
-    context totals, count-of-counts discounts, vocabulary) is a
-    function of the FOLDED counts alone — so merge-on-read equals the
-    one-shot model, extended from the bigram store's sums to the full
-    derivation tree."""
-
-    def __init__(self, spark: SparkSession, path: str, n: int = 3):
-        if n < 2:
-            raise ValueError(f"n must be >= 2, got {n}")
-        self.spark = spark
-        self.path = path
-        self._man_path = os.path.join(path, "manifest.json")
-        man = self._manifest()
-        if man.get("n") is not None and man["n"] != n:
-            raise ValueError(
-                f"store at {path} was built with n={man['n']}, got {n}"
-            )
-        self.n = n
-
-    # manifest protocol shared verbatim with the bigram store
-    _manifest = BigramCountStore._manifest
-    _live = BigramCountStore._live
-    _write_manifest = BigramCountStore._write_manifest
-    _read_live = BigramCountStore._read_live
-
-    def process_batch(
-        self,
-        batch: DataFrame,
-        epoch_id: int,
-        stream_id: str = "default",
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        max_live_epochs: int | None = None,
-    ) -> None:
-        if not re.fullmatch(r"[A-Za-z0-9_.]+", stream_id) or stream_id == "base":
-            raise ValueError(f"invalid stream_id {stream_id!r}")
-        man = self._manifest()
-        expected_seq = man.get("commit_seq", 0)
-        scope = f"{stream_id}-{epoch_id}"
-        if (
-            epoch_id <= man["applied"].get(stream_id, -1)
-            and scope not in man["live"]
-        ):
-            return  # replayed epoch already folded into a base generation
-        if batch.isEmpty():
-            return
-        (
-            _all_order_counts(batch, self.n, text_col)
-            .repartition("k")
-            .write.mode("overwrite")
-            .partitionBy("k")
-            .parquet(os.path.join(self.path, "grams", f"epoch={scope}"))
-        )
-        if scope not in man["live"]:
-            man["live"] = man["live"] + [scope]
-        man["applied"][stream_id] = max(
-            epoch_id, man["applied"].get(stream_id, -1)
-        )
-        man["n"] = self.n
-        self._write_manifest(man, expected_seq=expected_seq)
-        if max_live_epochs is not None and len(man["live"]) > max_live_epochs:
-            self.compact()
-
-    def counts(self) -> DataFrame | None:
-        """Current (k, ctx, w, c) — the merge-on-read fold."""
-        g = self._read_live("grams")
-        if g is None:
-            return None
-        return g.groupBy("k", "ctx", "w").agg(F.sum("c").alias("c"))
-
-    def kn_perplexity(
-        self,
-        df: DataFrame,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        discount: float | None = None,
-        alpha_c: float = 1.0,
-    ) -> DataFrame:
-        """Score against the CURRENT folded order-n KN model — equal
-        to one-shot ``kn_ngram_lm_perplexity`` over the full history."""
-        counts = self.counts()
-        if counts is None:
-            raise ValueError(f"empty store at {self.path}")
-        counts = counts.localCheckpoint(eager=True)
-        return _kn_ngram_score_from_counts(
-            df, counts, self.n, text_col, id_col, discount, alpha_c
-        )
-
-    def sbo_perplexity(
-        self,
-        df: DataFrame,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        backoff: float = 0.4,
-        alpha: float = 1.0,
-    ) -> DataFrame:
-        counts = self.counts()
-        if counts is None:
-            raise ValueError(f"empty store at {self.path}")
-        counts = counts.localCheckpoint(eager=True)
-        return _sbo_score_from_counts(
-            df, counts, self.n, text_col, id_col, backoff, alpha
-        )
-
-    def compact(self, vacuum: bool = False) -> None:
-        """Fold live epochs into one base generation with the same
-        retired-scope one-generation grace as the bigram store."""
-        import shutil
-
-        man = self._manifest()
-        expected_seq = man.get("commit_seq", 0)
-        live = man["live"]
-        if len(live) <= 1:
-            return
-        gen = 1 + max(
-            (int(s.rsplit("-", 1)[1]) for s in live if s.startswith("base-")),
-            default=0,
-        )
-        new = f"base-{gen}"
-        (
-            self.counts()
-            .repartition("k")
-            .write.mode("overwrite")
-            .partitionBy("k")
-            .parquet(os.path.join(self.path, "grams", f"epoch={new}"))
-        )
-        reclaim = [
-            s
-            for s in (man.get("retired") or {})
-            if os.path.isdir(os.path.join(self.path, "grams", f"epoch={s}"))
-        ]
-        retired = {} if vacuum else {s: gen for s in live}
-        self._write_manifest(
-            {**man, "live": [new], "retired": retired},
-            expected_seq=expected_seq,
-        )
-        for s in reclaim + (list(live) if vacuum else []):
-            shutil.rmtree(
-                os.path.join(self.path, "grams", f"epoch={s}"),
-                ignore_errors=True,
-            )
-
-
-def bigram_lm_perplexity(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    alpha: float = DEFAULT_ALPHA,
-    train: DataFrame | None = None,
-) -> DataFrame:
-    """Per-document perplexity under an add-alpha word-bigram LM.
-
-    ``P(w2 | w1) = (c(w1 w2) + alpha) / (c(w1 ·) + alpha · V)`` where
-    ``c(w1 ·)`` is the count of w1 as a bigram context and V the
-    distinct-token vocabulary of the training corpus. When ``train`` is
-    None the model is trained on ``df`` itself (the in-domain variant);
-    passing a clean reference corpus gives the CCNet configuration
-    (train on Wikipedia, score the crawl). Unseen grams are handled by
-    the smoothing mass, so scoring a corpus disjoint from the training
-    set is well-defined.
-
-    Output: ``(id_col, n_bigrams, avg_logprob, perplexity)`` with
-    ``perplexity = exp(-avg_logprob)``. Documents with fewer than two
-    tokens have no bigrams and are absent.
-
-    Low perplexity = fluent/templated text, high = gibberish or
-    out-of-domain; pipelines typically keep a middle band (CCNet keeps
-    the head/middle tertiles).
-    """
-    model = train_bigram_lm(
-        df if train is None else train, text_col, id_col, alpha
-    )
-    # materialize the gram counts ONCE (gram-type-sized — the same
-    # relation save_bigram_lm would write): the two score joins and
-    # the c1 derivation otherwise each re-run the corpus tokenize
-    # lineage (no Catalyst exchange reuse across the branches —
-    # module NOTE)
-    c12 = model.c12.localCheckpoint(eager=True)
-    model = model._replace(
-        c12=c12, c1=c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
-    )
-    return score_bigram_lm(df, model, text_col, id_col)
+    return _per_doc(g.select(F.col(id_col), lp.alias("lp")), [id_col])
 
 
 def ngram_lm_perplexity(
@@ -780,68 +227,66 @@ def ngram_lm_perplexity(
     alpha: float = DEFAULT_ALPHA,
     train: DataFrame | None = None,
 ) -> DataFrame:
-    """Order-n generalization of ``bigram_lm_perplexity`` (CCNet's
-    KenLM reference is order 5): ``P(w | ctx) = (c(ctx w) + alpha) /
-    (c(ctx ·) + alpha · V)`` where ctx is the space-joined (n-1)-token
-    prefix. Same output contract (documents with fewer than n tokens
-    are absent), same plan shape — the context key is one string, so
-    growing n changes shuffle KEY WIDTH, not the number of shuffles
-    or joins. Higher orders sharpen the filter on in-domain text but
-    thin the counts (more smoothing mass per gram) — order 2-3 is the
-    right default when the training corpus is the scored corpus
-    itself rather than a large clean reference."""
+    """Per-document perplexity under an add-alpha order-n LM:
+    ``P(w | ctx) = (c(ctx w) + alpha) / (c(ctx ·) + alpha · V)`` where
+    ctx is the (n-1)-token prefix and V the distinct-token vocabulary
+    of the training corpus (1-token documents included). When
+    ``train`` is None the model is trained on ``df`` itself (the
+    in-domain variant); a clean reference corpus gives the CCNet
+    configuration (train on Wikipedia, score the crawl). Unseen grams
+    are handled by the smoothing mass.
+
+    Output: ``(id_col, n_grams, avg_logprob, perplexity)``. Low
+    perplexity = fluent/templated text, high = gibberish or
+    out-of-domain; pipelines typically keep a middle band (CCNet keeps
+    the head/middle tertiles). Higher orders sharpen the filter on
+    in-domain text but thin the counts (more smoothing mass per gram)
+    — order 2-3 is the right default when the training corpus is the
+    scored corpus itself; KN handles thin contexts better."""
     if n < 2:
         raise ValueError(f"n must be >= 2, got {n}")
+    counts = _all_order_counts(
+        df if train is None else train, n, text_col
+    ).localCheckpoint(eager=True)
+    return _addalpha_score(
+        df, _addalpha_model(counts, n, alpha), text_col, id_col
+    )
 
-    def grams(frame: DataFrame) -> DataFrame:
-        # (id, ctx, w): ctx = tokens[i-1 .. i+n-3] joined, w = tokens[i+n-2]
-        # (1-based sequence index i over 0-based array subscripts)
-        expr = (
-            f"transform(sequence(1, size(tk) - {n - 1}), i -> struct("
-            f"array_join(slice(tk, i, {n - 1}), ' ') AS ctx, "
-            f"tk[i + {n - 2}] AS w))"
-        )
-        staged = frame.select(
-            F.col(id_col), tokens(F.col(text_col)).alias("tk")
-        ).where(F.size("tk") >= n)
-        return staged.select(
-            F.col(id_col), F.explode(F.expr(expr)).alias("g")
-        ).select(id_col, F.col("g.ctx").alias("ctx"), F.col("g.w").alias("w"))
 
-    train_df = df if train is None else train
-    # materialized once (gram-type-sized) — same rationale as
-    # bigram_lm_perplexity's checkpoint: the cc derivation and both
-    # score joins would otherwise each re-run the corpus tokenize
-    cg = (
-        grams(train_df)
-        .groupBy("ctx", "w")
-        .agg(F.count(F.lit(1)).alias("c_gram"))
-        .localCheckpoint(eager=True)
-    )
-    cc = cg.groupBy("ctx").agg(F.sum("c_gram").alias("c_ctx"))
-    vocab = (
-        train_df.select(F.explode(tokens(F.col(text_col))).alias("t"))
-        .agg(F.countDistinct("t"))
-        .collect()[0][0]
-    ) or 0
-    lp = F.log(
-        (F.coalesce(F.col("c_gram"), F.lit(0)).cast("double") + F.lit(float(alpha)))
-        / (
-            F.coalesce(F.col("c_ctx"), F.lit(0)).cast("double")
-            + F.lit(float(alpha) * vocab)
-        )
-    )
-    return (
-        grams(df)
-        .join(cg, ["ctx", "w"], "left")
-        .join(cc, ["ctx"], "left")
-        .select(F.col(id_col), lp.alias("lp"))
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n_grams"), F.sum("lp").alias("_s"))
-        .withColumn("avg_logprob", F.col("_s") / F.col("n_grams"))
-        .withColumn("perplexity", F.exp(-F.col("avg_logprob")))
-        .drop("_s")
-    )
+def train_bigram_lm(
+    train_df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    alpha: float = DEFAULT_ALPHA,
+    min_count: int = 1,
+) -> _AddAlphaLM:
+    """Train the n=2 add-alpha model (``id_col`` is unused, kept for
+    call compatibility): one checkpointed count pass; see
+    ``_addalpha_model`` for ``min_count``."""
+    counts = _all_order_counts(train_df, 2, text_col).localCheckpoint(eager=True)
+    return _addalpha_model(counts, 2, alpha, min_count)
+
+
+def score_bigram_lm(
+    df: DataFrame,
+    model: _AddAlphaLM,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Score against a trained or loaded add-alpha bigram model:
+    ``(id_col, n_bigrams, avg_logprob, perplexity)``."""
+    return _bigrams(_addalpha_score(df, model, text_col, id_col))
+
+
+def bigram_lm_perplexity(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    alpha: float = DEFAULT_ALPHA,
+    train: DataFrame | None = None,
+) -> DataFrame:
+    """``ngram_lm_perplexity`` at n=2, with ``n_bigrams`` output."""
+    return _bigrams(ngram_lm_perplexity(df, 2, text_col, id_col, alpha, train))
 
 
 def perplexity_band_filter(
@@ -907,184 +352,6 @@ def perplexity_band_keep(
 # Interpolated Kneser-Ney (r11) — the CCNet-parity smoothing
 # ---------------------------------------------------------------------------
 
-class KNBigramLM(NamedTuple):
-    """Interpolated Kneser-Ney bigram model (Kneser & Ney 1995; Chen &
-    Goodman 1999 eq. 4.18). Relations are gram-type-sized:
-
-    - ``c12``: (w1, w2, c12) distinct-bigram counts,
-    - ``ctx``: (w1, c1, n1p_fw) — context totals and the number of
-      distinct continuations N1+(w1 ·) that fund the backoff mass,
-    - ``cont``: (w2, n1p_bw) — the continuation count N1+(· w2)
-      ("in how many contexts does w2 complete a bigram"), the KN
-      insight that replaces raw unigram frequency in the backoff
-      distribution (high-frequency but context-locked words like
-      "Francisco" stop leaking probability).
-
-    ``types`` is N1+(· ·) = |c12|, ``vocab`` the training vocabulary,
-    ``discount`` the absolute discount D, ``alpha_c`` the add-alpha
-    mass on the continuation distribution (KN leaves OOV undefined;
-    KenLM routes it through <unk> — here the continuation backoff is
-    add-alpha smoothed instead, which keeps P(w2|w1) summing to
-    exactly 1 over the training vocabulary for every context, seen or
-    unseen, because sum_w2 N1+(· w2) = types)."""
-
-    c12: DataFrame
-    ctx: DataFrame
-    cont: DataFrame
-    types: int
-    vocab: int
-    discount: float
-    alpha_c: float
-
-
-def train_kn_bigram_lm(
-    train_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    discount: float | None = None,
-    alpha_c: float = 1.0,
-) -> KNBigramLM:
-    """Count-train interpolated KN. One corpus pass builds the
-    distinct-bigram counts (checkpointed eagerly — gram-type-sized —
-    because ctx, cont and the scalar stats all derive from it and
-    Catalyst does not exchange-reuse shared aggregate lineage across
-    branches); one more corpus pass counts the vocabulary. When
-    ``discount`` is None it is estimated by the Ney count-of-counts
-    formula ``D = n1 / (n1 + 2 n2)`` (n_k = number of bigram types
-    occurring exactly k times) — one aggregate row over the
-    checkpointed counts, no extra corpus pass."""
-    bg = _bigram_stream(train_df, text_col, id_col)
-    c12 = (
-        bg.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c12"))
-        .localCheckpoint(eager=True)
-    )
-    ctx = c12.groupBy("w1").agg(
-        F.sum("c12").alias("c1"), F.count(F.lit(1)).alias("n1p_fw")
-    )
-    cont = c12.groupBy("w2").agg(F.count(F.lit(1)).alias("n1p_bw"))
-    stats = c12.agg(
-        F.count(F.lit(1)).alias("types"),
-        F.sum((F.col("c12") == 1).cast("long")).alias("n1"),
-        F.sum((F.col("c12") == 2).cast("long")).alias("n2"),
-    ).collect()[0]
-    types = stats["types"] or 0
-    if discount is None:
-        n1, n2 = stats["n1"] or 0, stats["n2"] or 0
-        discount = n1 / (n1 + 2 * n2) if (n1 + 2 * n2) else 0.5
-    vocab = (
-        train_df.select(F.explode(tokens(F.col(text_col))).alias("t"))
-        .agg(F.countDistinct("t"))
-        .collect()[0][0]
-    ) or 0
-    return KNBigramLM(
-        c12=c12,
-        ctx=ctx,
-        cont=cont,
-        types=types,
-        vocab=vocab,
-        discount=float(discount),
-        alpha_c=float(alpha_c),
-    )
-
-
-def score_kn_bigram_lm(
-    df: DataFrame,
-    model: KNBigramLM,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-document perplexity under interpolated KN:
-
-    ``P(w2|w1) = max(c12 - D, 0)/c1 + D·N1+(w1 ·)/c1 · Pcont(w2)``
-    for seen contexts, ``Pcont(w2)`` alone for unseen ones, with
-    ``Pcont(w2) = (N1+(· w2) + alpha_c) / (types + alpha_c · V)``.
-
-    Same output contract as ``bigram_lm_perplexity``; same plan shape
-    plus one extra gram-keyed join (the continuation relation) — all
-    whole-stage codegen, count tables not broadcast (unbounded gram
-    set), AQE handles the hot-context skew."""
-    bg = _bigram_stream(df, text_col, id_col)
-    denom_cont = F.lit(float(model.types) + model.alpha_c * model.vocab)
-    pcont = (
-        F.coalesce(F.col("n1p_bw"), F.lit(0)).cast("double")
-        + F.lit(model.alpha_c)
-    ) / denom_cont
-    d = F.lit(model.discount)
-    c1d = F.col("c1").cast("double")
-    p_seen = (
-        F.greatest(
-            F.coalesce(F.col("c12"), F.lit(0)).cast("double") - d, F.lit(0.0)
-        )
-        / c1d
-        + d * F.col("n1p_fw").cast("double") / c1d * pcont
-    )
-    lp = F.log(F.when(F.col("c1").isNotNull(), p_seen).otherwise(pcont))
-    return (
-        bg.join(model.c12, ["w1", "w2"], "left")
-        .join(model.ctx, ["w1"], "left")
-        .join(model.cont, ["w2"], "left")
-        .select(F.col(id_col), lp.alias("lp"))
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n_bigrams"), F.sum("lp").alias("_s"))
-        .withColumn("avg_logprob", F.col("_s") / F.col("n_bigrams"))
-        .withColumn("perplexity", F.exp(-F.col("avg_logprob")))
-        .drop("_s")
-    )
-
-
-def kn_bigram_lm_perplexity(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    discount: float | None = None,
-    alpha_c: float = 1.0,
-    train: DataFrame | None = None,
-) -> DataFrame:
-    """Interpolated-KN twin of ``bigram_lm_perplexity`` — the smoothing
-    CCNet's KenLM reference actually uses (modified KN; this is the
-    single-discount interpolated form). Unlike add-alpha, unseen-gram
-    mass scales with how PROMISCUOUS the context is (N1+(w1 ·)) and is
-    spent on words in proportion to their continuation counts — thin
-    contexts no longer drown in the ``alpha·V`` denominator, which is
-    exactly the add-alpha failure mode at order >= 3 the module
-    docstring concedes."""
-    model = train_kn_bigram_lm(
-        df if train is None else train, text_col, id_col, discount, alpha_c
-    )
-    return score_kn_bigram_lm(df, model, text_col, id_col)
-
-
-def _all_order_counts(train_df: DataFrame, n: int, text_col: str) -> DataFrame:
-    """LAZY (k, ctx, w, c) count relation for every order 1..n from ONE
-    corpus pass: each position emits its k-gram struct per order into a
-    unioned exploded stream, one groupBy shuffles them together (k=1
-    rows carry ctx='' and double as the unigram table). Shared by the
-    order-n KN and stupid-backoff scorers and by NgramCountStore's
-    per-batch fold — callers materialize (checkpoint or parquet) before
-    multi-consumer use."""
-    arms = ", ".join(
-        f"if(size(tk) >= {k}, transform(sequence(1, size(tk) - {k - 1}), "
-        f"i -> struct({k} AS k, "
-        + (
-            f"array_join(slice(tk, i, {k - 1}), ' ') AS ctx, "
-            if k > 1
-            else "'' AS ctx, "
-        )
-        + f"tk[i + {k - 2}] AS w)), "
-        f"cast(array() as array<struct<k int, ctx string, w string>>))"
-        for k in range(1, n + 1)
-    )
-    return (
-        train_df.select(tokens(F.col(text_col)).alias("tk"))
-        .where(F.size("tk") >= 1)
-        .select(F.explode(F.expr(f"flatten(array({arms}))")).alias("g"))
-        .select("g.k", "g.ctx", "g.w")
-        .groupBy("k", "ctx", "w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-
-
 def kn_ngram_lm_perplexity(
     df: DataFrame,
     n: int = 3,
@@ -1107,21 +374,23 @@ def kn_ngram_lm_perplexity(
     the order-(k+1) TYPE table by its last-k-token suffix (the KN
     insight applied recursively; KenLM builds the same tables). The
     unigram base is the alpha-smoothed continuation distribution
-    ``(a_1(w) + alpha_c)/(A_1 + alpha_c·V)`` — identical to
-    ``kn_bigram_lm_perplexity``'s Pcont, so n=2 reproduces the bigram
-    model exactly. D_k is Ney-estimated per order from that order's
-    count-of-counts (``n1/(n1 + 2 n2)``) unless ``discount`` pins one
-    value for all orders.
+    ``(a_1(w) + alpha_c)/(A_1 + alpha_c·V)``: high-frequency but
+    context-locked words ("Francisco") stop leaking probability, and
+    because sum_w a_1(w) = A_1 the distribution sums to exactly 1 over
+    the training vocabulary for every context, seen or unseen (KN
+    leaves OOV undefined; KenLM routes it through <unk>). D_k is
+    Ney-estimated per order from that order's count-of-counts
+    (``n1/(n1 + 2 n2)``) unless ``discount`` pins one value for all
+    orders. Unlike add-alpha, unseen-gram mass scales with how
+    PROMISCUOUS the context is, so thin contexts no longer drown in
+    the ``alpha·V`` denominator.
 
-    Scale shape: ONE corpus pass extracts every order's gram stream
-    (the unioned struct trick shared with ``stupid_backoff_perplexity``)
-    into one groupBy(k, ctx, w) count table, checkpointed
-    (gram-type-sized); every lower-order adjusted table, context
-    total, and discount derives from that checkpoint — no further
-    corpus reads. Scoring joins 2 relations per order (adjusted counts
-    + context stats), all gram-keyed codegen joins, count tables never
-    broadcast. Scoring positions are those with a full (n-1)-token
-    context (same population as ``ngram_lm_perplexity``)."""
+    Scale shape: ONE corpus pass into the checkpointed count table;
+    every lower-order adjusted table, context total and discount
+    derives from it — no further corpus reads. Scoring joins 2
+    relations per order (adjusted counts + context stats), all
+    gram-keyed codegen joins, count tables never broadcast. Output as
+    ``ngram_lm_perplexity``."""
     if n < 2:
         raise ValueError(f"n must be >= 2, got {n}")
     train_df = df if train is None else train
@@ -1133,36 +402,19 @@ def kn_ngram_lm_perplexity(
     )
 
 
-def _kn_ngram_score_from_counts(
-    df: DataFrame,
-    counts: DataFrame,
-    n: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    discount: float | None = None,
-    alpha_c: float = 1.0,
-) -> DataFrame:
-    """Order-n KN scoring against an already-materialized (k, ctx, w,
-    c) count relation (checkpoint or parquet-backed — the
-    NgramCountStore path); every adjusted table, context stat and
-    discount derives from it without another corpus read."""
-    vocab = counts.where(F.col("k") == 1).count()
-
-    # per-order relation used by the interpolation at order k:
-    #   top order n -> raw counts; k < n -> adjusted counts from the
-    #   order-(k+1) type table grouped by its last-k-token suffix
-    #   (suffix ctx = ctx minus its first token, then the old w joins on).
-    # r17 (guide §2.4/§1.2): ALL orders derive in ONE shuffle + ONE
-    # checkpoint. The per-order derivations are independent projections
-    # of the same checkpointed count table, so unioning them first and
-    # aggregating by (ko, ctx, w) — ko keys the arms apart — produces
-    # row-identical per-order tables (each arm carries a distinct ko,
-    # so no cross-order mixing) while collapsing n eager checkpoints +
-    # (n-1) driver-blocking discount collects + the a1_total collect
-    # (2n+1 serialized jobs at n=5) into adj-checkpoint + one collect.
+def _kn_adjusted(counts: DataFrame, n: int, keys: list[str]) -> DataFrame:
+    """Checkpointed (keys, ko, ctx, w, a): the relation interpolation
+    order ko reads — raw counts at ko = n, adjusted counts below (the
+    order-(ko+1) type table grouped by its suffix: ctx minus its first
+    token, then the old w joins on).
+    ALL orders derive in ONE shuffle + ONE checkpoint: the per-order
+    derivations are independent projections of the same count table,
+    so unioning them first and aggregating by (keys, ko, ctx, w) — ko
+    keys the arms apart — gives row-identical per-order tables with
+    one eager checkpoint and one discount collect instead of one per
+    order."""
     lower = None
     for k in range(1, n):
-        parent = counts.where(F.col("k") == k + 1)
         sfx = (
             F.lit("")
             if k == 1
@@ -1170,15 +422,16 @@ def _kn_ngram_score_from_counts(
             # everything after the first space
             else F.expr("substring(ctx, instr(ctx, ' ') + 1)")
         )
-        arm = parent.select(
-            F.lit(k).alias("ko"), sfx.alias("ctx"), F.col("w")
+        arm = counts.where(F.col("k") == k + 1).select(
+            *keys, F.lit(k).alias("ko"), sfx.alias("ctx"), F.col("w")
         )
         lower = arm if lower is None else lower.unionByName(arm)
-    adj = (
-        lower.groupBy("ko", "ctx", "w")
+    return (
+        lower.groupBy(*keys, "ko", "ctx", "w")
         .agg(F.count(F.lit(1)).alias("a"))
         .unionByName(
             counts.where(F.col("k") == n).select(
+                *keys,
                 F.lit(n).alias("ko"),
                 F.col("ctx"),
                 F.col("w"),
@@ -1188,22 +441,127 @@ def _kn_ngram_score_from_counts(
         .localCheckpoint(eager=True)
     )
 
-    tables: dict[int, DataFrame] = {}
-    stats: dict[int, DataFrame] = {}
-    discounts: dict[int, float] = {}
-    for k in range(1, n + 1):
-        tables[k] = adj.where(F.col("ko") == k).select("ctx", "w", "a")
-        if k == 1:
-            # the order-1 base distribution is the alpha-smoothed
-            # continuation — it never uses a discount
-            continue
-        stats[k] = tables[k].groupBy("ctx").agg(
-            F.sum("a").alias("A"), F.count(F.lit(1)).alias("n1p")
+
+def _kn_join(
+    g: DataFrame,
+    adj: DataFrame,
+    n: int,
+    keys: list[str],
+    modified: bool = False,
+) -> DataFrame:
+    """Join the scoring stream to every order's relations: adj1 (the
+    continuation count of w), then per order k the adjusted count
+    adj{k} and the context stats tot{k} (A_k) / nfw{k} (N1+(ctx ·)) —
+    names distinct under Spark's case-insensitive resolution.
+    ``modified`` adds the top order's kn1/kn2/kn3p buckets (distinct
+    continuations seen once / twice / three-plus times) that modified
+    KN's backoff mass needs."""
+    def table(k: int) -> DataFrame:
+        return adj.where(F.col("ko") == k).select(*keys, "ctx", "w", "a")
+
+    g = g.join(
+        table(1).select(*keys, F.col("w"), F.col("a").alias("adj1")),
+        [*keys, "w"],
+        "left",
+    )
+    for k in range(2, n + 1):
+        buckets = (
+            [
+                F.sum((F.col("a") == 1).cast("long")).alias("kn1"),
+                F.sum((F.col("a") == 2).cast("long")).alias("kn2"),
+                F.sum((F.col("a") >= 3).cast("long")).alias("kn3p"),
+            ]
+            if modified and k == n
+            else []
         )
+        stats = table(k).groupBy(*keys, "ctx").agg(
+            F.sum("a").alias("A"), F.count(F.lit(1)).alias("n1p"), *buckets
+        )
+        g = g.join(
+            table(k).select(
+                *keys,
+                F.col("ctx").alias(f"ctx{k}"),
+                F.col("w"),
+                F.col("a").alias(f"adj{k}"),
+            ),
+            [*keys, f"ctx{k}", "w"],
+            "left",
+        ).join(
+            stats.select(
+                *keys,
+                F.col("ctx").alias(f"ctx{k}"),
+                F.col("A").alias(f"tot{k}"),
+                F.col("n1p").alias(f"nfw{k}"),
+                *[b for b in ("kn1", "kn2", "kn3p") if buckets],
+            ),
+            [*keys, f"ctx{k}"],
+            "left",
+        )
+    return g
+
+
+def _kn_prob(
+    n: int, alpha_c: float, base_den: Column, disc: dict
+) -> Column:
+    """Bottom-up interpolation over the joined stream: the
+    alpha-smoothed continuation base ``(adj1 + alpha_c) / base_den``,
+    then per order k ``max(a - D, 0)/A + gamma/A · P_{k-1}`` for seen
+    contexts (P_{k-1} alone for unseen ones). ``disc[k]`` is order k's
+    discount Column, with backoff mass gamma = D · N1+(ctx ·); a
+    (D1, D2, D3+) triple instead makes that order modified KN (Chen &
+    Goodman §5.3, what KenLM builds): D keyed by the count value and
+    gamma = D1·kn1 + D2·kn2 + D3·kn3p, exactly the discounted mass."""
+    p = (
+        F.coalesce(F.col("adj1"), F.lit(0)).cast("double")
+        + F.lit(float(alpha_c))
+    ) / base_den
+    for k in range(2, n + 1):
+        a = F.coalesce(F.col(f"adj{k}"), F.lit(0)).cast("double")
+        tot = F.col(f"tot{k}").cast("double")
+        if isinstance(disc[k], tuple):
+            d1, d2, d3 = (F.lit(x) for x in disc[k])
+            d = (
+                F.when(a >= 3, d3)
+                .when(a == 2, d2)
+                .when(a == 1, d1)
+                .otherwise(F.lit(0.0))
+            )
+            gamma = (
+                d1 * F.col("kn1").cast("double")
+                + d2 * F.col("kn2").cast("double")
+                + d3 * F.col("kn3p").cast("double")
+            )
+        else:
+            d = disc[k]
+            gamma = d * F.col(f"nfw{k}").cast("double")
+        seen = F.greatest(a - d, F.lit(0.0)) / tot + gamma / tot * p
+        p = F.when(F.col(f"tot{k}").isNotNull(), seen).otherwise(p)
+    return p
+
+
+def _kn_ngram_score_from_counts(
+    df: DataFrame,
+    counts: DataFrame,
+    n: int,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    discount: float | tuple[float, float, float] | None = None,
+    alpha_c: float = 1.0,
+    vocab: int | None = None,
+) -> DataFrame:
+    """Order-n KN scoring against an already-materialized (k, ctx, w,
+    c) count relation (checkpoint, parquet artifact or NgramCountStore
+    fold); every adjusted table, context stat and discount derives from
+    it without another corpus read. ``discount``: None estimates Ney
+    per order, a float pins every order, a (D1, D2, D3+) triple is the
+    n=2 modified-KN model. ``vocab`` supplies V when the relation has
+    no k=1 rows (a loaded bigram artifact)."""
+    if vocab is None:
+        vocab = counts.where(F.col("k") == 1).count()
+    adj = _kn_adjusted(counts, n, [])
     # ONE collect: every order's count-of-counts (Ney discount
     # numerators) + the unigram mass A_1, off the adj checkpoint.
-    # Integer aggregates — no float-order sensitivity vs the per-order
-    # collects they replace.
+    # Integer aggregates — no float-order sensitivity.
     by_k = {
         r["ko"]: r
         for r in adj.groupBy("ko")
@@ -1214,112 +572,30 @@ def _kn_ngram_score_from_counts(
         )
         .collect()
     }
+    disc: dict = {}
     for k in range(2, n + 1):
-        if discount is None:
+        if isinstance(discount, tuple):
+            disc[k] = discount
+        elif discount is None:
             r = by_k.get(k)
-            n1 = (r["n1"] if r else 0) or 0
-            n2 = (r["n2"] if r else 0) or 0
-            discounts[k] = n1 / (n1 + 2 * n2) if (n1 + 2 * n2) else 0.5
+            disc[k] = F.lit(
+                _ney((r["n1"] if r else 0) or 0, (r["n2"] if r else 0) or 0)
+            )
         else:
-            discounts[k] = float(discount)
+            disc[k] = F.lit(float(discount))
     # A_1 = sum_w a_1(w) = number of bigram types (scalar)
     a1_total = (by_k[1]["atot"] if 1 in by_k else 0) or 0
-
-    # scoring stream: full-context positions with every suffix context
-    sfx_cols = ", ".join(
-        f"array_join(slice(tk, i + {n - k}, {k - 1}), ' ') AS ctx{k}"
-        for k in range(2, n + 1)
+    g = _kn_join(
+        _score_stream(df, n, text_col, id_col),
+        adj,
+        n,
+        [],
+        modified=isinstance(discount, tuple),
     )
-    score_expr = (
-        f"transform(sequence(1, size(tk) - {n - 1}), "
-        f"i -> struct({sfx_cols}, tk[i + {n - 2}] AS w))"
+    p = _kn_prob(
+        n, alpha_c, F.lit(float(a1_total) + float(alpha_c) * vocab), disc
     )
-    g = (
-        df.select(F.col(id_col), tokens(F.col(text_col)).alias("tk"))
-        .where(F.size("tk") >= n)
-        .select(F.col(id_col), F.explode(F.expr(score_expr)).alias("g"))
-        .select(id_col, "g.*")
-    )
-    # column names are distinct under Spark's default case-insensitive
-    # resolution: adj{k} (adjusted count), tot{k} (context total),
-    # nfw{k} (distinct continuations of the context)
-    g = g.join(
-        tables[1].select(F.col("w"), F.col("a").alias("adj1")), ["w"], "left"
-    )
-    for k in range(2, n + 1):
-        g = g.join(
-            tables[k].select(
-                F.col("ctx").alias(f"ctx{k}"),
-                F.col("w"),
-                F.col("a").alias(f"adj{k}"),
-            ),
-            [f"ctx{k}", "w"],
-            "left",
-        ).join(
-            stats[k].select(
-                F.col("ctx").alias(f"ctx{k}"),
-                F.col("A").alias(f"tot{k}"),
-                F.col("n1p").alias(f"nfw{k}"),
-            ),
-            [f"ctx{k}"],
-            "left",
-        )
-    # bottom-up interpolation, mirroring the bigram expression shapes
-    p = (
-        F.coalesce(F.col("adj1"), F.lit(0)).cast("double")
-        + F.lit(float(alpha_c))
-    ) / F.lit(float(a1_total) + float(alpha_c) * vocab)
-    for k in range(2, n + 1):
-        d = F.lit(discounts[k])
-        ak_d = F.col(f"tot{k}").cast("double")
-        seen = (
-            F.greatest(
-                F.coalesce(F.col(f"adj{k}"), F.lit(0)).cast("double") - d,
-                F.lit(0.0),
-            )
-            / ak_d
-            + d * F.col(f"nfw{k}").cast("double") / ak_d * p
-        )
-        p = F.when(F.col(f"tot{k}").isNotNull(), seen).otherwise(p)
-    return (
-        g.select(F.col(id_col), F.log(p).alias("lp"))
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n_grams"), F.sum("lp").alias("_s"))
-        .withColumn("avg_logprob", F.col("_s") / F.col("n_grams"))
-        .withColumn("perplexity", F.exp(-F.col("avg_logprob")))
-        .drop("_s")
-    )
-
-
-def _all_order_counts_by_group(
-    train_df: DataFrame, n: int, text_col: str, group_col: str
-) -> DataFrame:
-    """Group-keyed twin of ``_all_order_counts``: ONE corpus pass into
-    a (``_g``, k, ctx, w, c) relation — the per-language training
-    tables of CCNet's per-language LMs come from a single shuffle,
-    not a per-language loop."""
-    arms = ", ".join(
-        f"if(size(tk) >= {k}, transform(sequence(1, size(tk) - {k - 1}), "
-        f"i -> struct({k} AS k, "
-        + (
-            f"array_join(slice(tk, i, {k - 1}), ' ') AS ctx, "
-            if k > 1
-            else "'' AS ctx, "
-        )
-        + f"tk[i + {k - 2}] AS w)), "
-        f"cast(array() as array<struct<k int, ctx string, w string>>))"
-        for k in range(1, n + 1)
-    )
-    return (
-        train_df.select(
-            F.col(group_col).alias("_g"), tokens(F.col(text_col)).alias("tk")
-        )
-        .where(F.size("tk") >= 1)
-        .select("_g", F.explode(F.expr(f"flatten(array({arms}))")).alias("g"))
-        .select("_g", "g.k", "g.ctx", "g.w")
-        .groupBy("_g", "k", "ctx", "w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    return _per_doc(g.select(F.col(id_col), F.log(p).alias("lp")), [id_col])
 
 
 def kn_ngram_lm_perplexity_by_group(
@@ -1339,8 +615,10 @@ def kn_ngram_lm_perplexity_by_group(
     every statistic the ungrouped scorer collects (vocabulary size,
     unigram mass, per-order Ney discount) becomes a |G|-row relation
     derived by groupBy(_g) aggregates and joined back (AQE broadcasts
-    them by size). At n=2 this reproduces ``kn_bigram_lm_perplexity``
-    run per group slice exactly (pinned by test).
+    them by size); the adjusted tables and the join loop are the
+    ungrouped scorer's, keyed by ``_g``. At n=2 this reproduces
+    ``kn_bigram_lm_perplexity`` run per group slice exactly (pinned
+    by test).
 
     Groups with NO training data (not one token) produce no LM and
     their documents are ABSENT from the output (inner join on the
@@ -1356,71 +634,10 @@ def kn_ngram_lm_perplexity_by_group(
     if n < 2:
         raise ValueError(f"n must be >= 2, got {n}")
     train_df = df if train is None else train
-    counts = _all_order_counts_by_group(
+    counts = _all_order_counts(
         train_df, n, text_col, group_col
     ).localCheckpoint(eager=True)
-
-    # r17 (guide §2.4, the ungrouped scorer's fusion made group-keyed):
-    # all per-order adjusted tables from ONE shuffle + ONE checkpoint —
-    # the unioned arms carry a distinct ko each, so the (_g, ko, ctx, w)
-    # aggregate reproduces every per-order groupBy row-identically.
-    lower = None
-    for k in range(1, n):
-        parent = counts.where(F.col("k") == k + 1)
-        sfx = (
-            F.lit("")
-            if k == 1
-            else F.expr("substring(ctx, instr(ctx, ' ') + 1)")
-        )
-        arm = parent.select(
-            "_g", F.lit(k).alias("ko"), sfx.alias("ctx"), F.col("w")
-        )
-        lower = arm if lower is None else lower.unionByName(arm)
-    adj = (
-        lower.groupBy("_g", "ko", "ctx", "w")
-        .agg(F.count(F.lit(1)).alias("a"))
-        .unionByName(
-            counts.where(F.col("k") == n).select(
-                "_g",
-                F.lit(n).alias("ko"),
-                F.col("ctx"),
-                F.col("w"),
-                F.col("c").alias("a"),
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    tables: dict[int, DataFrame] = {}
-    stats: dict[int, DataFrame] = {}
-    discs: dict[int, DataFrame] = {}
-    for k in range(1, n + 1):
-        tk_tab = adj.where(F.col("ko") == k).select("_g", "ctx", "w", "a")
-        tables[k] = tk_tab
-        if k == 1:
-            continue
-        stats[k] = tk_tab.groupBy("_g", "ctx").agg(
-            F.sum("a").alias("A"), F.count(F.lit(1)).alias("n1p")
-        )
-        # Ney discount PER GROUP as a relation (the ungrouped path's
-        # collected scalar, made group-keyed)
-        discs[k] = (
-            tk_tab.groupBy("_g")
-            .agg(
-                F.sum((F.col("a") == 1).cast("long")).alias("n1"),
-                F.sum((F.col("a") == 2).cast("long")).alias("n2"),
-            )
-            .select(
-                "_g",
-                F.when(
-                    F.col("n1") + 2 * F.col("n2") > 0,
-                    F.col("n1").cast("double")
-                    / (F.col("n1") + 2 * F.col("n2")).cast("double"),
-                )
-                .otherwise(F.lit(0.5))
-                .alias(f"d{k}"),
-            )
-        )
+    adj = _kn_adjusted(counts, n, ["_g"])
     # vocab anchors group existence (any train TOKEN creates it);
     # a1_total/continuation mass comes from the top-order table and
     # can be absent for a group whose train docs are all shorter than
@@ -1432,7 +649,9 @@ def kn_ngram_lm_perplexity_by_group(
         .groupBy("_g")
         .agg(F.count(F.lit(1)).alias("vocab"))
         .join(
-            tables[1].groupBy("_g").agg(F.sum("a").alias("a1_total")),
+            adj.where(F.col("ko") == 1)
+            .groupBy("_g")
+            .agg(F.sum("a").alias("a1_total")),
             ["_g"],
             "left",
         )
@@ -1442,105 +661,64 @@ def kn_ngram_lm_perplexity_by_group(
             "vocab",
         )
     )
-
-    sfx_cols = ", ".join(
-        f"array_join(slice(tk, i + {n - 1 - (k - 1)}, {k - 1}), ' ') AS ctx{k}"
-        for k in range(2, n + 1)
-    )
-    score_expr = (
-        f"transform(sequence(1, size(tk) - {n - 1}), "
-        f"i -> struct({sfx_cols}, tk[i + {n - 2}] AS w))"
-    )
-    g = (
-        df.select(
-            F.col(id_col),
-            F.col(group_col).alias("_g"),
-            tokens(F.col(text_col)).alias("tk"),
-        )
-        .where(F.size("tk") >= n)
-        .select(F.col(id_col), "_g", F.explode(F.expr(score_expr)).alias("g"))
-        .select(id_col, "_g", "g.*")
-    )
-    g = g.join(base, ["_g"])  # inner: groups with NO train data drop
+    g = _score_stream(df, n, text_col, id_col, group_col).join(
+        base, ["_g"]
+    )  # inner: groups with NO train data drop
     for k in range(2, n + 1):
-        # left + 0.5 fallback: a group with tokens but no order-k gram
-        # has no estimable discount — same default the ungrouped
-        # scorer's collected-scalar path uses
-        g = g.join(discs[k], ["_g"], "left").withColumn(
+        # Ney discount PER GROUP as a relation (the ungrouped path's
+        # collected scalar, made group-keyed); left + 0.5 fallback: a
+        # group with tokens but no order-k gram has no estimable
+        # discount — same default the ungrouped scorer uses
+        n12 = (
+            adj.where(F.col("ko") == k)
+            .groupBy("_g")
+            .agg(
+                F.sum((F.col("a") == 1).cast("long")).alias("n1"),
+                F.sum((F.col("a") == 2).cast("long")).alias("n2"),
+            )
+        )
+        ney = n12.select(
+            "_g",
+            F.when(
+                F.col("n1") + 2 * F.col("n2") > 0,
+                F.col("n1").cast("double")
+                / (F.col("n1") + 2 * F.col("n2")).cast("double"),
+            )
+            .otherwise(F.lit(0.5))
+            .alias(f"d{k}"),
+        )
+        g = g.join(ney, ["_g"], "left").withColumn(
             f"d{k}", F.coalesce(F.col(f"d{k}"), F.lit(0.5))
         )
-    g = g.join(
-        tables[1].select("_g", F.col("w"), F.col("a").alias("adj1")),
-        ["_g", "w"],
-        "left",
-    )
-    for k in range(2, n + 1):
-        g = g.join(
-            tables[k].select(
-                "_g",
-                F.col("ctx").alias(f"ctx{k}"),
-                F.col("w"),
-                F.col("a").alias(f"adj{k}"),
-            ),
-            ["_g", f"ctx{k}", "w"],
-            "left",
-        ).join(
-            stats[k].select(
-                "_g",
-                F.col("ctx").alias(f"ctx{k}"),
-                F.col("A").alias(f"tot{k}"),
-                F.col("n1p").alias(f"nfw{k}"),
-            ),
-            ["_g", f"ctx{k}"],
-            "left",
-        )
-    p = (
-        F.coalesce(F.col("adj1"), F.lit(0)).cast("double")
-        + F.lit(float(alpha_c))
-    ) / (
+    g = _kn_join(g, adj, n, ["_g"])
+    p = _kn_prob(
+        n,
+        alpha_c,
         F.col("a1_total").cast("double")
-        + F.lit(float(alpha_c)) * F.col("vocab").cast("double")
+        + F.lit(float(alpha_c)) * F.col("vocab").cast("double"),
+        {k: F.col(f"d{k}") for k in range(2, n + 1)},
     )
-    for k in range(2, n + 1):
-        d = F.col(f"d{k}")
-        ak_d = F.col(f"tot{k}").cast("double")
-        seen = (
-            F.greatest(
-                F.coalesce(F.col(f"adj{k}"), F.lit(0)).cast("double") - d,
-                F.lit(0.0),
-            )
-            / ak_d
-            + d * F.col(f"nfw{k}").cast("double") / ak_d * p
-        )
-        p = F.when(F.col(f"tot{k}").isNotNull(), seen).otherwise(p)
-    return (
-        g.select(F.col(id_col), F.col("_g"), F.log(p).alias("lp"))
-        .groupBy(id_col, "_g")
-        .agg(F.count(F.lit(1)).alias("n_grams"), F.sum("lp").alias("_s"))
-        .withColumn("avg_logprob", F.col("_s") / F.col("n_grams"))
-        .withColumn("perplexity", F.exp(-F.col("avg_logprob")))
-        .drop("_s")
-        .withColumnRenamed("_g", group_col)
-    )
+    return _per_doc(
+        g.select(F.col(id_col), F.col("_g"), F.log(p).alias("lp")),
+        [id_col, "_g"],
+    ).withColumnRenamed("_g", group_col)
 
 
-class MKNBigramLM(NamedTuple):
-    """Modified Kneser-Ney bigram model (Chen & Goodman 1999 §5.3 —
-    the variant KenLM implements): three absolute discounts D1/D2/D3+
-    applied by count value, with the backoff mass per context funded
-    by exactly the discounted amount (``gamma(w1) = D1·N1(w1) +
-    D2·N2(w1) + D3·N3+(w1)``), so normalization stays exact. ``ctx``
-    carries (w1, c1, kn1, kn2, kn3p) — the per-context counts of
-    continuations seen exactly once / twice / three-plus times."""
+# ---------------------------------------------------------------------------
+# The bigram KN / modified-KN models: n=2 views with persisted scalars
+# ---------------------------------------------------------------------------
 
-    c12: DataFrame
-    ctx: DataFrame
-    cont: DataFrame
+class _KNBigramLM(NamedTuple):
+    """Kneser-Ney bigram model: the order-1/2 (k, ctx, w, c) count
+    relation plus the scalars an artifact persists — ``types`` =
+    N1+(· ·) (distinct bigrams), V, the continuation mass ``alpha_c``
+    and ``discount``: one float for interpolated KN, the (D1, D2, D3+)
+    triple for modified KN."""
+
+    counts: DataFrame
     types: int
     vocab: int
-    d1: float
-    d2: float
-    d3: float
+    discount: float | tuple[float, float, float]
     alpha_c: float
 
 
@@ -1549,7 +727,7 @@ def _mkn_discounts(n1: int, n2: int, n3: int, n4: int) -> tuple[float, float, fl
     n_{k+1}/n_k`` with ``Y = n1/(n1+2·n2)``, clamped into [0, k];
     degenerate corpora (a zero n_k) fall back to ``k·Y`` clamped —
     every branch is plain scalar arithmetic the SQL oracle replays."""
-    y = n1 / (n1 + 2 * n2) if (n1 + 2 * n2) > 0 else 0.5
+    y = _ney(n1, n2)
     out = []
     ns = {1: n1, 2: n2, 3: n3, 4: n4}
     for k in (1, 2, 3):
@@ -1561,100 +739,88 @@ def _mkn_discounts(n1: int, n2: int, n3: int, n4: int) -> tuple[float, float, fl
     return out[0], out[1], out[2]
 
 
+def _kn_bigram_model(
+    counts: DataFrame,
+    discount: float | None = None,
+    alpha_c: float = 1.0,
+    modified: bool = False,
+) -> _KNBigramLM:
+    """KN (or, ``modified``, MKN) bigram model over a materialized
+    order-1/2 count relation: V, the bigram type count and the
+    count-of-counts n1..n4 in ONE aggregate. The discount is
+    Ney-estimated unless pinned; MKN's three are always estimated."""
+    bg = F.col("k") == 2
+    s = counts.agg(
+        F.sum((F.col("k") == 1).cast("long")).alias("vocab"),
+        F.sum(bg.cast("long")).alias("types"),
+        *[
+            F.sum((bg & (F.col("c") == j)).cast("long")).alias(f"n{j}")
+            for j in (1, 2, 3, 4)
+        ],
+    ).collect()[0]
+    n1, n2, n3, n4 = ((s[f"n{j}"] or 0) for j in (1, 2, 3, 4))
+    if modified:
+        discount = _mkn_discounts(n1, n2, n3, n4)
+    else:
+        discount = float(_ney(n1, n2) if discount is None else discount)
+    return _KNBigramLM(
+        counts, s["types"] or 0, s["vocab"] or 0, discount, float(alpha_c)
+    )
+
+
+def train_kn_bigram_lm(
+    train_df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    discount: float | None = None,
+    alpha_c: float = 1.0,
+) -> _KNBigramLM:
+    """Train interpolated KN at n=2 (``id_col`` unused, kept for call
+    compatibility): one checkpointed count pass, one scalar aggregate."""
+    counts = _all_order_counts(train_df, 2, text_col).localCheckpoint(eager=True)
+    return _kn_bigram_model(counts, discount, alpha_c)
+
+
 def train_mkn_bigram_lm(
     train_df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     alpha_c: float = 1.0,
-) -> MKNBigramLM:
-    """Count-train modified KN: same single corpus pass as
-    ``train_kn_bigram_lm`` (checkpointed bigram type counts), one more
-    aggregate over the checkpoint for the count-of-counts n1..n4, and
-    per-context continuation-count buckets instead of one N1+."""
-    bg = _bigram_stream(train_df, text_col, id_col)
-    c12 = (
-        bg.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c12"))
-        .localCheckpoint(eager=True)
-    )
-    ctx = c12.groupBy("w1").agg(
-        F.sum("c12").alias("c1"),
-        F.sum((F.col("c12") == 1).cast("long")).alias("kn1"),
-        F.sum((F.col("c12") == 2).cast("long")).alias("kn2"),
-        F.sum((F.col("c12") >= 3).cast("long")).alias("kn3p"),
-    )
-    cont = c12.groupBy("w2").agg(F.count(F.lit(1)).alias("n1p_bw"))
-    stats = c12.agg(
-        F.count(F.lit(1)).alias("types"),
-        *[
-            F.sum((F.col("c12") == k).cast("long")).alias(f"n{k}")
-            for k in (1, 2, 3, 4)
-        ],
-    ).collect()[0]
-    d1, d2, d3 = _mkn_discounts(
-        stats["n1"] or 0, stats["n2"] or 0, stats["n3"] or 0, stats["n4"] or 0
-    )
-    vocab = (
-        train_df.select(F.explode(tokens(F.col(text_col))).alias("t"))
-        .agg(F.countDistinct("t"))
-        .collect()[0][0]
-    ) or 0
-    return MKNBigramLM(
-        c12=c12,
-        ctx=ctx,
-        cont=cont,
-        types=stats["types"] or 0,
-        vocab=vocab,
-        d1=d1,
-        d2=d2,
-        d3=d3,
-        alpha_c=float(alpha_c),
-    )
+) -> _KNBigramLM:
+    """Train modified KN at n=2: the same single count pass as
+    ``train_kn_bigram_lm``, three count-of-counts discounts."""
+    counts = _all_order_counts(train_df, 2, text_col).localCheckpoint(eager=True)
+    return _kn_bigram_model(counts, alpha_c=alpha_c, modified=True)
 
 
-def score_mkn_bigram_lm(
+def score_kn_bigram_lm(
     df: DataFrame,
-    model: MKNBigramLM,
+    model: _KNBigramLM,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """``P(w2|w1) = (c12 − D(c12))⁺/c1 + gamma(w1)/c1 · Pcont(w2)``
-    with D keyed by the count value and gamma the exact discounted
-    mass — sums to 1 over the vocabulary for every context (the
-    clamps keep every (c − D) non-negative, so no mass is truncated).
-    Unseen contexts score Pcont alone; same plan shape as plain KN."""
-    bg = _bigram_stream(df, text_col, id_col)
-    denom_cont = F.lit(float(model.types) + model.alpha_c * model.vocab)
-    pcont = (
-        F.coalesce(F.col("n1p_bw"), F.lit(0)).cast("double")
-        + F.lit(model.alpha_c)
-    ) / denom_cont
-    d1, d2, d3 = F.lit(model.d1), F.lit(model.d2), F.lit(model.d3)
-    c12d = F.coalesce(F.col("c12"), F.lit(0)).cast("double")
-    disc = (
-        F.when(c12d >= 3, d3)
-        .when(c12d == 2, d2)
-        .when(c12d == 1, d1)
-        .otherwise(F.lit(0.0))
+    """Score against a KN or MKN bigram model (trained, loaded, or
+    ``BigramCountStore.kn_model()``): the order-n KN scorer at n=2 with
+    the model's discount(s) and V; ``n_bigrams`` output."""
+    return _bigrams(
+        _kn_ngram_score_from_counts(
+            df, model.counts, 2, text_col, id_col,
+            model.discount, model.alpha_c, model.vocab,
+        )
     )
-    c1d = F.col("c1").cast("double")
-    gamma = (
-        d1 * F.col("kn1").cast("double")
-        + d2 * F.col("kn2").cast("double")
-        + d3 * F.col("kn3p").cast("double")
-    )
-    p_seen = (c12d - disc) / c1d + gamma / c1d * pcont
-    lp = F.log(F.when(F.col("c1").isNotNull(), p_seen).otherwise(pcont))
-    return (
-        bg.join(model.c12, ["w1", "w2"], "left")
-        .join(model.ctx, ["w1"], "left")
-        .join(model.cont, ["w2"], "left")
-        .select(F.col(id_col), lp.alias("lp"))
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n_bigrams"), F.sum("lp").alias("_s"))
-        .withColumn("avg_logprob", F.col("_s") / F.col("n_bigrams"))
-        .withColumn("perplexity", F.exp(-F.col("avg_logprob")))
-        .drop("_s")
+
+
+def kn_bigram_lm_perplexity(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    discount: float | None = None,
+    alpha_c: float = 1.0,
+    train: DataFrame | None = None,
+) -> DataFrame:
+    """``kn_ngram_lm_perplexity`` at n=2, with ``n_bigrams`` output."""
+    return _bigrams(
+        kn_ngram_lm_perplexity(df, 2, text_col, id_col, discount, alpha_c, train)
     )
 
 
@@ -1665,15 +831,398 @@ def mkn_bigram_lm_perplexity(
     alpha_c: float = 1.0,
     train: DataFrame | None = None,
 ) -> DataFrame:
-    """Modified-KN twin of ``kn_bigram_lm_perplexity`` — the exact
-    smoothing KenLM builds by default, closing the last smoothing gap
-    to CCNet's reference filter: singleton, doubleton and 3+ grams get
-    separately-estimated discounts, which matters on Zipfian gram
-    tables where one D over-discounts the reliable high-count grams."""
+    """Modified-KN bigram perplexity — the smoothing KenLM builds by
+    default: singleton, doubleton and 3+ grams get separately-estimated
+    discounts, which matters on Zipfian gram tables where one D
+    over-discounts the reliable high-count grams."""
     model = train_mkn_bigram_lm(
         df if train is None else train, text_col, id_col, alpha_c
     )
-    return score_mkn_bigram_lm(df, model, text_col, id_col)
+    return score_kn_bigram_lm(df, model, text_col, id_col)
+
+
+# ---------------------------------------------------------------------------
+# Artifacts: the parquet format every save_* writes and load_any_lm reads
+# ---------------------------------------------------------------------------
+
+def _save_artifact(
+    path: str, tables: dict[str, DataFrame], meta: tuple, schema: str
+) -> None:
+    for name, rel in tables.items():
+        rel.write.mode("overwrite").parquet(os.path.join(path, name))
+    spark = tables["c12"].sparkSession
+    (
+        spark.createDataFrame([meta], schema)
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(os.path.join(path, "meta"))
+    )
+
+
+def save_bigram_lm(model: _AddAlphaLM, path: str) -> None:
+    """Persist an add-alpha bigram model: ``<path>/c12`` (w1, w2, c12)
+    and ``<path>/c1`` (w1, c1) hold the count relations (c1 separately
+    because ``min_count`` pruning leaves c12 unable to rebuild it),
+    ``<path>/meta`` one (vocab, alpha) row — the shape a streaming
+    monitor or a later scoring job re-reads without retraining."""
+    _save_artifact(
+        path,
+        {
+            "c12": model.grams.select(
+                F.col("ctx").alias("w1"),
+                F.col("w").alias("w2"),
+                F.col("c").alias("c12"),
+            ),
+            "c1": model.ctx.select(
+                F.col("ctx").alias("w1"), F.col("c_ctx").alias("c1")
+            ),
+        },
+        (model.vocab, model.alpha),
+        "vocab long, alpha double",
+    )
+
+
+def save_kn_bigram_lm(model: _KNBigramLM, path: str) -> None:
+    """Persist a KN or MKN bigram model: only ``c12`` and the scalar
+    meta row (``kind`` 'kn' or 'mkn') travel — every KN statistic is a
+    derivation of c12, rebuilt on load, so the artifact can never
+    desync from its statistics."""
+    c12 = model.counts.where(F.col("k") == 2).select(
+        F.col("ctx").alias("w1"), F.col("w").alias("w2"), F.col("c").alias("c12")
+    )
+    if isinstance(model.discount, tuple):
+        _save_artifact(
+            path,
+            {"c12": c12},
+            ("mkn", model.types, model.vocab, *model.discount, model.alpha_c),
+            "kind string, types long, vocab long, d1 double, d2 double,"
+            " d3 double, alpha_c double",
+        )
+    else:
+        _save_artifact(
+            path,
+            {"c12": c12},
+            ("kn", model.types, model.vocab, model.discount, model.alpha_c),
+            "kind string, types long, vocab long, discount double,"
+            " alpha_c double",
+        )
+
+
+#: The artifact writer is shared; the model carries its kind.
+save_mkn_bigram_lm = save_kn_bigram_lm
+
+
+def load_any_lm(spark: SparkSession, path: str):
+    """Artifact loader: read the meta row's ``kind`` (absent on
+    add-alpha artifacts) and return ``(model, score_fn)`` where
+    ``score_fn(df, model, text_col, id_col)`` is the matching scorer —
+    the seam the streaming monitor and the lm-score CLI share so a
+    frozen artifact of ANY smoothing drops in."""
+    meta = spark.read.parquet(os.path.join(path, "meta")).collect()[0]
+    kind = meta["kind"] if "kind" in meta.__fields__ else "addalpha"
+    if kind not in ("addalpha", "kn", "mkn"):
+        raise ValueError(f"artifact at {path} has unknown kind={kind!r}")
+    grams = spark.read.parquet(os.path.join(path, "c12")).select(
+        F.col("w1").alias("ctx"), F.col("w2").alias("w"), F.col("c12").alias("c")
+    )
+    if kind == "addalpha":
+        ctx = spark.read.parquet(os.path.join(path, "c1")).select(
+            F.col("w1").alias("ctx"), F.col("c1").alias("c_ctx")
+        )
+        return (
+            _AddAlphaLM(2, grams, ctx, meta["vocab"], meta["alpha"]),
+            score_bigram_lm,
+        )
+    discount = (
+        meta["discount"]
+        if kind == "kn"
+        else (meta["d1"], meta["d2"], meta["d3"])
+    )
+    model = _KNBigramLM(
+        grams.select(F.lit(2).alias("k"), "ctx", "w", "c"),
+        meta["types"],
+        meta["vocab"],
+        discount,
+        meta["alpha_c"],
+    )
+    return model, score_kn_bigram_lm
+
+
+# ---------------------------------------------------------------------------
+# Incremental count stores
+# ---------------------------------------------------------------------------
+
+class NgramCountStore:
+    """Incrementally-updatable (k, ctx, w, c) counts on disk for every
+    order 1..n — the artifact that keeps a deployed LM fresh from a
+    stream without ever retraining on the full corpus.
+
+    Layout: ``<path>/grams/epoch=<scope>/k=<k>/`` holds one epoch's
+    batch-local counts (partitioned by k so single-order readers
+    prune). The k=1 rows are the unigram counts, so the vocabulary
+    stays exact across epochs, including tokens of one-token
+    documents. Counts are associative sums, and every statistic the
+    scorers derive (adjusted continuation tables, context totals,
+    count-of-counts discounts, vocabulary) is a function of the FOLDED
+    counts alone — so merge-on-read (one groupBy over the live epoch
+    dirs) equals the one-shot model; the same fold-on-read argument as
+    the observation store's delta path (``plans/layout.py``).
+
+    Consistency: each epoch write is O(batch) and lands with
+    mode=overwrite under its stream-scoped epoch dir, so a
+    foreachBatch replay rewrites the same state (idempotent — no
+    DECISION depends on history here, only counts). The manifest's
+    ``live`` list is the readers' truth: a dir written but not yet
+    listed (torn batch) is invisible until the replay re-lands it, and
+    ``compact()`` flips the list to the folded generation ATOMICALLY
+    (tmp + os.replace) before deleting folded dirs.
+
+    Replay vs compaction: an epoch folded into a base generation by
+    ``compact()`` leaves the live list, so "is my scope already
+    listed?" alone cannot gate a replay that races a compaction. The
+    manifest therefore also keeps a per-stream ``applied`` high-water
+    mark that SURVIVES compaction (the same persistent epoch gate as
+    ``plans/layout.py``'s ``last_epochs``): a replayed epoch at or
+    below the mark whose dir is no longer live was folded — skipped,
+    not re-appended.
+
+    Single-writer contract, DETECTED: manifest updates are
+    read-modify-write, serialized by foreachBatch within one query;
+    two QUERIES writing the same store concurrently would lose an
+    update. Every commit carries the commit-seq CAS
+    (``genstore.flip_manifest``): the losing writer's commit raises
+    ``ConcurrentWriterError`` instead of silently dropping the
+    winner's epoch — give each stream its own store (or serialize
+    externally), same contract as the other persisted stores."""
+
+    def __init__(self, spark: SparkSession, path: str, n: int = 3):
+        if n < 2:
+            raise ValueError(f"n must be >= 2, got {n}")
+        self.spark = spark
+        self.path = path
+        self._man_path = os.path.join(path, "manifest.json")
+        man = self._manifest()
+        if (os.path.exists(self._man_path) and "n" not in man) or os.path.isdir(
+            os.path.join(path, "uni")
+        ):
+            # every manifest this class writes records n; one without
+            # it (and a uni/ dir) is the retired bigram-only layout,
+            # whose (w1, w2, c12) epochs would be misread as k-grams
+            raise ValueError(
+                f"store at {path} uses the old bigram-store layout "
+                "(manifest without n, uni/ unigram dirs); it cannot be "
+                "read as (k, ctx, w, c) counts — rebuild it from the "
+                "source stream into a fresh directory"
+            )
+        if man.get("n") is not None and man["n"] != n:
+            raise ValueError(
+                f"store at {path} was built with n={man['n']}, got {n}"
+            )
+        self.n = n
+
+    # -- manifest ----------------------------------------------------
+    def _manifest(self) -> dict:
+        if not os.path.exists(self._man_path):
+            return {"format": 1, "live": [], "applied": {}}
+        with open(self._man_path) as f:
+            man = json.load(f)
+        man.setdefault("applied", {})
+        return man
+
+    def _live(self) -> list[str]:
+        return self._manifest()["live"]
+
+    def _write_manifest(self, man: dict, expected_seq: int | None = None) -> None:
+        from balboa_spark.plans.genstore import flip_manifest
+
+        flip_manifest(self.path, man, "manifest.json", expected_seq=expected_seq)
+
+    # -- writes ------------------------------------------------------
+    def process_batch(
+        self,
+        batch: DataFrame,
+        epoch_id: int,
+        stream_id: str = "default",
+        text_col: str = "text",
+        id_col: str = "doc_id",
+        max_live_epochs: int | None = None,
+    ) -> None:
+        """Fold ONE batch's counts and land them under the
+        stream-scoped epoch. O(batch): the store is never read. Empty
+        batches record nothing (a schema-less parquet dir as the
+        store's FIRST epoch would break schema inference on read).
+
+        ``max_live_epochs`` arms size-triggered auto-compaction (the
+        RocksDB L0 file-count trigger, not just a caller-scheduled
+        cadence): when the committed live list exceeds it, ``compact()``
+        runs inline — same atomic flip — so a misconfigured cadence can
+        no longer let merge-on-read cost grow unboundedly."""
+        if not re.fullmatch(r"[A-Za-z0-9_.]+", stream_id) or stream_id == "base":
+            # "base" is reserved for compaction generations; path-ish
+            # characters would silently split the epoch directory name
+            raise ValueError(f"invalid stream_id {stream_id!r}")
+        man = self._manifest()
+        expected_seq = man.get("commit_seq", 0)
+        scope = f"{stream_id}-{epoch_id}"
+        if (
+            epoch_id <= man["applied"].get(stream_id, -1)
+            and scope not in man["live"]
+        ):
+            # replayed epoch whose dir was folded into a base
+            # generation by compact(): re-appending would double-count
+            return
+        if batch.isEmpty():
+            return
+        (
+            _all_order_counts(batch, self.n, text_col)
+            .repartition("k")
+            .write.mode("overwrite")
+            .partitionBy("k")
+            .parquet(os.path.join(self.path, "grams", f"epoch={scope}"))
+        )
+        if scope not in man["live"]:
+            man["live"] = man["live"] + [scope]
+        man["applied"][stream_id] = max(
+            epoch_id, man["applied"].get(stream_id, -1)
+        )
+        man["n"] = self.n
+        # CAS against the INITIAL read (the decision point): another
+        # writer landing in this batch's write window raises loudly
+        # instead of having its live-list entry silently dropped
+        self._write_manifest(man, expected_seq=expected_seq)
+        if max_live_epochs is not None and len(man["live"]) > max_live_epochs:
+            self.compact()
+
+    # -- reads -------------------------------------------------------
+    def _read_live(self) -> DataFrame | None:
+        live = self._live()
+        if not live:
+            return None
+        df = self.spark.read.parquet(os.path.join(self.path, "grams"))
+        # epoch is a partition column: orphan dirs (torn writes,
+        # compacted-away epochs) prune out at the scan. One JVM-parsed
+        # SQL string, NOT isin(*live): between compactions the live
+        # list grows per micro-batch, and isin marshals every literal
+        # as its own Py4J call (the psl.py lesson). Scopes are
+        # charset-validated at write time, so quoting is safe.
+        in_list = ", ".join("'" + s.replace("'", "''") + "'" for s in live)
+        return df.where(F.expr(f"epoch IN ({in_list})"))
+
+    def counts(self) -> DataFrame | None:
+        """Current (k, ctx, w, c) — the merge-on-read fold."""
+        g = self._read_live()
+        if g is None:
+            return None
+        return g.groupBy("k", "ctx", "w").agg(F.sum("c").alias("c"))
+
+    def _folded(self) -> DataFrame:
+        """The fold, materialized once for the scorers' several reads."""
+        counts = self.counts()
+        if counts is None:
+            raise ValueError(f"empty store at {self.path}")
+        return counts.localCheckpoint(eager=True)
+
+    def kn_perplexity(
+        self,
+        df: DataFrame,
+        text_col: str = "text",
+        id_col: str = "doc_id",
+        discount: float | None = None,
+        alpha_c: float = 1.0,
+    ) -> DataFrame:
+        """Score against the CURRENT folded order-n KN model — equal
+        to one-shot ``kn_ngram_lm_perplexity`` over the full history."""
+        return _kn_ngram_score_from_counts(
+            df, self._folded(), self.n, text_col, id_col, discount, alpha_c
+        )
+
+    def sbo_perplexity(
+        self,
+        df: DataFrame,
+        text_col: str = "text",
+        id_col: str = "doc_id",
+        backoff: float = 0.4,
+        alpha: float = 1.0,
+    ) -> DataFrame:
+        return _sbo_score_from_counts(
+            df, self._folded(), self.n, text_col, id_col, backoff, alpha
+        )
+
+    # -- maintenance -------------------------------------------------
+    def compact(self, vacuum: bool = False) -> None:
+        """Fold every live epoch into one base generation: write the
+        folded counts under a fresh scope, then flip the manifest
+        (atomic os.replace — the commit point). Merge-on-read cost
+        resets from O(#epochs) dirs to one.
+
+        Folded dirs get a ONE-GENERATION grace (mirroring the
+        observation store's retired_deltas): a ``counts()`` or model
+        plan built before the flip still lazily reads the old live
+        list and would hit FileNotFound if the dirs vanished mid-query,
+        so this compaction KEEPS its folded dirs, records them in the
+        manifest's ``retired`` map, and reclaims the PREVIOUS
+        compaction's retired dirs. Pass ``vacuum=True`` to delete this
+        compaction's folded dirs immediately (only when no plans from
+        before the flip can still run)."""
+        man = self._manifest()
+        expected_seq = man.get("commit_seq", 0)
+        live = man["live"]
+        if len(live) <= 1:
+            return
+        gen = 1 + max(
+            (int(s.rsplit("-", 1)[1]) for s in live if s.startswith("base-")),
+            default=0,
+        )
+        new = f"base-{gen}"
+        (
+            self.counts()
+            .repartition("k")
+            .write.mode("overwrite")
+            .partitionBy("k")
+            .parquet(os.path.join(self.path, "grams", f"epoch={new}"))
+        )
+        # earlier compactions' retired scopes: their grace generation
+        # has passed — reclaim them after this flip. Entries whose
+        # dirs already vanished are pruned rather than re-deleted.
+        reclaim = [
+            s
+            for s in (man.get("retired") or {})
+            if os.path.isdir(os.path.join(self.path, "grams", f"epoch={s}"))
+        ]
+        retired = {} if vacuum else {s: gen for s in live}
+        # the commit point — the applied marks survive the flip (they
+        # are the only record that a folded epoch ever happened, which
+        # is exactly what gates its replay)
+        self._write_manifest(
+            {**man, "live": [new], "retired": retired},
+            expected_seq=expected_seq,
+        )
+        for s in reclaim + (list(live) if vacuum else []):
+            shutil.rmtree(
+                os.path.join(self.path, "grams", f"epoch={s}"),
+                ignore_errors=True,
+            )
+
+
+class BigramCountStore(NgramCountStore):
+    """``NgramCountStore`` at n=2 plus the bigram model views:
+    ``model()`` (add-alpha) and ``kn_model()`` (interpolated KN) over
+    the folded counts, scored with ``score_bigram_lm`` /
+    ``score_kn_bigram_lm`` and equal to the one-shot trainers over the
+    full history (the store's associativity argument)."""
+
+    def __init__(self, spark: SparkSession, path: str):
+        super().__init__(spark, path, n=2)
+
+    def model(
+        self, alpha: float = DEFAULT_ALPHA, min_count: int = 1
+    ) -> _AddAlphaLM:
+        return _addalpha_model(self._folded(), 2, alpha, min_count)
+
+    def kn_model(
+        self, discount: float | None = None, alpha_c: float = 1.0
+    ) -> _KNBigramLM:
+        return _kn_bigram_model(self._folded(), discount, alpha_c)
 
 
 def _ccnet_dedup_documents(
@@ -1792,9 +1341,8 @@ def ccnet_pipeline(
     100 TB corpora where exact percentile's map-side multiset is the
     bottleneck.
 
-    ``order`` > 2 scores with the recursive order-n interpolated KN
-    (CCNet's reference filter is order 5) — same chain, the LM stage
-    swaps to the order-n counts + score-from-counts path."""
+    ``order`` sets the interpolated-KN order (CCNet's reference
+    filter is order 5); every order runs the same count + score path."""
     if granularity == "document":
         kept = _ccnet_dedup_documents(df, text_col, id_col, source_col)
     elif granularity == "paragraph":
@@ -1849,16 +1397,12 @@ def ccnet_pipeline(
         ).select(id_col, "lang", "perplexity")
         scored = scored.join(kept.select(id_col, source_col), [id_col])
     else:
-        if order == 2:
-            model = train_kn_bigram_lm(ref, text_col, id_col)
-            scored = score_kn_bigram_lm(kept, model, text_col, id_col)
-        else:
-            counts = _all_order_counts(ref, order, text_col).localCheckpoint(
-                eager=True
-            )
-            scored = _kn_ngram_score_from_counts(
-                kept, counts, order, text_col, id_col
-            )
+        counts = _all_order_counts(ref, order, text_col).localCheckpoint(
+            eager=True
+        )
+        scored = _kn_ngram_score_from_counts(
+            kept, counts, order, text_col, id_col
+        )
         scored = scored.join(kept.select(id_col, source_col), [id_col])
         if langs is not None:
             scored = scored.join(langs, [id_col])
@@ -1970,21 +1514,7 @@ def _sbo_score_from_counts(
     ).collect()[0]
     total_n, vocab = row["N"] or 0, row["V"] or 0
 
-    # scoring stream: full-context positions, with every suffix context
-    sfx = ", ".join(
-        f"array_join(slice(tk, i + {n - 1 - (k - 1)}, {k - 1}), ' ') AS ctx{k}"
-        for k in range(2, n + 1)
-    )
-    score_expr = (
-        f"transform(sequence(1, size(tk) - {n - 1}), "
-        f"i -> struct({sfx}, tk[i + {n - 2}] AS w))"
-    )
-    g = (
-        df.select(F.col(id_col), tokens(F.col(text_col)).alias("tk"))
-        .where(F.size("tk") >= n)
-        .select(F.col(id_col), F.explode(F.expr(score_expr)).alias("g"))
-        .select(id_col, "g.*")
-    )
+    g = _score_stream(df, n, text_col, id_col)
     for k in range(n, 1, -1):
         ck = (
             counts.where(F.col("k") == k)
@@ -2015,11 +1545,8 @@ def _sbo_score_from_counts(
         if k < n:
             ratio = F.lit(float(backoff) ** (n - k)) * ratio
         score = F.when(F.col(f"c{k}").isNotNull(), ratio).otherwise(score)
-    return (
-        g.select(F.col(id_col), F.log(score).alias("lp"))
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n_grams"), F.sum("lp").alias("_s"))
-        .withColumn("avg_logscore", F.col("_s") / F.col("n_grams"))
-        .withColumn("perplexity", F.exp(-F.col("avg_logscore")))
-        .drop("_s")
+    return _per_doc(
+        g.select(F.col(id_col), F.log(score).alias("lp")),
+        [id_col],
+        avg_col="avg_logscore",
     )

@@ -636,9 +636,10 @@ def main() -> None:
     @timed("lm_perplexity")
     def _():
         # CCNet-shaped bigram-LM quality filter, self-trained on the
-        # documents table: two gram count aggregations + two gram-keyed
-        # joins, all codegen. Tracks the cost of the heaviest text
-        # scoring path (three tokenize passes of the corpus).
+        # documents table: one all-orders count pass (checkpointed; V
+        # is its k=1 row count) + two gram-keyed joins, all codegen.
+        # Tracks the cost of the add-alpha text scoring path (two
+        # tokenize passes of the corpus).
         from balboa_spark.operators import lm
 
         lm.bigram_lm_perplexity(
@@ -647,10 +648,11 @@ def main() -> None:
 
     @timed("lm_kn_perplexity")
     def _():
-        # interpolated Kneser-Ney twin (r11): same two count shuffles
-        # plus one continuation-count relation and one extra gram-keyed
-        # join vs add-alpha — tracks the cost delta of the
-        # CCNet-parity smoothing on the same self-trained corpus.
+        # interpolated Kneser-Ney twin (r11; the order-n KN scorer at
+        # n=2): the same count pass plus the checkpointed adjusted
+        # (continuation) table and one extra gram-keyed join vs
+        # add-alpha — tracks the cost delta of the CCNet-parity
+        # smoothing on the same self-trained corpus.
         from balboa_spark.operators import lm
 
         lm.kn_bigram_lm_perplexity(

@@ -28,7 +28,10 @@ SF_SMOKE = "/root/testdata/sf0.001"
 #     python -m pytest tests/ -q -m ""
 # (this is what the round-close verification battery runs and records
 # in OPTIMIZATION_r*.md). Centralized here (not per-file decorators)
-# so the list is auditable and tunable in one place.
+# so the list is auditable and tunable in one place. The LM artifact,
+# count-store, CLI and streaming-monitor tests stay in the default run
+# despite their cost: they are the only end-to-end checks of the
+# persisted-LM paths.
 _SLOW_TESTS = {
     ("test_graph.py", "test_personalized_pagerank_seeds"),
     ("test_pipeline_ops.py", "test_streaming_vector_index_upsert"),
@@ -41,11 +44,9 @@ _SLOW_TESTS = {
     ("test_corpus_ops.py", "test_weighted_sample_k_deterministic_and_proportional"),
     ("test_dedup_store.py", "test_minhash_store_torn_batch_replay_parity"),
     ("test_layout_streaming.py", "test_stream_stream_interval_join_attribution"),
-    ("test_store_maintenance.py", "test_lm_auto_compaction_bounds_live_epochs"),
     ("test_pipeline_ops.py", "test_semantic_dedup_matches_exact_on_clusters"),
     ("test_corpus_ops.py", "test_tokenizer_store_byte_and_unigram_kinds"),
     ("test_store_maintenance.py", "test_minhash_compact_preserves_decisions_and_reclaims"),
-    ("test_lm_kn.py", "test_load_any_lm_dispatches_by_artifact_kind"),
     ("test_corpus_ops.py", "test_tokens_col_seams_match_inline_tokenize"),
     ("test_corpus_ops.py", "test_bpe_segment_arrow_parity_with_column_fold"),
     ("test_pipeline_ops.py", "test_vector_store_upsert_honors_frozen_manifest_params"),
@@ -54,7 +55,6 @@ _SLOW_TESTS = {
     ("test_dedup_store.py", "test_minhash_store_torn_partial_append_self_heals"),
     ("test_pipeline_ops.py", "test_embedding_near_dedup_lsh_matches_exact"),
     ("test_corpus_ops.py", "test_tokenizer_diff_reports_drift_and_gen_pinned_encode"),
-    ("test_lm.py", "test_cli_lm_train_score_e2e"),
     ("test_attributes.py", "test_attr_compact_prunes_and_graces"),
     ("test_store_maintenance.py", "test_dedup_store_compact_racing_append_raises"),
     ("test_corpus_ops.py", "test_dsir_target_subset_arm_matches_retokenize"),
@@ -65,21 +65,22 @@ _SLOW_TESTS = {
     ("test_store_maintenance.py", "test_span_store_compact_matches_uncompacted_twin"),
     ("test_corpus_ops.py", "test_span_dedup_matches_python_reference"),
     ("test_aggregate.py", "test_frequency_sketch_partitioning_independent"),
-    ("test_lm.py", "test_perplexity_monitor_sink_replay_idempotent"),
     ("test_sft.py", "test_sft_assembly_matches_python_reference_fuzz"),
     ("test_aggregate.py", "test_aggregate_matches_oracle"),
     ("test_store_maintenance.py", "test_span_store_auto_compaction_bounds_dirs"),
     ("test_corpus_ops.py", "test_tokenizer_diff_word_store_shared_stream_parity"),
     ("test_corpus_ops.py", "test_cli_tokenizer_fit_encode_e2e"),
     ("test_pipeline_ops.py", "test_streaming_incremental_corpus_pipeline_e2e"),
-    ("test_lm.py", "test_streaming_perplexity_monitor_alerts_on_gibberish_feed"),
     ("test_dedup_store.py", "test_span_store_replay_is_effectively_once"),
 }
 
 
 def pytest_collection_modifyitems(config, items):
     for item in items:
-        key = (os.path.basename(str(item.fspath)), item.originalname)
+        key = (
+            os.path.basename(str(item.fspath)),
+            getattr(item, "originalname", item.name),
+        )
         if key in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
 

@@ -1,8 +1,8 @@
-"""The LM family (balboa_spark.operators.lm): bigram/order-n
-perplexity scoring, model artifact save/load, the incremental
-BigramCountStore, the streaming perplexity monitor, the lm-train /
-lm-score CLI — plus the leakage-safe group split
-(corpus.leakage_safe_split).
+"""The LM family (balboa_spark.operators.lm): add-alpha bigram /
+order-n perplexity scoring, model artifact save/load, the incremental
+BigramCountStore (NgramCountStore at n=2), the streaming perplexity
+monitor, the lm-train / lm-score CLI — plus the leakage-safe group
+split (corpus.leakage_safe_split).
 """
 
 from __future__ import annotations
@@ -23,6 +23,13 @@ def tiny(spark):
         (3, "x"),  # one token: no bigram, absent from output
     ]
     return spark.createDataFrame(rows, ["doc_id", "text"])
+
+
+def _bigram_counts(counts):
+    """{(w1, w2): c} from the order-2 rows of a (k, ctx, w, c) relation."""
+    return {
+        (r["ctx"], r["w"]): r["c"] for r in counts.where("k = 2").collect()
+    }
 
 
 def test_bigram_lm_hand_computed(spark, tiny):
@@ -213,9 +220,9 @@ def test_bigram_lm_matches_python_reference(spark):
 def test_bigram_lm_min_count_prunes_grams_but_keeps_denominators(spark, tiny):
     # tiny: c(a b)=2, c(b a)=1, c(a c)=1; contexts c(a)=3, c(b)=1; V=4
     model = lm.train_bigram_lm(tiny, min_count=2)
-    stored = {(r["w1"], r["w2"]): r["c12"] for r in model.c12.collect()}
+    stored = {(r["ctx"], r["w"]): r["c"] for r in model.grams.collect()}
     assert stored == {("a", "b"): 2}  # singletons pruned from the artifact
-    ctx = {r["w1"]: r["c1"] for r in model.c1.collect()}
+    ctx = {r["ctx"]: r["c_ctx"] for r in model.ctx.collect()}
     assert ctx == {"a": 3, "b": 1}  # denominators from UNPRUNED counts
     out = {r["doc_id"]: r for r in lm.score_bigram_lm(tiny, model).collect()}
     # pruned (a c) scores as unseen: (0+1)/(3+4); kept (a b) unchanged
@@ -265,17 +272,11 @@ def test_ngram_lm_order2_equals_bigram_lm(spark, tables):
         lm.ngram_lm_perplexity(docs, n=1)
 
 
-def test_bigram_lm_approx_vocab_close_to_exact(spark, tables):
-    docs = tables["documents"].limit(300)
-    exact = lm.train_bigram_lm(docs).vocab
-    approx = lm.train_bigram_lm(docs, approx_vocab=True).vocab
-    assert approx == pytest.approx(exact, rel=0.05)
-
-
 def test_bigram_lm_save_load_roundtrip_scores_identically(spark, tiny, tmp_path):
     model = lm.train_bigram_lm(tiny)
     lm.save_bigram_lm(model, str(tmp_path / "model"))
-    loaded = lm.load_bigram_lm(spark, str(tmp_path / "model"))
+    loaded, score_fn = lm.load_any_lm(spark, str(tmp_path / "model"))
+    assert score_fn is lm.score_bigram_lm
     assert (loaded.vocab, loaded.alpha) == (model.vocab, model.alpha)
     direct = {
         r["doc_id"]: r["perplexity"]
@@ -307,7 +308,9 @@ def test_streaming_perplexity_monitor_alerts_on_gibberish_feed(spark, tmp_path):
     model_path = str(tmp_path / "model")
     lm.save_bigram_lm(lm.train_bigram_lm(train), model_path)
     # calibration: in-domain ppl under this model, used as the band
-    in_domain = lm.score_bigram_lm(train.limit(1), lm.load_bigram_lm(spark, model_path))
+    in_domain = lm.score_bigram_lm(
+        train.limit(1), lm.load_any_lm(spark, model_path)[0]
+    )
     base_ppl = in_domain.collect()[0]["perplexity"]
 
     src = tmp_path / "src"
@@ -384,9 +387,9 @@ def test_bigram_count_store_incremental_equals_one_shot(spark, tmp_path):
     store = lm.BigramCountStore(spark, str(tmp_path / "store"))
     for e in range(3):  # three disjoint batches
         store.process_batch(df.where(f"doc_id % 3 = {e}"), epoch_id=e)
-    got = {(r["w1"], r["w2"]): r["c12"] for r in store.counts().collect()}
+    got = _bigram_counts(store.counts())
     one_shot = lm.train_bigram_lm(df)
-    want = {(r["w1"], r["w2"]): r["c12"] for r in one_shot.c12.collect()}
+    want = {(r["ctx"], r["w"]): r["c"] for r in one_shot.grams.collect()}
     assert got == want
     model = store.model()
     assert model.vocab == one_shot.vocab
@@ -395,6 +398,43 @@ def test_bigram_count_store_incremental_equals_one_shot(spark, tmp_path):
     assert a.keys() == b.keys()
     for k in a:
         assert a[k] == pytest.approx(b[k], rel=1e-12)
+
+    # two batches + compact(): both model views equal the one-shot
+    # trainers (add-alpha and KN scored through their public scorers)
+    fresh = lm.BigramCountStore(spark, str(tmp_path / "fresh"))
+    for e in range(2):
+        fresh.process_batch(df.where(f"doc_id % 2 = {e}"), epoch_id=e)
+    fresh.compact()
+    assert fresh._live() == ["base-1"]
+    for got_df, want_df in (
+        (lm.score_bigram_lm(df, fresh.model()), lm.score_bigram_lm(df, one_shot)),
+        (
+            lm.score_kn_bigram_lm(df, fresh.kn_model()),
+            lm.score_kn_bigram_lm(df, lm.train_kn_bigram_lm(df)),
+        ),
+    ):
+        got_lp = {r["doc_id"]: r["avg_logprob"] for r in got_df.collect()}
+        want_lp = {r["doc_id"]: r["avg_logprob"] for r in want_df.collect()}
+        assert got_lp.keys() == want_lp.keys() and got_lp
+        for k in want_lp:
+            assert got_lp[k] == pytest.approx(want_lp[k], rel=1e-12)
+
+    # a directory in the retired bigram-only layout (manifest without
+    # n, uni/ unigram dirs of (t, c) rows) is refused, never misread
+    import json
+    import os
+
+    old = tmp_path / "old_layout"
+    (old / "grams" / "epoch=default-0").mkdir(parents=True)
+    (old / "uni" / "epoch=default-0").mkdir(parents=True)
+    (old / "manifest.json").write_text(
+        json.dumps({"format": 1, "live": ["default-0"], "applied": {"default": 0}})
+    )
+    with pytest.raises(ValueError, match="old bigram-store layout"):
+        lm.BigramCountStore(spark, str(old))
+    os.remove(old / "manifest.json")  # the uni/ dir alone still marks it
+    with pytest.raises(ValueError, match="old bigram-store layout"):
+        lm.BigramCountStore(spark, str(old))
 
 
 def test_bigram_count_store_replay_idempotent_and_compacts(spark, tmp_path):
@@ -408,18 +448,17 @@ def test_bigram_count_store_replay_idempotent_and_compacts(spark, tmp_path):
     store.process_batch(df.where("doc_id <= 2"), epoch_id=0)  # replay
     store.process_batch(df.where("doc_id = 3"), epoch_id=1)
     store.process_batch(df.where("doc_id < 0"), epoch_id=2)  # empty: no-op
-    before = {(r["w1"], r["w2"]): r["c12"] for r in store.counts().collect()}
+    before = _bigram_counts(store.counts())
     assert before[("a", "b")] == 2  # not doubled by the replay
     assert store._live() == ["default-0", "default-1"]
     # a plan built BEFORE the flip must survive the compaction
     pre_flip = store.counts()
     store.compact()
     assert store._live() == ["base-1"]
-    after = {(r["w1"], r["w2"]): r["c12"] for r in store.counts().collect()}
+    after = _bigram_counts(store.counts())
     assert after == before
-    assert {
-        (r["w1"], r["w2"]): r["c12"] for r in pre_flip.collect()
-    } == before  # folded dirs kept by default — old plans still read
+    # folded dirs kept by default — old plans still read
+    assert _bigram_counts(pre_flip) == before
     # vacuum removes them once no pre-flip plans remain
     store.compact()  # single live generation: no-op
     assert store._live() == ["base-1"]
@@ -476,8 +515,8 @@ def test_cli_lm_train_score_e2e(spark, tiny, tmp_path):
         ),
         spark=spark,
     ) == 0
-    pruned = lm.load_bigram_lm(spark, pruned_dir)
-    assert [(r["w1"], r["w2"]) for r in pruned.c12.collect()] == [("a", "b")]
+    pruned = spark.read.parquet(pruned_dir + "/c12")
+    assert [(r["w1"], r["w2"]) for r in pruned.collect()] == [("a", "b")]
 
 
 def test_leakage_safe_split_matches_python_md5_reference(spark):
@@ -586,14 +625,14 @@ def test_bigram_count_store_replay_after_compact_does_not_double_count(
     store = lm.BigramCountStore(spark, str(tmp_path / "store"))
     store.process_batch(df.where("doc_id = 1"), epoch_id=0)
     store.process_batch(df.where("doc_id = 2"), epoch_id=1)
-    want = {(r["w1"], r["w2"]): r["c12"] for r in store.counts().collect()}
+    want = _bigram_counts(store.counts())
     store.compact()  # epoch dirs folded into base-1
     store.process_batch(df.where("doc_id = 2"), epoch_id=1)  # the replay
-    got = {(r["w1"], r["w2"]): r["c12"] for r in store.counts().collect()}
+    got = _bigram_counts(store.counts())
     assert got == want  # not doubled
     # a genuinely NEW epoch after compaction still lands
     store.process_batch(df.where("doc_id = 1"), epoch_id=2)
-    bumped = {(r["w1"], r["w2"]): r["c12"] for r in store.counts().collect()}
+    bumped = _bigram_counts(store.counts())
     assert bumped[("a", "b")] == want[("a", "b")] * 2
 
 

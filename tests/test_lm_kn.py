@@ -368,7 +368,7 @@ def test_mkn_discount_estimates(spark, tiny):
     # Y = 2/4 = 0.5; D1 = 1 - 2*0.5*(1/2) = 0.5;
     # D2 = 2 - 3*0.5*(0/1) = 2.0; D3 (n3=0 fallback) = 3*0.5 = 1.5
     m = lm.train_mkn_bigram_lm(tiny)
-    assert (m.d1, m.d2, m.d3) == pytest.approx((0.5, 2.0, 1.5))
+    assert m.discount == pytest.approx((0.5, 2.0, 1.5))
     assert m.types == 3 and m.vocab == 4
 
 
@@ -396,7 +396,7 @@ def test_mkn_normalizes_over_vocab(spark, tiny):
     df = spark.createDataFrame(probes, ["doc_id", "text"])
     by_doc = {
         r["doc_id"]: math.exp(r["avg_logprob"])
-        for r in lm.score_mkn_bigram_lm(df, model).collect()
+        for r in lm.score_kn_bigram_lm(df, model).collect()
     }
     for block in range(3):
         s = sum(by_doc[block * 4 + j] for j in range(4))
@@ -427,7 +427,8 @@ def test_mkn_oov_finite_and_ranks_gibberish(spark):
 def test_kn_save_load_roundtrip_scores_identically(spark, tiny, tmp_path):
     model = lm.train_kn_bigram_lm(tiny)
     lm.save_kn_bigram_lm(model, str(tmp_path / "knart"))
-    loaded = lm.load_kn_bigram_lm(spark, str(tmp_path / "knart"))
+    loaded, score_fn = lm.load_any_lm(spark, str(tmp_path / "knart"))
+    assert score_fn is lm.score_kn_bigram_lm
     a = {r["doc_id"]: r["avg_logprob"]
          for r in lm.score_kn_bigram_lm(tiny, model).collect()}
     b = {r["doc_id"]: r["avg_logprob"]
@@ -441,26 +442,73 @@ def test_kn_save_load_roundtrip_scores_identically(spark, tiny, tmp_path):
 def test_mkn_save_load_roundtrip(spark, tiny, tmp_path):
     model = lm.train_mkn_bigram_lm(tiny)
     lm.save_mkn_bigram_lm(model, str(tmp_path / "mknart"))
-    loaded = lm.load_mkn_bigram_lm(spark, str(tmp_path / "mknart"))
+    loaded, score_fn = lm.load_any_lm(spark, str(tmp_path / "mknart"))
     a = {r["doc_id"]: r["avg_logprob"]
-         for r in lm.score_mkn_bigram_lm(tiny, model).collect()}
+         for r in lm.score_kn_bigram_lm(tiny, model).collect()}
     b = {r["doc_id"]: r["avg_logprob"]
-         for r in lm.score_mkn_bigram_lm(tiny, loaded).collect()}
+         for r in score_fn(tiny, loaded).collect()}
     assert a == b
+    assert (loaded.types, loaded.vocab, loaded.discount) == (
+        model.types, model.vocab, model.discount
+    )
 
 
 def test_load_any_lm_dispatches_by_artifact_kind(spark, tiny, tmp_path):
-    lm.save_bigram_lm(lm.train_bigram_lm(tiny), str(tmp_path / "aa"))
-    lm.save_kn_bigram_lm(lm.train_kn_bigram_lm(tiny), str(tmp_path / "kn"))
-    lm.save_mkn_bigram_lm(lm.train_mkn_bigram_lm(tiny), str(tmp_path / "mk"))
-    m, fn = lm.load_any_lm(spark, str(tmp_path / "aa"))
-    assert isinstance(m, lm.BigramLM) and fn is lm.score_bigram_lm
-    m, fn = lm.load_any_lm(spark, str(tmp_path / "kn"))
-    assert isinstance(m, lm.KNBigramLM) and fn is lm.score_kn_bigram_lm
-    m, fn = lm.load_any_lm(spark, str(tmp_path / "mk"))
-    assert isinstance(m, lm.MKNBigramLM) and fn is lm.score_mkn_bigram_lm
-    with pytest.raises(ValueError, match="not kn"):
-        lm.load_kn_bigram_lm(spark, str(tmp_path / "mk"))
+    """Each kind's artifact loads back to its own smoothing: the loaded
+    (model, score_fn) pair scores exactly like the trained model, and
+    the three kinds score differently (no kind is misread as another)."""
+    trained = {
+        "aa": (lm.train_bigram_lm(tiny), lm.save_bigram_lm, lm.score_bigram_lm),
+        "kn": (
+            lm.train_kn_bigram_lm(tiny), lm.save_kn_bigram_lm,
+            lm.score_kn_bigram_lm,
+        ),
+        "mk": (
+            lm.train_mkn_bigram_lm(tiny), lm.save_mkn_bigram_lm,
+            lm.score_kn_bigram_lm,
+        ),
+    }
+    scores = {}
+    for name, (model, save, score) in trained.items():
+        save(model, str(tmp_path / name))
+        m, fn = lm.load_any_lm(spark, str(tmp_path / name))
+        want = {r["doc_id"]: r["avg_logprob"] for r in score(tiny, model).collect()}
+        got = {r["doc_id"]: r["avg_logprob"] for r in fn(tiny, m).collect()}
+        assert got.keys() == want.keys() == {1, 2}
+        for k in want:
+            assert got[k] == pytest.approx(want[k], rel=1e-12)
+        scores[name] = got[1]
+    assert len({round(v, 9) for v in scores.values()}) == 3
+    (tmp_path / "bad" / "c12").mkdir(parents=True)
+    spark.createDataFrame([("nope",)], "kind string").write.parquet(
+        str(tmp_path / "bad" / "meta")
+    )
+    with pytest.raises(ValueError, match="unknown kind"):
+        lm.load_any_lm(spark, str(tmp_path / "bad"))
+
+
+def test_load_any_lm_reads_artifacts_written_before_the_ngram_core(spark, tiny):
+    """Artifacts written by the bigram-specialized trainers (before the
+    bigram models became n=2 views of the order-n count relation)
+    score identically today: tests/fixtures/lm_artifacts holds their
+    parquet bytes for the tiny corpus and the per-doc avg_logprob the
+    writing code scored from each."""
+    import json
+    import os
+
+    root = os.path.join(os.path.dirname(__file__), "fixtures", "lm_artifacts")
+    with open(os.path.join(root, "expected_avg_logprob.json")) as fh:
+        expected = json.load(fh)
+    assert sorted(expected) == ["addalpha", "kn", "mkn"]
+    for kind, want in expected.items():
+        model, score_fn = lm.load_any_lm(spark, os.path.join(root, kind))
+        got = {
+            str(r["doc_id"]): r["avg_logprob"]
+            for r in score_fn(tiny, model).collect()
+        }
+        assert got.keys() == want.keys(), kind
+        for k in want:
+            assert got[k] == pytest.approx(want[k], rel=1e-12), kind
 
 
 def test_cli_lm_train_kn_and_score(spark, tiny, tmp_path):
@@ -682,11 +730,11 @@ def test_cli_lm_train_kn_rejects_pruning_flags(spark, tiny, tmp_path):
     )
     with pytest.raises(SystemExit, match="min-count"):
         cli.run(args, spark=spark)
-    args = cli.build_parser().parse_args(
-        ["lm-train", inp, model, "--smoothing", "mkn", "--approx-vocab"]
-    )
-    with pytest.raises(SystemExit, match="approx-vocab"):
-        cli.run(args, spark=spark)
+    # --approx-vocab is gone: exact V costs no extra pass
+    with pytest.raises(SystemExit):
+        cli.build_parser().parse_args(
+            ["lm-train", inp, model, "--smoothing", "mkn", "--approx-vocab"]
+        )
 
 
 def test_kn_oracle_generator_matches_hand_written_n3():
