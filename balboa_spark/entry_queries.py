@@ -244,348 +244,6 @@ QUERIES.update(QUERIES_TEMPORAL)
 # one-list edit and the insertion-order dependency is impossible to
 # get wrong; everything not in CAP_50 lands in the tail, each entry
 # annotated with why its kernel is still covered.
-#
-# Round-10 rotation (this round; the round-9 plan was skipped — r9
-# graded the identical set as r8): the 10 stalest tail entries (last
-# real-driver green in r6, three rounds ago) move INTO the cap:
-# explode_normalize, entries_rrname_residual, cof_projection,
-# multi_backend_union, rest_dual_search, total_count, agg_incremental,
-# tag_routing_counts, events_tumbling, text_profile. Displaced: 10
-# r7-cohort entries now double-verified (real-driver green in BOTH r8
-# and r9, kernels unchanged). The PSL-dependent entries
-# (corpus_domain_profile, corpus_domain_cap, pipeline_crawl) STAY
-# in-cap because round 10 changes their kernel (full published PSL
-# list becomes the default rule set) — they need fresh grading.
-#
-# Round-11 rotation (this round; executes the r10 plan + 9 new
-# kernels): IN = the 10 stalest tail entries (last real-driver green
-# in r7: events_rolling_1h, events_funnel, events_zorder,
-# corpus_tfidf_keywords, corpus_boilerplate, corpus_quality_bins,
-# corpus_mixture_upsample, corpus_expectations, corpus_pack_sequences,
-# dedup_semantic) + the 9 r11-new entries (corpus_lm_kn_perplexity,
-# corpus_lm_kn3_perplexity, corpus_lm_mkn_perplexity,
-# lm_store_kn_perplexity, lm_store_kn3_perplexity,
-# corpus_lm_sbo_perplexity, corpus_lm_band, pipeline_ccnet,
-# exact_dedup_store). OUT = the 10 entries promoted in r10 (green r6
-# AND r10, kernels unchanged since) + 9 multi-green entries
-# (corpus_dedup_units, corpus_dsir_topk, events_props_profile,
-# corpus_pack_boundaries, ann_quality_eval, corpus_passage_cdc,
-# corpus_span_dedup, corpus_quality_classifier — each r7-r10 4x green
-# with its family still in-cap — and dedup_exact, whose keep rule is
-# now graded harder via exact_dedup_store).
-# Kernel-changed-this-round entries all stay in-cap: lm_store
-# (CAS + retired-scope tracking), store_delta_fold (CAS),
-# span_dedup_store (compact + auto-scope guard), bm25_store_topk /
-# vector_store_topk (CAS), pipeline_crawl / corpus_domain_cap /
-# corpus_domain_profile (psl out_col guard).
-#
-# Round-12 rotation (this round; executes the r11 plan + 6 new
-# kernels + 1 kernel-changed recall): IN = the 6 r12-new entries
-# (corpus_lm_kn5_perplexity, pipeline_ccnet5, pipeline_ccnet_par,
-# corpus_lang_id, corpus_lm_kn_by_source, pipeline_ccnet_lid),
-# dedup_exact RECALLED from the tail because its
-# kernel changed this round (exact_dedup rewritten from the
-# min-over-window to groupBy-min + semi-join), and the 10 stalest
-# tail entries (last real-driver green r9: embedding_seed_topk,
-# corpus_bpe_vocab, corpus_mixture_temperature, corpus_epoch_shuffle,
-# corpus_normalize_unicode, corpus_length_batches, corpus_blocklist,
-# corpus_snapshot_diff, corpus_bpe_encode, corpus_weighted_sample).
-# OUT = the 10 entries promoted in r11 (green r7 AND r11, kernels
-# unchanged since) + 7 multi-green entries (green r10 AND r11 or
-# longer, kernels unchanged: corpus_lm_perplexity,
-# corpus_lm3_perplexity, lm_store_perplexity, corpus_leakage_split,
-# events_skew_metrics, corpus_bpe_segment, events_interval_join). Kernel-changed-this-round entries all stay
-# in-cap: pipeline_ccnet (dedup stage + checkpoint + threshold arms),
-# exact_dedup_store (groupBy-min + claim + manifest order),
-# span_dedup_store (claim + manifest order), the kn scorer family
-# (order-1 discount-estimate skip).
-#
-# Mid-r12 amendments (same round, later session): (a) IN =
-# attr_store_mix + attr_mix_report (new AttributeStore kernels, first
-# grading), OUT = bm25_store_topk + vector_store_topk (green r10 AND
-# r11, kernels unchanged since the r11 CAS change); (b) IN =
-# corpus_pack_sequences + corpus_pack_boundaries RECALLED (kernel
-# rewritten: per-token posexplode -> fragment slicing), OUT =
-# customer_fuzzy_pairs + events_psi_drift (multi-round green, kernels
-# unchanged; fuzzy's SymSpell kernel still graded via in-cap
-# supplier-entity path at next rotation); (c) IN = graph_pagerank,
-# corpus_main_content, hybrid_search_rrf, events_resample (all
-# r12-new kernels, first grading), OUT = corpus_domain_profile +
-# corpus_domain_cap (green r10 AND r11 post-PSL-change, kernels
-# unchanged r12; domain family stays via in-cap pipeline_crawl),
-# embedding_knn_join (green r5-r11 multi-round; ANN family stays via
-# ann_lsh_topk + hybrid_search_rrf), events_asof (green r5-r11
-# multi-round; temporal family refreshed via events_resample +
-# r11-green interval/rolling twins). Net churn this round: 17 cap
-# entries first-graded or kernel-recalled.
-#
-# Round-13 rotation (executed r13; the VERDICT r12 backlog
-# sweep): OUT = 20 double-green entries (kernels unchanged since
-# their last grading): the 10 r12-promoted r9-cohort entries (green
-# r9 AND r12: embedding_seed_topk, corpus_bpe_vocab/encode,
-# corpus_mixture_temperature, corpus_epoch_shuffle,
-# corpus_normalize_unicode, corpus_length_batches, corpus_blocklist,
-# corpus_snapshot_diff, corpus_weighted_sample), 5 r11-LM siblings
-# (green r11 AND r12, scorers shared with the in-cap kn twins:
-# kn3, mkn, sbo, band, lm_store_kn3), corpus_quality_signals +
-# corpus_mixture_resample (continuously green r5-r12), pipeline_crawl
-# (green r10-r12 post-PSL-change; crawl path now graded HARDER by the
-# new in-cap pipeline_wet_ccnet), corpus_bm25_topk (green r7-r12;
-# retrieval stays via in-cap hybrid_search_rrf), store_delta_fold
-# (green r10-r12; store family canaried by the r12/r13
-# kernel-changed exact/span/attr stores in-cap).
-# IN = 4 r13-NEW entries (corpus_bpe_bytes, corpus_bpe_bytes_encode,
-# pipeline_wet_ccnet — first grading — and pipeline_ccnet_approx,
-# rows-only, the approx-percentile arm), the 5-member dedup cohort
-# whose shared kernels CHANGED r13 (bucket_pairs star pairs +
-# ngram-Jaccard groupBy DF cap) and which was last driver-green in
-# r5: dedup_ngram_jaccard, dedup_minhash_lsh, dedup_minhash_estimate,
-# dedup_simhash, dedup_keep_longest; and the next-stalest r5
-# entries: embedding_topk, embedding_cosine_pairs, events_sessionize,
-# events_retention, events_anomaly, corpus_pii_redact,
-# corpus_hash_split (tpch_q1 and corpus_vocab_topk entered early and
-# yielded their slots mid-round; corpus_contamination and media_dedup
-# were DEFERRED to r14 — see their r13 tail notes — so the EXECUTED
-# r13 recall was 14 of the 39-entry r5/r6 stale cohort, not the 16
-# this paragraph originally claimed).
-# Kernel-changed-this-round entries all stay in-cap for re-grading:
-# events_resample (floor-div bucketing), pipeline_ccnet/ccnet5/
-# ccnet_par/ccnet_lid (tokens-join dedup fingerprint + lid-oracle
-# LEFT-JOIN parity), dedup_exact/exact_dedup_store (exact_dedup key
-# param), graph_pagerank (_edge_relations refactor).
-#
-
-# ROUND-14 ROTATION (executed this round). The r13 plan is carried
-# out in full, as CODE the asserts below and scripts/grading_ledger.py
-# machine-check (the r13 verdict's What's-wrong #3 was prose drifting
-# from the executed cap — R14_IN/R14_OUT exist so prose can't drift
-# again):
-#
-# IN (31) = the ENTIRE remaining r5/r6 stale cohort (12 r5: the 8
-# planned retirements corpus_hash_sample/events_quantiles/join_enrich/
-# media_stats/pipeline_clean/rollup_observations/topk_per_group/
-# tpch_q3, the 2 r13-deferred media_dedup/corpus_contamination, and
-# the 2 mid-r13 early-swaps tpch_q1/corpus_vocab_topk; 15 r6:
-# corpus_chunk_tokens corpus_clean_text corpus_interleave
-# corpus_sentences corpus_span_corruption corpus_stratified_k
-# corpus_trigram_familiarity corpus_winnow dedup_passage
-# embedding_mean_pool embedding_pq embedding_project
-# embedding_quantize media_chunks media_patches), the 3 remaining
-# mid-r13 demotions due a re-grade (entries_rdata, aliases,
-# pipeline_ccnet_par — ccnet_par also re-grades the EXACT-tertile
-# band suffix now that pipeline_ccnet rides the approx twin), and
-# ann_ivf_topk RECALLED because this round's ivf_assign_col float64
-# fix (ADVICE r13) changed its cell-routing kernel.
-#
-# OUT (31), each with a tail note: the four backbone canaries
-# (observations_agg entries_rrname cidr_search input_normalize —
-# multi-round green, kernels years at rest; backbone stays graded
-# via the recalled entries_rdata/aliases/rollup_observations), the
-# double-green r12-first-graded cohort (hybrid_search_rrf
-# attr_store_mix attr_mix_report corpus_main_content
-# corpus_pack_sequences corpus_pack_boundaries + the 4 KN-family
-# twins), the r5+r13 double-greens (corpus_pii_redact
-# corpus_hash_split events_retention), multi-green pipeline_pretrain
-# and span_dedup_store (kernel at rest since r12), and the
-# single-green-post-r13-change same-kernel siblings (5 dedup family
-# members behind in-cap dedup_ngram_jaccard/minhash_lsh/components +
-# exact_dedup_store; embedding_topk/embedding_cosine_pairs/
-# ann_lsh_topk behind the cosine-kernel grade riding in-cap
-# ann_ivf_topk/embedding_kmeans; pipeline_ccnet/ccnet5/ccnet_lid
-# behind in-cap pipeline_ccnet_approx + pipeline_ccnet_par +
-# corpus_lang_id; events_anomaly behind in-cap events_resample +
-# recalled events_quantiles — the pipeline_ccnet_par same-kernel
-# precedent from r13).
-#
-# Kernel/oracle-changed THIS round, staying or entering for
-# re-grading: sft_render/sft_loss_spans/pipeline_sft (NULL-content
-# oracle coalesce + the two-phase threading de-skew),
-# events_sessionize (two-phase gaps-and-islands), pipeline_ccnet_approx
-# (now hash-graded on its sketch-independent projection — the
-# err:no_oracle fix), embedding_kmeans + ann_ivf_topk (ivf_assign
-# float64).
-#
-# MID-R14 SWAPS (after the rotation above executed; both annotated at
-# their cap/tail entries so prose and code agree): two NEW entries
-# entered the cap — corpus_bpe_by_lang (slot from
-# corpus_curriculum_order) and corpus_unigram_by_lang (slot from
-# corpus_bpe_bytes) — never-graded outranks a single-green re-confirm
-# under stalest-first, and both demotions carry same-kernel /
-# no-r14-change tail notes plus a same-session driver_sim green.
-#
-# ROUND-15 PLAN: demote the r13-first-graded cohort once double-green
-# (corpus_bpe_bytes/_encode, pipeline_wet_ccnet, corpus_unigram_segment,
-# corpus_mixture_budget, the SFT trio, embedding_kmeans — NOTE
-# corpus_curriculum_order already yielded its slot mid-r14 to the new
-# corpus_bpe_by_lang, which as an r14 first-grade must then stay
-# until double-green) and the re-graded r14 IN cohort; recall the
-# then-stalest tail (r7 era: customer_fuzzy_pairs, events_psi_drift,
-# supplier_entity_resolve, corpus_passage_cdc...) per the
-# grading_ledger stalest-first listing, NOT prose.
-
-# The executed swap, as code (grading_ledger.py checks membership:
-# every R14_IN name must be in CAP_50, every R14_OUT in _TAIL,
-# the sets disjoint).
-R14_IN = [
-    "corpus_hash_sample", "events_quantiles", "join_enrich",
-    "media_stats", "pipeline_clean", "rollup_observations",
-    "topk_per_group", "tpch_q3", "media_dedup", "corpus_contamination",
-    "tpch_q1", "corpus_vocab_topk",
-    "corpus_chunk_tokens", "corpus_clean_text", "corpus_interleave",
-    "corpus_sentences", "corpus_span_corruption", "corpus_stratified_k",
-    "corpus_trigram_familiarity", "corpus_winnow", "dedup_passage",
-    "embedding_mean_pool", "embedding_pq", "embedding_project",
-    "embedding_quantize", "media_chunks", "media_patches",
-    "entries_rdata", "aliases", "pipeline_ccnet_par",
-    "ann_ivf_topk",
-]
-R14_OUT = [
-    "observations_agg", "entries_rrname", "cidr_search",
-    "input_normalize",
-    "hybrid_search_rrf", "attr_store_mix", "attr_mix_report",
-    "corpus_main_content", "corpus_pack_sequences",
-    "corpus_pack_boundaries",
-    "corpus_lm_kn_perplexity", "lm_store_kn_perplexity",
-    "corpus_lm_kn5_perplexity", "corpus_lm_kn_by_source",
-    "corpus_pii_redact", "corpus_hash_split", "events_retention",
-    "pipeline_pretrain", "span_dedup_store",
-    "dedup_near_keep", "dedup_exact", "dedup_minhash_estimate",
-    "dedup_simhash", "dedup_keep_longest",
-    "embedding_topk", "embedding_cosine_pairs", "ann_lsh_topk",
-    "pipeline_ccnet", "pipeline_ccnet5", "pipeline_ccnet_lid",
-    "events_anomaly",
-]
-
-# ROUND-15 ROTATION (executed this round; grading_ledger.py checks
-# membership exactly as for R14).
-#
-# IN (14): the staleness frontier — ann_pq_topk + dedup_embedding
-# (last real-driver green r7, AT the 8-round budget this round) and
-# the ENTIRE 8-entry r9 cohort (corpus_dataset_profile,
-# corpus_html_extract, corpus_pack_bestfit, corpus_source_overlap,
-# events_heavy_users, events_props_extract, obs_blocklist_match,
-# supplier_entity_resolve — at 6, recalled early so the budget never
-# binds two cohorts at once) — plus the three NEW r15 entries
-# (never-graded must be in-cap): corpus_training_shards (the shard
-# sink's md5 layout, gradeable since the r15 shard_of convention
-# switch), sft_pairs (DPO preference-pair assembly), and
-# sft_rejection (rejection-sampling / RFT top-k selection), and
-# corpus_semantic_order (ICLM packing order).
-#
-# OUT (14), each with a tail note: the nine r13-kernel-change entries
-# now DOUBLE-green on their current kernels (green r13 AND r14,
-# kernels untouched in r14/r15): corpus_bpe_bytes_encode,
-# corpus_mixture_budget, dedup_ngram_jaccard, dedup_minhash_lsh,
-# events_resample, graph_pagerank, corpus_lang_id, exact_dedup_store
-# — plus media_stats, tpch_q1, topk_per_group, join_enrich,
-# corpus_hash_sample from the R14_IN block: each is multi-green
-# ACROSS history (r5/r6-era multi-round greens + the r14
-# re-confirmation on kernels years at rest); tpch_q1/topk_per_group/
-# join_enrich are generic SQL demos (tail rationale class (c)) and
-# corpus_hash_sample's md5-threshold kernel rides in-cap
-# corpus_stratified_k. dedup_components (the star-loop/components
-# kernel) and dedup_passage/media_dedup stay as the in-cap dedup
-# representatives.
-#
-# Kernel-changed THIS round, staying for re-grade: sft_render /
-# sft_loss_spans / pipeline_sft / events_sessionize (gap_sessions
-# adaptive arm), pipeline_wet_ccnet (WET export-token nonce),
-# corpus_unigram_segment / corpus_unigram_by_lang
-# (unigram_encode_corpus vocab_ids/unk_id seam). r14 first-grades
-# (corpus_bpe_by_lang, corpus_unigram_by_lang, pipeline_ccnet_approx
-# hash-grade, embedding_kmeans/ann_ivf_topk float64) stay until
-# double-green.
-R15_IN = [
-    "ann_pq_topk", "dedup_embedding",
-    "corpus_dataset_profile", "corpus_html_extract",
-    "corpus_pack_bestfit", "corpus_source_overlap",
-    "events_heavy_users", "events_props_extract",
-    "obs_blocklist_match", "supplier_entity_resolve",
-    "corpus_training_shards", "sft_pairs", "sft_rejection",
-    "corpus_semantic_order",
-]
-R15_OUT = [
-    "corpus_bpe_bytes_encode", "corpus_mixture_budget",
-    "dedup_ngram_jaccard", "dedup_minhash_lsh",
-    "events_resample", "graph_pagerank", "corpus_lang_id",
-    "exact_dedup_store",
-    "media_stats", "tpch_q1", "topk_per_group", "join_enrich",
-    "corpus_hash_sample", "corpus_vocab_topk",
-]
-
-# ROUND-16 ROTATION (executed this round; grading_ledger.py checks
-# membership exactly as for R15).
-#
-# IN (23): the ENTIRE 17-entry r10 staleness cohort — the r15 verdict
-# task #1 asked for >= 9 with the rest queued to r17; recalling ALL of
-# them clears the frontier in one round, so at r16 close no tail
-# entry is staler than r11 and the 8-round budget does not bind again
-# until r19 — plus the two NEW r16 entries (never-graded must be
-# in-cap): sft_pairs_str (the preference family's string-id arm,
-# grading the r16 tie-break change against lexicographic ids) and
-# corpus_tokenizer_drift (the tokenizer_diff relational core — the
-# one ungraded r15 surface, verdict stretch #9), and
-# corpus_wordpiece_segment (the r16 WordPiece arm's greedy
-# longest-match segmentation, replayed in DuckDB via a RECURSIVE CTE
-# whose LATERAL argmax consumes the longest matching piece per step),
-# and corpus_wordpiece_fit (the likelihood-rule TRAINING loop unrolled
-# round by round in DuckDB — the corpus_bpe_by_lang mechanism), and
-# sft_pairs_topk (bounded all-pairs preference assembly: top-k x
-# bottom-k candidates per prompt under a margin filter), and
-# corpus_fim (deterministic fill-in-the-middle schedule + PSM/SPM
-# render, md5-replayable).
-#
-# OUT (23), every one DOUBLE-green on an unchanged kernel, each with
-# a tail note: the r9 cohort recalled by R15_IN (green r9 AND r15,
-# kernels at rest since r9) — corpus_dataset_profile,
-# corpus_html_extract, corpus_pack_bestfit, corpus_source_overlap,
-# events_heavy_users, events_props_extract, obs_blocklist_match,
-# supplier_entity_resolve; the r14 first-grades now green r14 AND r15
-# — pipeline_ccnet_approx, embedding_kmeans, corpus_bpe_by_lang; and
-# eight R14_IN-remainder entries green r14 AND r15 — tpch_q3,
-# entries_rdata, aliases, rollup_observations, events_quantiles,
-# media_dedup, embedding_project, embedding_quantize, corpus_winnow,
-# media_chunks, corpus_interleave, embedding_mean_pool.
-# The recalled
-# r10 cohort itself restores in-cap family coverage for most of them
-# (ann_quality_eval: ANN; corpus_quality_classifier: quality;
-# corpus_span_dedup/corpus_passage_cdc: span; total_count/
-# agg_incremental/cof_projection/multi_backend_union/rest_dual_search/
-# entries_rrname_residual: the reference backbone).
-#
-# Kernel-changed THIS round, staying for re-grade: sft_pairs /
-# sft_rejection (string-id tie-break: min_by over (-score, id)),
-# corpus_semantic_order (zero-shuffle array-literal argmax fold).
-# The r7 pair recalled by R15_IN (ann_pq_topk, dedup_embedding) stays
-# a second round: their history is the OLDEST (r7) and the r15 bench
-# flagged ann_pq_topk, so the double confirmation lands where the
-# uncertainty is. r15 NEW entries (corpus_training_shards, sft_pairs,
-# sft_rejection, corpus_semantic_order) and r15 kernel-change entries
-# (sft_render family, pipeline_wet_ccnet, corpus_unigram_*) stay
-# until double-green on current kernels.
-R16_IN = [
-    "agg_incremental", "ann_quality_eval", "cof_projection",
-    "corpus_dedup_units", "corpus_dsir_topk", "corpus_passage_cdc",
-    "corpus_quality_classifier", "corpus_span_dedup",
-    "entries_rrname_residual", "events_props_profile",
-    "events_tumbling", "explode_normalize", "multi_backend_union",
-    "rest_dual_search", "tag_routing_counts", "text_profile",
-    "total_count",
-    "sft_pairs_str", "corpus_tokenizer_drift",
-    "corpus_wordpiece_segment", "corpus_wordpiece_fit",
-    "sft_pairs_topk", "corpus_fim",
-]
-R16_OUT = [
-    "corpus_dataset_profile", "corpus_html_extract",
-    "corpus_pack_bestfit", "corpus_source_overlap",
-    "events_heavy_users", "events_props_extract",
-    "obs_blocklist_match", "supplier_entity_resolve",
-    "pipeline_ccnet_approx", "embedding_kmeans", "corpus_bpe_by_lang",
-    "tpch_q3", "entries_rdata", "aliases", "rollup_observations",
-    "events_quantiles", "media_dedup", "embedding_project",
-    "embedding_quantize", "corpus_winnow", "media_chunks",
-    "corpus_interleave", "embedding_mean_pool",
-]
 
 CAP_50 = [
     # -- kernel changed THIS round (r16): must re-grade --
@@ -621,7 +279,7 @@ CAP_50 = [
                              # per-language unigram vocabs
     # -- r15 NEW entries: single-green r15, stay until double-green --
     "corpus_training_shards",# shard sink layout (md5 shard_of)
-    # -- R15_IN r7 pair: oldest history (r7), single re-confirmation
+    # -- recalled r15, the r7 pair: oldest history (r7), single re-confirmation
     #    r15; ann_pq_topk additionally carried the r15 bench flag
     #    (adjudicated ambient this round, PERF.md r16) — kept for the
     #    double confirmation where the uncertainty is --
@@ -634,8 +292,7 @@ CAP_50 = [
     "dedup_passage",         # span/bucketed-candidates dedup canary
     "pipeline_ccnet_par",    # ccnet chain canary (paragraph arm)
     "pipeline_clean",        # quality/clean chain canary
-    # -- R16_IN: the r10 staleness-cohort recall (see rotation
-    #    comment) --
+    # -- recalled r16: the r10 staleness cohort --
     "agg_incremental",
     "ann_quality_eval",
     "cof_projection",
@@ -653,7 +310,7 @@ CAP_50 = [
     "tag_routing_counts",
     "text_profile",
     "total_count",
-    # -- R14_IN remainder kept in-cap (green r14+r15; the slots not
+    # -- r14 recalls kept in-cap (green r14+r15; the slots not
     #    needed to fund the recall stay for a third confirmation) --
     "corpus_contamination",
     "corpus_chunk_tokens",
@@ -695,7 +352,7 @@ _TAIL = [
     "exact_dedup_store",       # store family double-green r13+r14;
                                # CAS/epoch conventions shared with
                                # span/minhash stores (unit e2e)
-    # --- demoted r15: R14_IN members with multi-green HISTORY on
+    # --- demoted r15: r14 recalls with multi-green HISTORY on
     #     kernels years at rest (r5/r6-era greens + the r14
     #     re-confirmation); the last three are generic SQL demos
     #     (tail rationale class (c)) ---
@@ -844,10 +501,9 @@ _TAIL = [
     "corpus_leakage_split",    # group-aware split kernel
     "events_skew_metrics",     # keyed skew-stats kernel
     # (the whole former r11-demotion block — the 17-entry r10 cohort,
-    # the tail's staleness frontier — was RECALLED in-cap by R16_IN;
-    # the r7 pair and the r9 cohort had been recalled by R15_IN, see
-    # the rotation comments)
-    # --- demoted r16: the r9 cohort after its R15_IN recall — every
+    # the tail's staleness frontier — was recalled in-cap in r16; the
+    # r7 pair and the r9 cohort had been recalled in r15)
+    # --- demoted r16: the r9 cohort after its r15 recall — every
     #     one DOUBLE-green (r9 AND r15) on kernels at rest since r9 ---
     "corpus_dataset_profile",  # profile projection; quality family
                                # in-cap via pipeline_clean +
@@ -880,7 +536,7 @@ _TAIL = [
                                # class graded in-cap via
                                # corpus_tokenizer_drift's dual-
                                # generation word-BPE replay
-    # --- demoted r16: R14_IN remainder now DOUBLE-green (r14 AND
+    # --- demoted r16: r14 recall remainder now DOUBLE-green (r14 AND
     #     r15), kernels at rest; slots fund the r10-cohort recall ---
     "tpch_q3",                 # literal TPC-H SQL, Catalyst demo
                                # (tail rationale class (c))
@@ -924,9 +580,4 @@ assert set(CAP_50) | set(_TAIL) == set(QUERIES), (
     "every registered query must be in CAP_50 or _TAIL: "
     f"{set(QUERIES) ^ (set(CAP_50) | set(_TAIL))}"
 )
-# The executed rotation is code, not prose: IN entries must be in-cap,
-# OUT entries must be in the tail, and the two sets disjoint.
-assert set(R16_IN) <= set(CAP_50), sorted(set(R16_IN) - set(CAP_50))
-assert set(R16_OUT) <= set(_TAIL), sorted(set(R16_OUT) - set(_TAIL))
-assert not (set(R16_IN) & set(R16_OUT)), "IN/OUT overlap"
 QUERIES = {k: QUERIES[k] for k in CAP_50} | {k: QUERIES[k] for k in _TAIL}

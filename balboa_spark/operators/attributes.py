@@ -25,21 +25,18 @@ Store layout (one namespace per tagger, each with its OWN manifest so
 tagger writers never contend on a shared commit seq):
 
     <root>/<tagger>/manifest.json     format, id col, attr schema,
-                                      last_ver, claimed_auto, retired
+                                      last_ver + the EpochLog fields
     <root>/<tagger>/state/epoch=<scope>/*.parquet
                                       rows: (id, _ver, attr...)
 
-Versioning: every append claims ``_ver = last_ver + 1`` under the
-manifest CAS *before* writing data (the claimed-auto pattern), so two
-racing writers produce distinct versions or one loud
-``ConcurrentWriterError`` — never an interleaved overwrite. Reader
-truth is ``max(struct(_ver, attrs))`` per id: a torn append (data
-written, commit stamp lost) is either invisible (scope dir incomplete
-→ spark skips no committed data: parquet dirs are written atomically
-per file, and a replay overwrites the same scope) or fully resolved;
-a streaming replay of epoch N claims a fresh _ver but writes equal
-rows into the SAME scope dir (mode=overwrite), so latest-wins picks
-content identical to the first attempt.
+Versioning: every append claims ``_ver = last_ver + 1`` in the same
+CAS'd claim as its epoch scope (``genstore.EpochLog.begin``, whose
+docstring holds the scope/commit/compaction protocol), so two racing
+writers produce distinct versions or one loud
+``ConcurrentWriterError``. Reader truth is ``max(struct(_ver,
+attrs))`` per id over the live scopes; a streaming replay of a live
+epoch claims a fresh _ver but rewrites equal rows into the SAME
+scope, so latest-wins picks content identical to the first attempt.
 
 Null semantics in the mixer follow SQL three-valued logic: a document
 with no attribute row for a tagger gets nulls after the left join,
@@ -56,25 +53,17 @@ operators/dedup_store.py.
 
 from __future__ import annotations
 
-import json
 import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from balboa_spark.operators.dedup_store import (
-    _epoch_scope,
-    _fold_candidates,
-    _scope_in_list_sql,
-    _should_compact,
-    _state_scopes,
-)
+from balboa_spark.plans.genstore import EpochLog
 
-MANIFEST = "manifest.json"
-
-#: On-disk format version for attribute namespaces.
-ATTR_FORMAT = 1
+#: On-disk format version for attribute namespaces. v2: reader truth
+#: is the manifest's live list (``genstore.EpochLog``).
+ATTR_FORMAT = 2
 
 #: Partial-match email pattern used by the built-in ``pii`` tagger —
 #: ONE definition shared by the CLI tagger, the bench item, and the
@@ -111,56 +100,14 @@ def _check_tagger_name(tagger: str) -> str:
     return t
 
 
-class _TaggerNS:
-    """One tagger's namespace: manifest + epoch-scoped state dirs.
-
-    Duck-typed to what the dedup_store scope helpers expect
-    (``spark``, ``_read_manifest``, ``_write_manifest``,
-    ``_next_epoch``) so claim/fold/trigger logic is shared, not
-    re-derived."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        self.state_path = os.path.join(path, "state")
-        man = self._read_manifest()
-        if man is not None and man.get("format") != ATTR_FORMAT:
-            raise ValueError(
-                f"attribute namespace at {path} uses on-disk format "
-                f"{man.get('format')} (this build reads {ATTR_FORMAT}); "
-                "re-tag the corpus — there is no in-place migration"
-            )
-
-    def _read_manifest(self) -> dict | None:
-        p = os.path.join(self.path, MANIFEST)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
-
-    def _write_manifest(
-        self, extra: dict | None = None, expected_seq: int | None = None
-    ) -> None:
-        from balboa_spark.plans.genstore import flip_manifest
-
-        prev = self._read_manifest() or {}
-        if expected_seq is None:
-            expected_seq = prev.get("commit_seq", 0)
-        man = {**prev, "format": ATTR_FORMAT}
-        if extra:
-            man.update(extra)
-        os.makedirs(self.path, exist_ok=True)
-        flip_manifest(self.path, man, MANIFEST, expected_seq=expected_seq)
-
-    def _next_epoch(self, state_path: str) -> int:
-        if not os.path.exists(state_path):
-            return 0
-        eps = [
-            int(d.rsplit("-", 1)[1])
-            for d in os.listdir(state_path)
-            if d.startswith("epoch=auto-") and d.rsplit("-", 1)[1].isdigit()
-        ]
-        return (max(eps) + 1) if eps else 0
+def _latest(df: DataFrame, id_col: str, cols: list[str]) -> DataFrame:
+    """Latest-wins per id: ONE ``groupBy(id).agg(max(struct(_ver,
+    attrs)))`` — ids are unique per version so groups are tiny, the
+    aggregate is map-side combinable, and no window partitions
+    anything skewable. The winner is the ``_s`` struct column."""
+    return df.groupBy(id_col).agg(
+        F.max(F.struct(F.col("_ver"), *[F.col(c) for c in cols])).alias("_s")
+    )
 
 
 class AttributeStore:
@@ -171,36 +118,29 @@ class AttributeStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        self._namespaces: dict[str, _TaggerNS] = {}
+        self._namespaces: dict[str, EpochLog] = {}
 
     # -- namespaces ---------------------------------------------------
 
-    def _ns(self, tagger: str) -> _TaggerNS:
+    def _ns(self, tagger: str) -> EpochLog:
         t = _check_tagger_name(tagger)
         if t not in self._namespaces:
-            self._namespaces[t] = _TaggerNS(
-                self.spark, os.path.join(self.path, t)
+            self._namespaces[t] = EpochLog(
+                self.spark, os.path.join(self.path, t), "state", ATTR_FORMAT
             )
         return self._namespaces[t]
 
     def taggers(self) -> list[str]:
-        """Namespaces with committed DATA, sorted. The manifest alone
-        is not enough: write() claims its version in the manifest
-        BEFORE the parquet lands, so a first-ever write torn between
-        claim and data would otherwise list a namespace that every
-        read rejects — wedging callers (the CLI mixer's default
-        tagger list) on a crash that is supposed to be invisible."""
+        """Namespaces with committed data (a non-empty live list),
+        sorted: a first-ever write torn after its claim must not list a
+        namespace that every read rejects."""
         if not os.path.exists(self.path):
             return []
-        out = []
-        for d in sorted(os.listdir(self.path)):
-            if (
-                _TAGGER_RE.fullmatch(d)
-                and os.path.exists(os.path.join(self.path, d, MANIFEST))
-                and os.path.isdir(os.path.join(self.path, d, "state"))
-            ):
-                out.append(d)
-        return out
+        return [
+            d
+            for d in sorted(os.listdir(self.path))
+            if _TAGGER_RE.fullmatch(d) and self._ns(d).live()
+        ]
 
     # -- writes -------------------------------------------------------
 
@@ -212,7 +152,7 @@ class AttributeStore:
         epoch_id: int | None = None,
         stream_id: str = "default",
         max_live_epochs: int | None = None,
-    ) -> int:
+    ) -> int | None:
         """Append one tagger batch: every non-id column of ``attrs``
         becomes an attribute. Returns the claimed version.
 
@@ -224,12 +164,9 @@ class AttributeStore:
         are not orderable in Spark).
 
         ``epoch_id``/``stream_id`` scope streaming appends exactly like
-        the dedup stores: a foreachBatch replay overwrites its own
-        scope dir, so torn appends self-heal; one-shot callers get a
-        CAS-claimed ``auto-N`` scope. ``max_live_epochs`` arms the
-        size-triggered fold so a long-running tagger stream cannot
-        accumulate unbounded partition dirs."""
-        ns = self._ns(tagger)
+        the dedup stores; ``max_live_epochs`` arms the size-triggered
+        fold. Returns None for a replay of an epoch already folded."""
+        log = self._ns(tagger)
         cols = sorted(c for c in attrs.columns if c != id_col)
         if id_col not in attrs.columns or not cols:
             raise ValueError(
@@ -246,52 +183,36 @@ class AttributeStore:
                     "are not orderable, so latest-wins resolution cannot "
                     "compare them; store a sorted array of entries instead"
                 )
-        # ONE manifest read serves the schema check AND the claim —
-        # the claim's CAS then guards the whole read-modify-write
-        cur = ns._read_manifest() or {}
-        if cur.get("columns") is not None:
-            if cur.get("columns") != cols or cur.get("id_col") != id_col:
+        claimed: dict = {}
+
+        def claim(man: dict) -> dict:
+            # the schema check and the version claim read the same
+            # manifest the scope claim's CAS guards
+            if man.get("columns") is not None and (
+                man["columns"] != cols or man["id_col"] != id_col
+            ):
                 raise ValueError(
                     f"tagger {tagger!r} was committed with id "
-                    f"{cur.get('id_col')!r} + columns {cur.get('columns')}, "
+                    f"{man['id_col']!r} + columns {man['columns']}, "
                     f"this write carries {id_col!r} + {cols}; a new schema "
                     "needs a new tagger name"
                 )
-        # claim the version (and the auto scope) under the CAS BEFORE
-        # any data is written — racing writers get distinct versions or
-        # a loud ConcurrentWriterError, never an interleaved overwrite
-        ver = int(cur.get("last_ver", 0)) + 1
-        claim: dict = {
-            "last_ver": ver,
-            "id_col": id_col,
-            "columns": cols,
-        }
-        if epoch_id is None:
-            # _claim_auto_scope stamps claimed_auto itself; fold the
-            # version claim into the same CAS write by pre-merging
-            expected = cur.get("commit_seq", 0)
-            n = max(
-                ns._next_epoch(ns.state_path),
-                int(cur.get("claimed_auto", -1)) + 1,
+            claimed.update(
+                last_ver=int(man.get("last_ver", 0)) + 1,
+                id_col=id_col,
+                columns=cols,
             )
-            claim["claimed_auto"] = n
-            ns._write_manifest(extra=claim, expected_seq=expected)
-            scope = f"auto-{n}"
-        else:
-            scope = _epoch_scope(epoch_id, stream_id)
-            ns._write_manifest(
-                extra=claim, expected_seq=cur.get("commit_seq", 0)
-            )
-        (
-            attrs.select(F.col(id_col), F.lit(ver).alias("_ver"), *cols)
-            .write.mode("overwrite")
-            .parquet(os.path.join(ns.state_path, f"epoch={scope}"))
+            return claimed
+
+        scope = log.begin(epoch_id, stream_id, claim)
+        if scope is None:
+            return None
+        ver = claimed["last_ver"]
+        log.write(
+            attrs.select(F.col(id_col), F.lit(ver).alias("_ver"), *cols), scope
         )
-        # data lands, THEN the commit stamp (store-wide order)
-        ns._write_manifest()
-        if max_live_epochs is not None and _should_compact(
-            ns, ns.state_path, max_live_epochs
-        ):
+        log.commit(scope)
+        if max_live_epochs is not None and log.should_compact(max_live_epochs):
             self.compact(tagger)
         return ver
 
@@ -303,13 +224,10 @@ class AttributeStore:
         prefix: bool = True,
         cols: list[str] | None = None,
     ) -> DataFrame:
-        """The tagger's latest-wins attribute relation: one row per
-        document id, newest version's values. Resolution is ONE
-        ``groupBy(id).agg(max(struct(_ver, attrs...)))`` — ids are
-        unique per version so groups are tiny, the aggregate is
-        map-side combinable, and no window partitions anything
-        skewable. ``prefix`` namespaces the attribute columns as
-        ``<tagger>__<col>`` for the mixer.
+        """The tagger's latest-wins attribute relation (``_latest``):
+        one row per document id, newest version's values. ``prefix``
+        namespaces the attribute columns as ``<tagger>__<col>`` for
+        the mixer.
 
         ``cols`` restricts the read to a subset of the tagger's
         attributes: a wide tagger (dozens of signals) mixed on two of
@@ -318,9 +236,10 @@ class AttributeStore:
         columns, so parquet column pruning reaches the scan
         (plan-tested). Winner selection is unchanged (``_ver`` alone
         decides between committed versions)."""
-        ns = self._ns(tagger)
-        man = ns._read_manifest()
-        if man is None or not os.path.exists(ns.state_path):
+        log = self._ns(tagger)
+        man = log.manifest()
+        df = log.read()
+        if df is None:
             raise ValueError(f"tagger {tagger!r} has no committed attributes")
         id_col, all_cols = man["id_col"], man["columns"]
         if cols is None:
@@ -333,18 +252,8 @@ class AttributeStore:
                     f"committed columns: {all_cols}"
                 )
             cols = [c for c in all_cols if c in set(cols)]
-        df = self.spark.read.parquet(ns.state_path)
-        resolved = (
-            df.groupBy(id_col)
-            .agg(
-                F.max(
-                    F.struct(F.col("_ver"), *[F.col(c) for c in cols])
-                ).alias("_s")
-            )
-            .select(
-                F.col(id_col),
-                *[F.col(f"_s.{c}").alias(c) for c in cols],
-            )
+        resolved = _latest(df, id_col, cols).select(
+            F.col(id_col), *[F.col(f"_s.{c}").alias(c) for c in cols]
         )
         if prefix:
             t = _check_tagger_name(tagger)
@@ -369,7 +278,7 @@ class AttributeStore:
         joined = docs.select(F.col(id_col))
         for t, tcols in sel.items():
             rel = self.read(t, prefix=True, cols=tcols)
-            ns_id = self._ns(t)._read_manifest()["id_col"]
+            ns_id = self._ns(t).manifest()["id_col"]
             if ns_id != id_col:
                 rel = rel.withColumnRenamed(ns_id, id_col)
             joined = joined.join(rel, id_col, "left")
@@ -409,7 +318,7 @@ class AttributeStore:
             attr_cols: list[str] = []
             for t, tcols in sel.items():
                 rel = self.read(t, prefix=True, cols=tcols)
-                ns_id = self._ns(t)._read_manifest()["id_col"]
+                ns_id = self._ns(t).manifest()["id_col"]
                 if ns_id != id_col:
                     rel = rel.withColumnRenamed(ns_id, id_col)
                 attr_cols += [c for c in rel.columns if c != id_col]
@@ -476,71 +385,18 @@ class AttributeStore:
     # -- maintenance --------------------------------------------------
 
     def compact(self, tagger: str, vacuum: bool = False) -> int:
-        """Fold a tagger's committed epoch dirs into one pruned
-        ``base-<g>`` generation: within the folded scopes, only each
-        id's max-``struct(_ver, attrs)`` row survives (superseded
-        versions are dropped — safe even when a NEWER version lives in
-        a non-folded dir, since latest-wins at read still prefers it).
-        Same grace contract as the dedup stores: folded dirs go on the
-        manifest ``retired`` list for one generation so in-flight
-        reader plans keep resolving, and the next compaction (or
-        ``vacuum=True``) reclaims them."""
-        import shutil
-
-        ns = self._ns(tagger)
-        man = ns._read_manifest()
-        if man is None:
-            return 0
-        id_col, cols = man["id_col"], man["columns"]
-        scopes = _state_scopes(ns.state_path)
-        expected = man.get("commit_seq", 0)
-        on_disk = set(scopes)
-        retired_prev = [s for s in (man.get("retired") or []) if s in on_disk]
-        fold = [
-            s for s in _fold_candidates(scopes) if s not in set(retired_prev)
-        ]
-        if len(fold) < 2:
-            if retired_prev:
-                ns._write_manifest(
-                    extra={"retired": []}, expected_seq=expected
-                )
-                for s in retired_prev:
-                    shutil.rmtree(
-                        os.path.join(ns.state_path, f"epoch={s}"),
-                        ignore_errors=True,
-                    )
-            return 0
-        gen = 1 + max(
-            (
-                int(s.rpartition("-")[2])
-                for s in scopes
-                if s.startswith("base-")
-            ),
-            default=0,
-        )
-        folded = (
-            self.spark.read.parquet(ns.state_path)
-            .where(F.expr(_scope_in_list_sql(fold)))
-            .groupBy(id_col)
-            .agg(
-                F.max(
-                    F.struct(F.col("_ver"), *[F.col(c) for c in cols])
-                ).alias("_s")
-            )
-            .select(
+        """Fold a tagger's committed epochs into one pruned ``base-<g>``
+        (``EpochLog.compact``): within the folded scopes only each id's
+        max-``struct(_ver, attrs)`` row survives — safe even when a
+        NEWER version lives in a non-folded scope, since latest-wins at
+        read still prefers it. Returns #scopes folded."""
+        log = self._ns(tagger)
+        man = log.manifest()
+        id_col, cols = man.get("id_col"), man.get("columns")
+        return log.compact(
+            lambda df: _latest(df, id_col, cols).select(
                 F.col(id_col),
-                F.col("_s._ver").alias("_ver"),
-                *[F.col(f"_s.{c}").alias(c) for c in cols],
-            )
+                *[F.col(f"_s.{c}").alias(c) for c in ["_ver"] + cols],
+            ),
+            vacuum,
         )
-        folded.write.mode("overwrite").parquet(
-            os.path.join(ns.state_path, f"epoch=base-{gen}")
-        )
-        ns._write_manifest(
-            extra={"retired": [] if vacuum else fold}, expected_seq=expected
-        )
-        for s in retired_prev + (fold if vacuum else []):
-            shutil.rmtree(
-                os.path.join(ns.state_path, f"epoch={s}"), ignore_errors=True
-            )
-        return len(fold)

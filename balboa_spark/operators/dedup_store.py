@@ -21,247 +21,73 @@ O(num_bands × corpus) small rows, appended partitioned by band_idx.
 On a cluster, bucketing it by band_hash (bucketBy + saveAsTable)
 upgrades step 2 to a shuffle-free bucketed join of a tiny batch side.
 
-Crash semantics: appends are IDEMPOTENT IN EFFECT — re-appending a
-batch's bands after a replay only duplicates band rows, and a
-duplicate band changes no collision decision (the join is a semi
-filter). So plain at-least-once file appends give effectively-once
-dedup DECISIONS, without the epoch gate ObservationStore needs for
-its count-additive merge.
-
-BUT idempotent decisions alone do not close the TORN-BATCH window
-(r10; ordered r7-r9): in the streaming composition
+Replay safety: the streaming composition
 ``lambda batch, e: sink(store.process_batch(batch, epoch_id=e))``
-a crash AFTER the store append but BEFORE the sink commit replays
-the batch against a history that already contains the batch's own
-hashes — every document then collides with itself, the replay
-output is empty, and the batch is silently LOST from the sink
-(at-most-once, not effectively-once). The fix is epoch-scoped
-state: pass ``epoch_id`` and appends land under an
-``epoch=<id>`` partition directory (overwritten on replay, so a
-torn append self-heals), while decisions read history EXCLUDING
-the current epoch — the replay sees exactly the history the first
-attempt saw, and the kept-set is replay-stable no matter where the
-previous attempt died. Without ``epoch_id`` (one-shot batch use)
-appends land under a fresh auto-numbered epoch and nothing is
-excluded — the old behavior.
-
-This composes with streaming ingest via foreachBatch:
-``lambda batch, e: sink(store.process_batch(batch, epoch_id=e))``.
+can crash after the store commit but before the sink commit, and the
+replay then runs against a history that already holds the batch's
+own hashes — every document would collide with itself and vanish
+from the sink. So every store decides against its history EXCLUDING
+the batch's own stream-epoch scope: the replay sees exactly the
+history the first attempt saw and keeps the identical rows. Without
+``epoch_id`` (one-shot batch use) appends land in a fresh ``auto``
+scope and nothing is excluded. Scopes, the live list readers see,
+the claim/commit order, compaction and the commit-seq CAS are
+``genstore.EpochLog``'s protocol (its docstring); a compaction here
+keeps the distinct history rows, since duplicates change no semi/anti
+join decision.
 """
 
 from __future__ import annotations
-
-import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from balboa_spark.operators import dedup
+from balboa_spark.plans.genstore import EpochLog
 
-MANIFEST = "manifest.json"
-
-#: On-disk format version. v2 (r10): epoch state dirs are scoped
-#: strings ``epoch=<stream>-<n>`` so two StreamingQueries (each with
-#: its own foreachBatch epoch counter) or a checkpoint-reset restart
-#: can never overwrite each other's committed history — the
-#: destructive-epoch-reuse bug a bare integer epoch invites. Stores
-#: written by the unversioned pre-r10 layout are rejected with a
-#: rebuild error (no silent partition-structure conflicts).
-STORE_FORMAT = 2
+#: On-disk format version. v3: reader truth is the manifest's live
+#: list (``genstore.EpochLog``), not the epoch dirs on disk; older
+#: stores are rejected with a rebuild error.
+STORE_FORMAT = 3
 
 
-def _epoch_scope(epoch_id: int, stream_id: str) -> str:
-    """Partition value for one stream's epoch: sanitized stream id +
-    the numeric epoch. Sanitization keeps the value filesystem- and
-    partition-encoding-friendly; distinct streams that sanitize equal
-    (a 40-char prefix collision of punctuation-heavy ids) fall back
-    to the single-writer contract. ``auto`` (one-shot callers' fresh
-    epochs) and ``base`` (compaction generations) are RESERVED: a
-    stream named either would write epoch=auto-N / base-N and silently
-    overwrite committed history under the other writer's numbering."""
-    import re as _re
+class _EpochHistory:
+    """The shared shell of the three dedup stores: one ``EpochLog``
+    over ``<path>/<state>`` partitioned by ``part_col``, folded to its
+    distinct rows."""
 
-    tag = _re.sub(r"[^A-Za-z0-9_.]", "_", stream_id)[:40] or "default"
-    if tag in ("auto", "base"):
-        raise ValueError(
-            f"stream_id {stream_id!r} sanitizes to reserved scope "
-            f"{tag!r} (auto = one-shot epochs, base = compaction "
-            "generations) — pick another stream id"
+    state: str
+    part_col: str
+
+    def __init__(self, spark: SparkSession, path: str, config: dict):
+        self.spark = spark
+        self.path = path
+        self.log = EpochLog(
+            spark, path, self.state, STORE_FORMAT, config, self.part_col
         )
-    return f"{tag}-{int(epoch_id)}"
+
+    def _land(
+        self, scope: str | None, rows: DataFrame, max_live_epochs: int | None
+    ) -> None:
+        """Write + commit a claimed scope (None: a folded replay writes
+        nothing), then run the size trigger."""
+        if scope is not None:
+            self.log.write(rows, scope)
+            self.log.commit(scope)
+        if max_live_epochs is not None and self.log.should_compact(
+            max_live_epochs
+        ):
+            self.compact()
+
+    def compact(self, vacuum: bool = False) -> int:
+        """Fold committed epochs into one distinct-row ``base-<g>``
+        (``EpochLog.compact``). Returns #scopes folded."""
+        return self.log.compact(lambda df: df.drop("epoch").distinct(), vacuum)
 
 
-def _state_scopes(state_path: str) -> list[str]:
-    """Epoch scopes present on disk (partition-dir names). Restricted
-    to the charset the writers produce — a foreign directory name
-    must neither be folded nor reach the SQL IN-list below."""
-    import re as _re
+class MinHashDedupStore(_EpochHistory):
+    state, part_col = "bands", "band_idx"
 
-    if not os.path.exists(state_path):
-        return []
-    return [
-        d[len("epoch="):]
-        for d in os.listdir(state_path)
-        if d.startswith("epoch=")
-        and _re.fullmatch(r"[A-Za-z0-9_.-]+", d[len("epoch="):])
-    ]
-
-
-def _fold_candidates(scopes: list[str]) -> list[str]:
-    """Scopes a compaction may fold: every ``auto``/``base`` scope,
-    plus each stream's epochs STRICTLY below its latest. The latest
-    epoch per stream must stay an individual directory because it is
-    the only epoch foreachBatch can still replay (epoch N+1 starts
-    only after N's sink committed) and replay safety depends on
-    excluding exactly that scope from history — folding it into a
-    base would make the replay collide with its own hashes."""
-    by_tag: dict[str, list[int]] = {}
-    for s in scopes:
-        tag, _, n = s.rpartition("-")
-        if not tag or not n.isdigit():
-            continue  # defensively skip foreign dirs
-        by_tag.setdefault(tag, []).append(int(n))
-    fold: list[str] = []
-    for tag, ns in by_tag.items():
-        keep_latest = tag not in ("auto", "base")
-        ns = sorted(ns)[:-1] if keep_latest else sorted(ns)
-        fold.extend(f"{tag}-{n}" for n in ns)
-    return fold
-
-
-def _scope_in_list_sql(scopes: list[str]) -> str:
-    """One JVM-parsed IN-list over charset-safe scopes (the psl.py
-    Py4J-marshalling lesson; scopes are [A-Za-z0-9_.-] by
-    construction)."""
-    return "epoch IN (" + ", ".join(f"'{s}'" for s in scopes) + ")"
-
-
-def _compact_epochs(
-    store, state_path: str, data_cols: list[str], part_col: str, vacuum: bool
-) -> int:
-    """Shared epoch-folding compaction for both dedup stores: fold the
-    committed epoch directories (``_fold_candidates`` — never a
-    stream's latest epoch, which must stay individually excludable for
-    torn-batch replay) into one distinct-row ``base-<g>`` generation.
-
-    Correctness during and after the fold is free: both stores consume
-    history through semi/anti joins, for which duplicate rows (base +
-    not-yet-reclaimed folded dirs) change no decision. Folded dirs get
-    a ONE-GENERATION grace via the manifest's ``retired`` list
-    (in-flight reader plans still resolve their files); the NEXT
-    compaction reclaims them — mirroring ObservationStore's
-    retired_deltas — unless ``vacuum=True`` deletes them immediately.
-    Returns the number of directories folded."""
-    import shutil
-
-    scopes = _state_scopes(state_path)
-    man = store._read_manifest() or {}
-    expected = man.get("commit_seq", 0)
-    on_disk = set(scopes)
-    retired_prev = [s for s in (man.get("retired") or []) if s in on_disk]
-    fold = [s for s in _fold_candidates(scopes) if s not in set(retired_prev)]
-    if len(fold) < 2:
-        # nothing worth folding — still reclaim expired retirees
-        if retired_prev:
-            store._write_manifest(extra={"retired": []}, expected_seq=expected)
-            for s in retired_prev:
-                shutil.rmtree(
-                    os.path.join(state_path, f"epoch={s}"), ignore_errors=True
-                )
-        return 0
-    gen = 1 + max(
-        (
-            int(s.rpartition("-")[2])
-            for s in scopes
-            if s.startswith("base-")
-        ),
-        default=0,
-    )
-    folded = (
-        store.spark.read.parquet(state_path)
-        .where(F.expr(_scope_in_list_sql(fold)))
-        .select(*data_cols)
-        .distinct()
-    )
-    (
-        folded.repartition(part_col)
-        .write.mode("overwrite")
-        .partitionBy(part_col)
-        .parquet(os.path.join(state_path, f"epoch=base-{gen}"))
-    )
-    store._write_manifest(
-        extra={"retired": [] if vacuum else fold}, expected_seq=expected
-    )
-    for s in retired_prev + (fold if vacuum else []):
-        shutil.rmtree(os.path.join(state_path, f"epoch={s}"), ignore_errors=True)
-    return len(fold)
-
-
-def _live_scope_count(store, state_path: str) -> int:
-    """Epoch dirs a reader folds on scan (on-disk scopes minus the
-    retired ones) — the quantity the auto-compaction trigger bounds."""
-    retired = set((store._read_manifest() or {}).get("retired") or [])
-    return len([s for s in _state_scopes(state_path) if s not in retired])
-
-
-def _should_compact(store, state_path: str, max_live: int) -> bool:
-    """Size trigger with the near-no-op guard (r12): fire only when
-    the live scope count exceeds the cap AND compact() would actually
-    do something — fold >= 2 directories or reclaim expired retirees.
-    With ``max_live`` configured below the irreducible floor (one
-    base + each stream's latest epoch, which must stay individually
-    excludable for torn-batch replay), the bare count comparison
-    would otherwise run a manifest-CAS write + directory listing as a
-    no-op on EVERY micro-batch."""
-    man = store._read_manifest() or {}
-    retired = set(man.get("retired") or [])
-    scopes = _state_scopes(state_path)
-    if len([s for s in scopes if s not in retired]) <= max_live:
-        return False
-    fold = [s for s in _fold_candidates(scopes) if s not in retired]
-    return len(fold) >= 2 or bool(retired & set(scopes))
-
-
-def _claim_auto_scope(store, state_path: str) -> str:
-    """Mint and CLAIM a fresh ``auto-N`` scope for a one-shot writer.
-
-    Directory numbering alone invites a two-writer collision: two
-    concurrent one-shot callers list the same epoch dirs, both mint
-    ``auto-N``, and the second overwrite silently replaces the
-    first's committed parquet — with no CAS to catch it, because
-    these stores' manifests carry no live list (reader truth is the
-    partition dirs). The claim closes that hole: N is
-    ``max(dir-derived next, last manifest claim + 1)`` and is stamped
-    into the manifest under the commit-seq CAS BEFORE any data is
-    written, so the loser of an interleaved read-modify-write raises
-    ``ConcurrentWriterError`` instead of reusing the winner's scope —
-    the loud-failure single-writer contract the live-list stores got
-    in r11, extended to the dir-truth stores."""
-    man = store._read_manifest() or {}
-    expected = man.get("commit_seq", 0)
-    n = max(
-        store._next_epoch(state_path), int(man.get("claimed_auto", -1)) + 1
-    )
-    store._write_manifest(extra={"claimed_auto": n}, expected_seq=expected)
-    return f"auto-{n}"
-
-
-def _check_format(path: str) -> None:
-    man_path = os.path.join(path, MANIFEST)
-    if os.path.exists(man_path):
-        with open(man_path) as f:
-            man = json.load(f)
-        if man.get("format") != STORE_FORMAT:
-            raise ValueError(
-                f"store at {path} uses on-disk format "
-                f"{man.get('format', 1)} (this build reads "
-                f"{STORE_FORMAT}); rebuild it by re-processing the "
-                "corpus — there is no in-place migration"
-            )
-
-
-class MinHashDedupStore:
     def __init__(
         self,
         spark: SparkSession,
@@ -270,80 +96,15 @@ class MinHashDedupStore:
         num_bands: int = 4,
         k: int = 3,
     ):
-        self.spark = spark
-        self.path = path
-        self.bands_path = os.path.join(path, "bands")
-        _check_format(path)
-        man = self._read_manifest()
-        if man is not None:
-            if (man["num_hashes"], man["num_bands"], man["k"]) != (
-                num_hashes,
-                num_bands,
-                k,
-            ):
-                raise ValueError(
-                    f"store at {path} was built with "
-                    f"{(man['num_hashes'], man['num_bands'], man['k'])}, "
-                    f"got {(num_hashes, num_bands, k)}"
-                )
+        super().__init__(
+            spark, path, {"num_hashes": num_hashes, "num_bands": num_bands, "k": k}
+        )
         self.num_hashes = num_hashes
         self.num_bands = num_bands
         self.k = k
 
-    def _read_manifest(self) -> dict | None:
-        man_path = os.path.join(self.path, MANIFEST)
-        if not os.path.exists(man_path):
-            return None
-        with open(man_path) as f:
-            return json.load(f)
-
-    def _write_manifest(
-        self, extra: dict | None = None, expected_seq: int | None = None
-    ) -> None:
-        """Atomic manifest flip (tmp + os.replace) carrying the config
-        plus any state fields (``retired``), with the commit-seq CAS
-        when ``expected_seq`` is armed — a concurrent writer's lost
-        update raises instead of silently dropping state
-        (genstore.flip_manifest)."""
-        from balboa_spark.plans.genstore import flip_manifest
-
-        prev = self._read_manifest() or {}
-        if expected_seq is None:
-            # self-derived CAS: every write bumps the seq, so a wider
-            # read-modify-write window (compact) passing its own
-            # expected_seq sees appends land in between
-            expected_seq = prev.get("commit_seq", 0)
-        man = {
-            **prev,
-            "format": STORE_FORMAT,
-            "num_hashes": self.num_hashes,
-            "num_bands": self.num_bands,
-            "k": self.k,
-        }
-        if extra:
-            man.update(extra)
-        flip_manifest(self.path, man, MANIFEST, expected_seq=expected_seq)
-
-    def _next_epoch(self, state_path: str) -> int:
-        """Fresh auto-epoch for one-shot batch callers: one past the
-        largest existing ``auto-N`` epoch directory."""
-        if not os.path.exists(state_path):
-            return 0
-        eps = [
-            int(d.rsplit("-", 1)[1])
-            for d in os.listdir(state_path)
-            if d.startswith("epoch=auto-") and d.rsplit("-", 1)[1].isdigit()
-        ]
-        return (max(eps) + 1) if eps else 0
-
     def bands(self, exclude_scope: str | None = None) -> DataFrame | None:
-        if not os.path.exists(self.bands_path):
-            return None
-        df = self.spark.read.parquet(self.bands_path)
-        if exclude_scope is not None and "epoch" in df.columns:
-            # partition-pruned: epoch is a partition column
-            df = df.filter(F.col("epoch") != exclude_scope)
-        return df
+        return self.log.read(exclude=exclude_scope)
 
     def _band(self, df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         return dedup.minhash_bands(
@@ -361,12 +122,9 @@ class MinHashDedupStore:
         """Batch rows that near-dup neither a stored document nor an
         earlier (smaller-id) row of the same batch. ``(stream_id,
         epoch_id)`` excludes that stream-epoch's own bands from
-        history so a replayed epoch makes the identical decisions
-        (torn-batch safety); epochs are scoped per stream so another
-        feeder's (or a checkpoint-reset restart's) equal epoch number
-        can never be mistaken for this one."""
+        history so a replayed epoch makes the identical decisions."""
         nb = self._band(batch, text_col, id_col)
-        scope = None if epoch_id is None else _epoch_scope(epoch_id, stream_id)
+        scope = None if epoch_id is None else EpochLog.scope(epoch_id, stream_id)
         stored = self.bands(exclude_scope=scope)
         if stored is not None:
             hits = (
@@ -391,35 +149,10 @@ class MinHashDedupStore:
         stream_id: str = "default",
     ) -> None:
         """Write the kept documents' bands under their stream-scoped
-        epoch directory (mode=overwrite: a replay of the same epoch
-        rewrites the same state, so a torn previous append
-        self-heals; a duplicate band row would change no collision
-        decision anyway)."""
-        if epoch_id is None:
-            scope = _claim_auto_scope(self, self.bands_path)
-        else:
-            scope = _epoch_scope(epoch_id, stream_id)
-            if self._read_manifest() is None:
-                # FIRST-ever epoch write: the config manifest must
-                # exist before any data lands, or a crash between the
-                # parquet write and the commit stamp leaves live band
-                # history whose num_hashes/num_bands/k guard never
-                # landed — a reopen with different parameters would
-                # then pass _check_format and append incompatible
-                # hashes (r12 review). Subsequent appends keep the
-                # data-then-stamp order (the stamp is just a seq bump).
-                self._write_manifest()
-        (
-            self._band(kept, text_col, id_col)
-            .repartition("band_idx")
-            .write.mode("overwrite")
-            .partitionBy("band_idx")
-            .parquet(os.path.join(self.bands_path, f"epoch={scope}"))
-        )
-        if epoch_id is not None:
-            # data lands, THEN the manifest commits (store-wide order;
-            # the auto path stamped at claim time)
-            self._write_manifest()
+        epoch (a replay overwrites the same scope; a duplicate band row
+        would change no collision decision anyway)."""
+        scope = self.log.begin(epoch_id, stream_id)
+        self._land(scope, self._band(kept, text_col, id_col), None)
 
     def process_batch(
         self,
@@ -434,33 +167,18 @@ class MinHashDedupStore:
         the dedup decision is computed once, not re-derived by both the
         band append and the caller's sink). Pass the foreachBatch
         ``epoch_id`` (plus the stream's id when several queries share
-        the store) for replay-stable decisions across the torn-batch
-        window (module docstring). ``max_live_epochs`` arms
-        size-triggered auto-compaction: a long stream otherwise
-        accumulates one partition dir per micro-batch and every
-        filter_new pays the partition-discovery + small-file cost."""
+        the store) for replay-stable decisions; ``max_live_epochs`` arms
+        the size-triggered compaction. The scope is claimed before the
+        history read, so a writer committing in between raises."""
+        scope = self.log.begin(epoch_id, stream_id)
         kept = self.filter_new(
             batch, text_col, id_col, epoch_id=epoch_id, stream_id=stream_id
         ).localCheckpoint(eager=True)
-        self.add(kept, text_col, id_col, epoch_id=epoch_id, stream_id=stream_id)
-        if max_live_epochs is not None and _should_compact(
-            self, self.bands_path, max_live_epochs
-        ):
-            self.compact()
+        self._land(scope, self._band(kept, text_col, id_col), max_live_epochs)
         return kept
 
-    def compact(self, vacuum: bool = False) -> int:
-        """Fold committed epoch dirs into one ``base-<g>`` generation
-        (distinct band rows — duplicates change no collision decision,
-        so the fold is safe at any point). See ``_compact_epochs`` for
-        the grace/retirement contract. Returns #dirs folded."""
-        return _compact_epochs(
-            self, self.bands_path, ["band_idx", "band_hash", "id"],
-            "band_idx", vacuum,
-        )
 
-
-class ExactDedupStore:
+class ExactDedupStore(_EpochHistory):
     """Incremental EXACT document dedup against a persisted
     fingerprint history — the cheapest cross-batch dedup (one md5 per
     document, no banding): a batch document is dropped iff its
@@ -475,42 +193,15 @@ class ExactDedupStore:
     ``lm.ccnet_pipeline``'s dedup stage — this store is its streaming
     twin.
 
-    Replay safety is epoch-scoped like the other dedup stores: with
-    ``epoch_id`` passed, decisions exclude the current stream-epoch's
-    own fingerprints and the epoch write is an overwrite, so a torn
-    batch replays to the identical kept-set. ``compact()`` /
-    ``max_live_epochs`` fold committed epochs with the shared
-    one-generation grace (``_compact_epochs``)."""
+    Replay safety and compaction: module docstring."""
+
+    state, part_col = "fps", "bucket"
 
     def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        self.fp_path = os.path.join(path, "fps")
-        _check_format(path)
-
-    _read_manifest = MinHashDedupStore._read_manifest
-    _next_epoch = MinHashDedupStore._next_epoch
-
-    def _write_manifest(
-        self, extra: dict | None = None, expected_seq: int | None = None
-    ) -> None:
-        from balboa_spark.plans.genstore import flip_manifest
-
-        prev = self._read_manifest() or {}
-        if expected_seq is None:
-            expected_seq = prev.get("commit_seq", 0)
-        man = {**prev, "format": STORE_FORMAT}
-        if extra:
-            man.update(extra)
-        flip_manifest(self.path, man, MANIFEST, expected_seq=expected_seq)
+        super().__init__(spark, path, {})
 
     def fingerprints(self, exclude_scope: str | None = None) -> DataFrame | None:
-        if not os.path.exists(self.fp_path):
-            return None
-        df = self.spark.read.parquet(self.fp_path)
-        if exclude_scope is not None and "epoch" in df.columns:
-            df = df.filter(F.col("epoch") != exclude_scope)
-        return df
+        return self.log.read(exclude=exclude_scope)
 
     @staticmethod
     def _fp(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -543,8 +234,8 @@ class ExactDedupStore:
         """Return the batch rows that survive exact dedup (keep-first
         by arrival, then by lowest id within the batch) and append the
         survivors' NEW fingerprints under the stream-scoped epoch."""
+        scope = self.log.begin(epoch_id, stream_id)
         fps = self._fp(batch, text_col, id_col).localCheckpoint(eager=True)
-        scope = None if epoch_id is None else _epoch_scope(epoch_id, stream_id)
         stored = self.fingerprints(exclude_scope=scope)
         if stored is not None:
             fresh = fps.join(stored, ["bucket", "_h"], "left_anti")
@@ -561,42 +252,15 @@ class ExactDedupStore:
             .select("id", "bucket", "_h")
             .localCheckpoint(eager=True)  # decide before the append job
         )
-        new_fps = kept_ids.select("bucket", "_h").distinct()
-        if epoch_id is None:
-            ep_scope = _claim_auto_scope(self, self.fp_path)
-        else:
-            ep_scope = scope
-            if self._read_manifest() is None:
-                # first-ever epoch write: config manifest BEFORE data
-                # (see MinHashDedupStore.add — r12 review)
-                self._write_manifest()
-        (
-            new_fps.repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(self.fp_path, f"epoch={ep_scope}"))
+        self._land(
+            scope, kept_ids.select("bucket", "_h").distinct(), max_live_epochs
         )
-        if epoch_id is not None:
-            # data lands, THEN the manifest commits (the store-wide
-            # ordering; the auto path stamped at claim time, which must
-            # precede the write by nature of the claim)
-            self._write_manifest()
-        out = batch.join(
+        return batch.join(
             kept_ids.select(F.col("id").alias(id_col)), [id_col], "left_semi"
         )
-        if max_live_epochs is not None and _should_compact(
-            self, self.fp_path, max_live_epochs
-        ):
-            self.compact()
-        return out
-
-    def compact(self, vacuum: bool = False) -> int:
-        return _compact_epochs(
-            self, self.fp_path, ["bucket", "_h"], "bucket", vacuum
-        )
 
 
-class SpanDedupStore:
+class SpanDedupStore(_EpochHistory):
     """Incremental EXACT span dedup against a persisted window-hash
     history — the cross-batch twin of corpus.span_dedup (keep-first
     Lee et al. semantics over the arrival stream): a batch token span
@@ -609,74 +273,20 @@ class SpanDedupStore:
     exact-dedup price, same as the batch operator's shuffle).
 
     History records hashes of the INPUT stream (first-seen text), not
-    of the rewritten output. Replay safety is EPOCH-SCOPED (r10, see
-    module docstring): with ``epoch_id`` passed, decisions exclude the
-    current epoch's own hashes and the epoch write is an overwrite —
-    a replayed epoch reproduces the one-shot output byte-for-byte no
-    matter where the previous attempt crashed (the torn-batch test
-    pins it). Without ``epoch_id`` a replayed batch's windows all hit
-    history and its documents vanish from the replay output — the
-    decisions stay once-only, but the DELIVERY is lost; one-shot
-    batch callers don't replay, streaming callers must pass the
-    epoch.
-
-    Concurrency: one writer (one streaming query) per store path —
-    concurrent parquet appends share a _temporary staging dir and can
-    clobber each other; multiple feeds should union upstream or
-    serialize externally (same single-writer contract as
-    MinHashDedupStore).
+    of the rewritten output. Without ``epoch_id`` a replayed batch's
+    windows all hit history and its documents vanish from the replay
+    output — the decisions stay once-only, but the DELIVERY is lost;
+    streaming callers must pass the epoch (module docstring).
     """
 
+    state, part_col = "hashes", "bucket"
+
     def __init__(self, spark: SparkSession, path: str, span_tokens: int = 16):
-        self.spark = spark
-        self.path = path
-        self.hashes_path = os.path.join(path, "hashes")
-        _check_format(path)
-        man = self._read_manifest()
-        if man is not None and man["span_tokens"] != span_tokens:
-            raise ValueError(
-                f"store at {path} was built with span_tokens="
-                f"{man['span_tokens']}, got {span_tokens}"
-            )
+        super().__init__(spark, path, {"span_tokens": span_tokens})
         self.span_tokens = span_tokens
 
-    _read_manifest = MinHashDedupStore._read_manifest
-
-    def _write_manifest(
-        self, extra: dict | None = None, expected_seq: int | None = None
-    ) -> None:
-        from balboa_spark.plans.genstore import flip_manifest
-
-        prev = self._read_manifest() or {}
-        if expected_seq is None:
-            expected_seq = prev.get("commit_seq", 0)
-        man = {
-            **prev,
-            "format": STORE_FORMAT,
-            "span_tokens": self.span_tokens,
-        }
-        if extra:
-            man.update(extra)
-        flip_manifest(self.path, man, MANIFEST, expected_seq=expected_seq)
-
-    _next_epoch = MinHashDedupStore._next_epoch
-
-    def compact(self, vacuum: bool = False) -> int:
-        """Fold committed epoch dirs into one ``base-<g>`` generation
-        (distinct window hashes — history is consumed via semi/anti
-        joins, so duplicates during the grace window change no
-        decision). Returns #dirs folded."""
-        return _compact_epochs(
-            self, self.hashes_path, ["bucket", "_h"], "bucket", vacuum
-        )
-
     def hashes(self, exclude_scope: str | None = None) -> DataFrame | None:
-        if not os.path.exists(self.hashes_path):
-            return None
-        df = self.spark.read.parquet(self.hashes_path)
-        if exclude_scope is not None and "epoch" in df.columns:
-            df = df.filter(F.col("epoch") != exclude_scope)
-        return df
+        return self.log.read(exclude=exclude_scope)
 
     def process_batch(
         self,
@@ -690,15 +300,8 @@ class SpanDedupStore:
         """Span-dedup the batch against history + itself, write the
         new window hashes under the stream-scoped epoch directory,
         return (id, n_tokens, n_removed, clean_text) for documents
-        keeping at least one token. Pass the foreachBatch
-        ``epoch_id`` (plus ``stream_id`` when several queries share
-        the store) for replay-stable decisions across the torn-batch
-        window (module docstring): history excludes the current
-        stream-epoch, and the epoch write is an overwrite, so a
-        replay after a torn append makes identical decisions and
-        rewrites identical state. ``max_live_epochs`` arms the
-        size-triggered auto-compaction (same trigger as
-        MinHashDedupStore.process_batch)."""
+        keeping at least one token. ``epoch_id``/``stream_id`` and
+        ``max_live_epochs`` as in MinHashDedupStore.process_batch."""
         from balboa_spark.operators.corpus import (
             _span_drop_covered,
             _span_non_first,
@@ -706,6 +309,7 @@ class SpanDedupStore:
         )
         from balboa_spark.operators.text import tokens
 
+        scope = self.log.begin(epoch_id, stream_id)
         staged = batch.select(
             F.col(id_col), tokens(F.col(text_col)).alias("_tk")
         ).filter(F.size("_tk") > 0)
@@ -718,7 +322,6 @@ class SpanDedupStore:
         # one materialization feeds three consumers: history semi-join,
         # batch-internal first-occurrence, and the hash append
         wins = wins.localCheckpoint(eager=True)
-        scope = None if epoch_id is None else _epoch_scope(epoch_id, stream_id)
         stored = self.hashes(exclude_scope=scope)
         if stored is not None:
             hist_removed = wins.join(
@@ -743,26 +346,5 @@ class SpanDedupStore:
             new_hashes = new_hashes.join(
                 stored, ["bucket", "_h"], "left_anti"
             )
-        if epoch_id is None:
-            ep_scope = _claim_auto_scope(self, self.hashes_path)
-        else:
-            ep_scope = scope
-            if self._read_manifest() is None:
-                # first-ever epoch write: config manifest BEFORE data
-                # (see MinHashDedupStore.add — r12 review)
-                self._write_manifest()
-        (
-            new_hashes.repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(self.hashes_path, f"epoch={ep_scope}"))
-        )
-        if epoch_id is not None:
-            # data lands, THEN the manifest commits (store-wide order;
-            # the auto path stamped at claim time)
-            self._write_manifest()
-        if max_live_epochs is not None and _should_compact(
-            self, self.hashes_path, max_live_epochs
-        ):
-            self.compact()
+        self._land(scope, new_hashes, max_live_epochs)
         return out

@@ -53,16 +53,14 @@ rare characters.
 
 from __future__ import annotations
 
-import json
 import os
-import re
-import shutil
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from balboa_spark.operators.text import tokens
+from balboa_spark.plans.genstore import EpochLog, read_manifest
 
 #: Laplace smoothing mass added to every gram count.
 DEFAULT_ALPHA = 1.0
@@ -968,41 +966,15 @@ class NgramCountStore:
     dirs) equals the one-shot model; the same fold-on-read argument as
     the observation store's delta path (``plans/layout.py``).
 
-    Consistency: each epoch write is O(batch) and lands with
-    mode=overwrite under its stream-scoped epoch dir, so a
-    foreachBatch replay rewrites the same state (idempotent — no
-    DECISION depends on history here, only counts). The manifest's
-    ``live`` list is the readers' truth: a dir written but not yet
-    listed (torn batch) is invisible until the replay re-lands it, and
-    ``compact()`` flips the list to the folded generation ATOMICALLY
-    (tmp + os.replace) before deleting folded dirs.
-
-    Replay vs compaction: an epoch folded into a base generation by
-    ``compact()`` leaves the live list, so "is my scope already
-    listed?" alone cannot gate a replay that races a compaction. The
-    manifest therefore also keeps a per-stream ``applied`` high-water
-    mark that SURVIVES compaction (the same persistent epoch gate as
-    ``plans/layout.py``'s ``last_epochs``): a replayed epoch at or
-    below the mark whose dir is no longer live was folded — skipped,
-    not re-appended.
-
-    Single-writer contract, DETECTED: manifest updates are
-    read-modify-write, serialized by foreachBatch within one query;
-    two QUERIES writing the same store concurrently would lose an
-    update. Every commit carries the commit-seq CAS
-    (``genstore.flip_manifest``): the losing writer's commit raises
-    ``ConcurrentWriterError`` instead of silently dropping the
-    winner's epoch — give each stream its own store (or serialize
-    externally), same contract as the other persisted stores."""
+    Epoch scopes, the live list, the replay gate, compaction grace,
+    the size trigger and the commit-seq CAS are ``genstore.EpochLog``'s
+    protocol (its docstring); a compaction folds by summing counts."""
 
     def __init__(self, spark: SparkSession, path: str, n: int = 3):
         if n < 2:
             raise ValueError(f"n must be >= 2, got {n}")
-        self.spark = spark
-        self.path = path
-        self._man_path = os.path.join(path, "manifest.json")
-        man = self._manifest()
-        if (os.path.exists(self._man_path) and "n" not in man) or os.path.isdir(
+        man = read_manifest(path, "manifest.json")
+        if (man is not None and "n" not in man) or os.path.isdir(
             os.path.join(path, "uni")
         ):
             # every manifest this class writes records n; one without
@@ -1014,28 +986,10 @@ class NgramCountStore:
                 "read as (k, ctx, w, c) counts — rebuild it from the "
                 "source stream into a fresh directory"
             )
-        if man.get("n") is not None and man["n"] != n:
-            raise ValueError(
-                f"store at {path} was built with n={man['n']}, got {n}"
-            )
+        self.spark = spark
+        self.path = path
         self.n = n
-
-    # -- manifest ----------------------------------------------------
-    def _manifest(self) -> dict:
-        if not os.path.exists(self._man_path):
-            return {"format": 1, "live": [], "applied": {}}
-        with open(self._man_path) as f:
-            man = json.load(f)
-        man.setdefault("applied", {})
-        return man
-
-    def _live(self) -> list[str]:
-        return self._manifest()["live"]
-
-    def _write_manifest(self, man: dict, expected_seq: int | None = None) -> None:
-        from balboa_spark.plans.genstore import flip_manifest
-
-        flip_manifest(self.path, man, "manifest.json", expected_seq=expected_seq)
+        self.log = EpochLog(spark, path, "grams", 1, {"n": n}, part_col="k")
 
     # -- writes ------------------------------------------------------
     def process_batch(
@@ -1051,69 +1005,26 @@ class NgramCountStore:
         stream-scoped epoch. O(batch): the store is never read. Empty
         batches record nothing (a schema-less parquet dir as the
         store's FIRST epoch would break schema inference on read).
-
-        ``max_live_epochs`` arms size-triggered auto-compaction (the
-        RocksDB L0 file-count trigger, not just a caller-scheduled
-        cadence): when the committed live list exceeds it, ``compact()``
-        runs inline — same atomic flip — so a misconfigured cadence can
-        no longer let merge-on-read cost grow unboundedly."""
-        if not re.fullmatch(r"[A-Za-z0-9_.]+", stream_id) or stream_id == "base":
-            # "base" is reserved for compaction generations; path-ish
-            # characters would silently split the epoch directory name
-            raise ValueError(f"invalid stream_id {stream_id!r}")
-        man = self._manifest()
-        expected_seq = man.get("commit_seq", 0)
-        scope = f"{stream_id}-{epoch_id}"
-        if (
-            epoch_id <= man["applied"].get(stream_id, -1)
-            and scope not in man["live"]
+        ``max_live_epochs`` arms the size-triggered compaction."""
+        scope = self.log.begin(epoch_id, stream_id)
+        if scope is None or batch.isEmpty():
+            return
+        self.log.write(_all_order_counts(batch, self.n, text_col), scope)
+        self.log.commit(scope)
+        if max_live_epochs is not None and self.log.should_compact(
+            max_live_epochs
         ):
-            # replayed epoch whose dir was folded into a base
-            # generation by compact(): re-appending would double-count
-            return
-        if batch.isEmpty():
-            return
-        (
-            _all_order_counts(batch, self.n, text_col)
-            .repartition("k")
-            .write.mode("overwrite")
-            .partitionBy("k")
-            .parquet(os.path.join(self.path, "grams", f"epoch={scope}"))
-        )
-        if scope not in man["live"]:
-            man["live"] = man["live"] + [scope]
-        man["applied"][stream_id] = max(
-            epoch_id, man["applied"].get(stream_id, -1)
-        )
-        man["n"] = self.n
-        # CAS against the INITIAL read (the decision point): another
-        # writer landing in this batch's write window raises loudly
-        # instead of having its live-list entry silently dropped
-        self._write_manifest(man, expected_seq=expected_seq)
-        if max_live_epochs is not None and len(man["live"]) > max_live_epochs:
             self.compact()
 
     # -- reads -------------------------------------------------------
-    def _read_live(self) -> DataFrame | None:
-        live = self._live()
-        if not live:
-            return None
-        df = self.spark.read.parquet(os.path.join(self.path, "grams"))
-        # epoch is a partition column: orphan dirs (torn writes,
-        # compacted-away epochs) prune out at the scan. One JVM-parsed
-        # SQL string, NOT isin(*live): between compactions the live
-        # list grows per micro-batch, and isin marshals every literal
-        # as its own Py4J call (the psl.py lesson). Scopes are
-        # charset-validated at write time, so quoting is safe.
-        in_list = ", ".join("'" + s.replace("'", "''") + "'" for s in live)
-        return df.where(F.expr(f"epoch IN ({in_list})"))
+    @staticmethod
+    def _sum(g: DataFrame) -> DataFrame:
+        return g.groupBy("k", "ctx", "w").agg(F.sum("c").alias("c"))
 
     def counts(self) -> DataFrame | None:
         """Current (k, ctx, w, c) — the merge-on-read fold."""
-        g = self._read_live()
-        if g is None:
-            return None
-        return g.groupBy("k", "ctx", "w").agg(F.sum("c").alias("c"))
+        g = self.log.read()
+        return None if g is None else self._sum(g)
 
     def _folded(self) -> DataFrame:
         """The fold, materialized once for the scorers' several reads."""
@@ -1149,59 +1060,10 @@ class NgramCountStore:
         )
 
     # -- maintenance -------------------------------------------------
-    def compact(self, vacuum: bool = False) -> None:
-        """Fold every live epoch into one base generation: write the
-        folded counts under a fresh scope, then flip the manifest
-        (atomic os.replace — the commit point). Merge-on-read cost
-        resets from O(#epochs) dirs to one.
-
-        Folded dirs get a ONE-GENERATION grace (mirroring the
-        observation store's retired_deltas): a ``counts()`` or model
-        plan built before the flip still lazily reads the old live
-        list and would hit FileNotFound if the dirs vanished mid-query,
-        so this compaction KEEPS its folded dirs, records them in the
-        manifest's ``retired`` map, and reclaims the PREVIOUS
-        compaction's retired dirs. Pass ``vacuum=True`` to delete this
-        compaction's folded dirs immediately (only when no plans from
-        before the flip can still run)."""
-        man = self._manifest()
-        expected_seq = man.get("commit_seq", 0)
-        live = man["live"]
-        if len(live) <= 1:
-            return
-        gen = 1 + max(
-            (int(s.rsplit("-", 1)[1]) for s in live if s.startswith("base-")),
-            default=0,
-        )
-        new = f"base-{gen}"
-        (
-            self.counts()
-            .repartition("k")
-            .write.mode("overwrite")
-            .partitionBy("k")
-            .parquet(os.path.join(self.path, "grams", f"epoch={new}"))
-        )
-        # earlier compactions' retired scopes: their grace generation
-        # has passed — reclaim them after this flip. Entries whose
-        # dirs already vanished are pruned rather than re-deleted.
-        reclaim = [
-            s
-            for s in (man.get("retired") or {})
-            if os.path.isdir(os.path.join(self.path, "grams", f"epoch={s}"))
-        ]
-        retired = {} if vacuum else {s: gen for s in live}
-        # the commit point — the applied marks survive the flip (they
-        # are the only record that a folded epoch ever happened, which
-        # is exactly what gates its replay)
-        self._write_manifest(
-            {**man, "live": [new], "retired": retired},
-            expected_seq=expected_seq,
-        )
-        for s in reclaim + (list(live) if vacuum else []):
-            shutil.rmtree(
-                os.path.join(self.path, "grams", f"epoch={s}"),
-                ignore_errors=True,
-            )
+    def compact(self, vacuum: bool = False) -> int:
+        """Sum the foldable live epochs into one base generation
+        (``EpochLog.compact``); returns #epochs folded."""
+        return self.log.compact(self._sum, vacuum)
 
 
 class BigramCountStore(NgramCountStore):

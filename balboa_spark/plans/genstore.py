@@ -10,6 +10,11 @@ This module is the one copy of that plumbing so a semantics fix (e.g.
 the stray-directory guard in vacuum, or the tmp-file commit protocol)
 lands everywhere at once.
 
+The epoch half of the same contract, for the stores that append
+per-batch ``epoch=<scope>`` partitions and fold them later
+(NgramCountStore, the three dedup stores, AttributeStore), is one
+``EpochLog``.
+
 Reference parity note: the reference's rocksdb backend gets these
 properties from the storage engine itself (backend/balboa-rocksdb,
 WAL + immutable SSTs); on Spark-over-parquet they are reconstructed
@@ -20,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 
 
@@ -38,16 +44,21 @@ class ConcurrentWriterError(RuntimeError):
     and a violated contract now raises instead of corrupting."""
 
 
+def read_manifest(path: str, manifest_name: str) -> dict | None:
+    """The committed manifest, or None when there is none yet."""
+    try:
+        with open(os.path.join(path, manifest_name)) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return None
+
+
 def read_commit_seq(path: str, manifest_name: str) -> int:
     """The current manifest's commit sequence (0 when the manifest does
     not exist yet, or predates the seq field). Capture this at the
     START of a read-modify-write and pass it to ``flip_manifest`` as
     ``expected_seq``."""
-    try:
-        with open(os.path.join(path, manifest_name)) as fh:
-            return json.load(fh).get("commit_seq", 0)
-    except FileNotFoundError:
-        return 0
+    return (read_manifest(path, manifest_name) or {}).get("commit_seq", 0)
 
 
 def link_tree(src: str, dst: str) -> None:
@@ -109,3 +120,244 @@ def vacuum_generations(path: str, current_gen: int, keep_last: int) -> int:
             if int(entry[4:]) < floor:
                 shutil.rmtree(os.path.join(path, entry), ignore_errors=True)
     return floor
+
+
+MANIFEST = "manifest.json"
+_STREAM_RE = re.compile(r"[A-Za-z0-9_.]+")
+
+
+class EpochLog:
+    """One state dir of ``epoch=<scope>`` parquet partitions plus the
+    manifest that says which of them exist for readers. Every
+    epoch-scoped store (NgramCountStore, Minhash/Exact/SpanDedupStore,
+    AttributeStore) keeps its state through one of these.
+
+    Manifest: ``format``, the store's config fields, ``live`` (the
+    scopes readers see), ``applied`` (per-stream high-water epoch),
+    ``retired`` (scopes folded by the last compaction), ``claimed_auto``
+    (last minted one-shot scope) and ``commit_seq``.
+
+    Scopes: a streaming batch lands in ``<stream_id>-<epoch_id>``; a
+    one-shot batch (no epoch id) in a freshly minted ``auto-<n>``;
+    compaction writes ``base-<g>``. Stream ids must match
+    ``[A-Za-z0-9_.]+`` and may not be ``auto`` or ``base``; a bad id is
+    rejected, never rewritten, so two distinct streams can never share
+    a scope dir.
+
+    Write order: ``begin`` reads the manifest, claims the scope (and any
+    store fields such as a version) under the CAS and, on a store's
+    first write, lands the config fields before any data; ``write``
+    overwrites the scope dir; ``commit`` appends the scope to ``live``
+    and raises the stream's ``applied`` mark, CAS'd against begin's
+    claim. A crash anywhere before commit leaves the scope unlisted, so
+    readers (``read``: one ``epoch IN (live)`` filter) never see a torn
+    or half-written dir, and the replay rewrites the same scope.
+
+    Replay gate: ``begin`` returns None for an epoch at or below its
+    stream's ``applied`` mark whose scope is no longer live — it was
+    folded into a base and re-appending it would double-count. A
+    replay of a still-live scope rewrites it; dedup callers exclude
+    that scope from the history they decide against, so the replay
+    repeats the first attempt's decisions.
+
+    Compaction: ``compact(fold_fn)`` folds every live scope except each
+    stream's latest epoch (the only one foreachBatch can still replay)
+    into ``base-<g>`` via ``fold_fn``, then flips ``live``. Folded dirs
+    stay on disk for one generation (``retired``) so reader plans built
+    before the flip still resolve their files; the next compaction, or
+    ``vacuum=True`` at once, deletes them together with orphan scope
+    dirs (on disk, neither live nor retired: torn writes). Fewer than
+    two foldable scopes fold nothing. ``should_compact(max_live)`` is
+    the size trigger: live count above the cap AND a compaction that
+    would do something, so a cap below the irreducible floor (one base
+    plus each stream's latest) does not run a no-op per batch.
+
+    CAS: every manifest write is ``flip_manifest`` against the seq this
+    writer last read or stamped, so a second writer committing inside
+    a read-modify-write window makes the loser raise
+    ``ConcurrentWriterError`` before it flips anything."""
+
+    def __init__(
+        self,
+        spark,
+        path: str,
+        state: str,
+        fmt: int,
+        config: dict | None = None,
+        part_col: str | None = None,
+    ):
+        self.spark = spark
+        self.path = path
+        self.state_path = os.path.join(path, state)
+        self.fmt = fmt
+        self.config = config or {}
+        self.part_col = part_col
+        self._seq = 0
+        man = read_manifest(path, MANIFEST)
+        if man is None:
+            return
+        if man.get("format") != fmt:
+            raise ValueError(
+                f"store at {path} uses on-disk format {man.get('format', 1)} "
+                f"(this build reads {fmt}); rebuild it from its source "
+                "into a fresh directory — there is no in-place migration"
+            )
+        built = {k: man.get(k) for k in self.config}
+        if built != self.config:
+
+            def show(cfg):
+                return ", ".join(f"{k}={v}" for k, v in cfg.items())
+
+            raise ValueError(
+                f"store at {path} was built with {show(built)}, "
+                f"got {show(self.config)}"
+            )
+
+    @staticmethod
+    def scope(epoch_id: int, stream_id: str = "default") -> str:
+        if not _STREAM_RE.fullmatch(stream_id) or stream_id in ("auto", "base"):
+            raise ValueError(
+                f"stream_id {stream_id!r} must match [A-Za-z0-9_.]+ and not "
+                "be a reserved scope (auto = one-shot epochs, base = "
+                "compaction generations)"
+            )
+        return f"{stream_id}-{int(epoch_id)}"
+
+    def manifest(self) -> dict:
+        man = read_manifest(self.path, MANIFEST) or {}
+        return {
+            "format": self.fmt,
+            **self.config,
+            "live": [],
+            "applied": {},
+            "commit_seq": 0,
+            **man,
+            "retired": list(man.get("retired") or []),
+        }
+
+    def live(self) -> list[str]:
+        return self.manifest()["live"]
+
+    def _flip(self, man: dict, expected_seq: int) -> None:
+        flip_manifest(self.path, man, MANIFEST, expected_seq)
+        self._seq = expected_seq + 1
+
+    def _dir(self, scope: str) -> str:
+        return os.path.join(self.state_path, f"epoch={scope}")
+
+    # -- writes ------------------------------------------------------
+    def begin(self, epoch_id=None, stream_id="default", claim=None):
+        """Claim the batch's scope; None for a replay of a folded epoch.
+        ``claim(manifest) -> dict`` adds store fields to the claim."""
+        man = self.manifest()
+        if epoch_id is None:
+            n = int(man.get("claimed_auto", -1)) + 1
+            scope, extra = f"auto-{n}", {"claimed_auto": n}
+        else:
+            scope, extra = self.scope(epoch_id, stream_id), {}
+            if (
+                int(epoch_id) <= man["applied"].get(stream_id, -1)
+                and scope not in man["live"]
+            ):
+                return None
+        if claim is not None:
+            extra.update(claim(man))
+        self._flip({**man, **extra}, man["commit_seq"])
+        return scope
+
+    def write(self, df, scope: str) -> None:
+        w = (
+            df.repartition(self.part_col).write.partitionBy(self.part_col)
+            if self.part_col
+            else df.write
+        )
+        w.mode("overwrite").parquet(self._dir(scope))
+
+    def commit(self, scope: str) -> None:
+        man = self.manifest()
+        if scope not in man["live"]:
+            man["live"] = man["live"] + [scope]
+        stream, _, n = scope.rpartition("-")
+        if stream != "auto":
+            applied = man["applied"]
+            man["applied"] = {
+                **applied, stream: max(int(n), applied.get(stream, -1))
+            }
+        self._flip(man, self._seq)
+
+    # -- reads -------------------------------------------------------
+    def read(self, exclude: str | None = None, scopes: list[str] | None = None):
+        """The live scopes (minus ``exclude``) as one DataFrame, or None.
+        One JVM-parsed IN-list rather than ``isin(*live)``, which would
+        marshal every literal as its own Py4J call; scopes are
+        charset-safe by construction."""
+        if scopes is None:
+            scopes = self.live()
+        scopes = [s for s in scopes if s != exclude]
+        if not scopes:
+            return None
+        in_list = ", ".join(f"'{s}'" for s in scopes)
+        df = self.spark.read.parquet(self.state_path)
+        return df.where(f"epoch IN ({in_list})")
+
+    # -- compaction --------------------------------------------------
+    @staticmethod
+    def _foldable(live: list[str]) -> list[str]:
+        """``live`` minus each stream's latest epoch."""
+        latest: dict[str, int] = {}
+        for s in live:
+            stream, _, n = s.rpartition("-")
+            if stream not in ("auto", "base"):
+                latest[stream] = max(latest.get(stream, -1), int(n))
+        keep = {f"{stream}-{n}" for stream, n in latest.items()}
+        return [s for s in live if s not in keep]
+
+    def should_compact(self, max_live: int) -> bool:
+        man = self.manifest()
+        if len(man["live"]) <= max_live:
+            return False
+        return len(self._foldable(man["live"])) >= 2 or bool(man["retired"])
+
+    def compact(self, fold_fn, vacuum: bool = False) -> int:
+        """Fold, flip, reclaim (class docstring). Returns #scopes folded."""
+        man = self.manifest()
+        live, retired = man["live"], man["retired"]
+        try:
+            on_disk = [
+                d[len("epoch="):]
+                for d in os.listdir(self.state_path)
+                if d.startswith("epoch=")
+            ]
+        except FileNotFoundError:
+            on_disk = []
+        reclaim = [s for s in on_disk if s not in live]
+        fold = self._foldable(live)
+        if len(fold) < 2:
+            if reclaim or retired:
+                self._flip({**man, "retired": []}, man["commit_seq"])
+                self._reclaim(reclaim)
+            return 0
+        gen = 1 + max(
+            (
+                int(s[len("base-"):])
+                for s in on_disk + live
+                if s.startswith("base-") and s[len("base-"):].isdigit()
+            ),
+            default=0,
+        )
+        base = f"base-{gen}"
+        self.write(fold_fn(self.read(scopes=fold)), base)
+        self._flip(
+            {
+                **man,
+                "live": [base] + [s for s in live if s not in fold],
+                "retired": [] if vacuum else fold,
+            },
+            man["commit_seq"],
+        )
+        self._reclaim(reclaim + (fold if vacuum else []))
+        return len(fold)
+
+    def _reclaim(self, scopes: list[str]) -> None:
+        for s in scopes:
+            shutil.rmtree(self._dir(s), ignore_errors=True)

@@ -30,7 +30,7 @@ def _check_series_format(out_path: str) -> None:
     replay idempotency; pointing the new sinks or readers at a legacy
     directory would mix a data column with a partition column and
     fail (or double-define epoch_id) — the same version-guard
-    rationale as dedup_store._check_format, raised up front with a
+    rationale as the format check in genstore.EpochLog, raised up front with a
     rebuild instruction instead of a confusing scan error."""
     if not os.path.isdir(out_path):
         return

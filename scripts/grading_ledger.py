@@ -66,32 +66,6 @@ def main() -> int:
 
     cap, tail = grab("CAP_50"), grab("_TAIL")
 
-    # Rotation-as-code check (r13 verdict What's-wrong #3): the newest
-    # R{N}_IN / R{N}_OUT lists must agree with CAP_50/_TAIL membership,
-    # so the executed swap can never drift from the prose again.
-    swaps = sorted(
-        (int(n), kind)
-        for n, kind in re.findall(r"\bR(\d+)_(IN|OUT)\s*=\s*\[", src)
-    )
-    if swaps:
-        newest_swap = swaps[-1][0]
-        rin = grab(f"R{newest_swap}_IN")
-        rout = grab(f"R{newest_swap}_OUT")
-        bad_in = sorted(set(rin) - set(cap))
-        bad_out = sorted(set(rout) - set(tail))
-        both = sorted(set(rin) & set(rout))
-        if bad_in or bad_out or both:
-            print(
-                f"INVARIANT VIOLATION: R{newest_swap} swap lists drifted — "
-                f"IN-not-in-cap: {bad_in}; OUT-not-in-tail: {bad_out}; "
-                f"overlap: {both}"
-            )
-            return 1
-        print(
-            f"rotation-as-code: R{newest_swap}_IN ({len(rin)}) all in-cap, "
-            f"R{newest_swap}_OUT ({len(rout)}) all in-tail, disjoint"
-        )
-
     never = [k for k in cap + tail if k not in last]
     print(f"rounds on file: r1..r{newest}; registered: {len(cap) + len(tail)} "
           f"(cap {len(cap)} / tail {len(tail)})")

@@ -1,7 +1,7 @@
 """AttributeStore + mixer: latest-wins versioning, schema pinning,
-CAS two-writer detection, streaming-epoch replay stability, pruning
-compaction with the one-generation grace, and the Dolma null-fails
-mixer contract."""
+CAS two-writer detection, pruning compaction, and the Dolma
+null-fails mixer contract. The crash/replay/race cells are in
+test_epoch_log_matrix.py."""
 
 import os
 
@@ -26,18 +26,20 @@ def _quality(spark, rows):
     )
 
 
-def _hook_first_read(ns, side_effect):
-    orig = ns._read_manifest
+def _hook_first_read(log, side_effect):
+    """The namespace's first manifest read also runs ``side_effect``
+    (another writer's whole mutation) and returns the stale manifest."""
+    orig = log.manifest
     state = {"fired": False}
 
-    def hooked(*a, **k):
-        man = orig(*a, **k)
+    def hooked():
+        man = orig()
         if not state["fired"]:
             state["fired"] = True
             side_effect()
         return man
 
-    ns._read_manifest = hooked
+    log.manifest = hooked
 
 
 # ---------------------------------------------------------------------------
@@ -117,101 +119,28 @@ def store_read_ids(store):
 
 
 # ---------------------------------------------------------------------------
-# streaming epochs: replay overwrites its own scope, decisions stable
+# compaction: prune-fold + vacuum + auto-trigger
 # ---------------------------------------------------------------------------
-
-
-def test_attr_epoch_replay_stable(spark, tmp_path):
-    store = AttributeStore(spark, str(tmp_path / "attrs"))
-    store.write(
-        _quality(spark, [(1, 10, 0.5), (2, 20, 0.9)]),
-        "quality", epoch_id=0, stream_id="s",
-    )
-    before = sorted(
-        (r["doc_id"], r["quality__n_tokens"])
-        for r in store.read("quality").collect()
-    )
-    # torn-batch replay: same epoch, same rows — scope dir overwritten
-    store.write(
-        _quality(spark, [(1, 10, 0.5), (2, 20, 0.9)]),
-        "quality", epoch_id=0, stream_id="s",
-    )
-    after = sorted(
-        (r["doc_id"], r["quality__n_tokens"])
-        for r in store.read("quality").collect()
-    )
-    assert before == after
-    # exactly one scope dir for the stream epoch (overwrite, not append)
-    state = tmp_path / "attrs" / "quality" / "state"
-    assert sorted(d for d in os.listdir(state) if d.startswith("epoch=")) == [
-        "epoch=s-0"
-    ]
-
-
-# ---------------------------------------------------------------------------
-# compaction: prune-fold + grace + vacuum + auto-trigger
-# ---------------------------------------------------------------------------
-
-
-def test_attr_compact_prunes_and_graces(spark, tmp_path):
-    store = AttributeStore(spark, str(tmp_path / "attrs"))
-    for v in range(4):  # doc 1 re-tagged every round; doc (10+v) fresh
-        store.write(
-            _quality(spark, [(1, 100 + v, 0.1 * v), (10 + v, v, 0.5)]),
-            "quality",
-        )
-    before = sorted(
-        (r["doc_id"], r["quality__n_tokens"])
-        for r in store.read("quality").collect()
-    )
-    folded = store.compact("quality")
-    assert folded == 4  # all auto scopes fold
-    state = tmp_path / "attrs" / "quality" / "state"
-    base = [d for d in os.listdir(state) if d.startswith("epoch=base-")]
-    assert base == ["epoch=base-1"]
-    # pruned: within the base, doc 1 keeps ONLY its newest version
-    base_rows = spark.read.parquet(str(state / base[0]))
-    assert base_rows.filter(F.col("doc_id") == 1).count() == 1
-    assert base_rows.filter(F.col("doc_id") == 1).first()["n_tokens"] == 103
-    # grace: folded dirs still on disk, reads unchanged
-    assert len([d for d in os.listdir(state) if d.startswith("epoch=auto-")]) == 4
-    after = sorted(
-        (r["doc_id"], r["quality__n_tokens"])
-        for r in store.read("quality").collect()
-    )
-    assert before == after
-    # second compaction reclaims the FIRST fold's retirees; the new
-    # auto-4 scope folds with its own one-generation grace
-    store.write(_quality(spark, [(99, 1, 1.0)]), "quality")
-    store.compact("quality")
-    assert [d for d in os.listdir(state) if d.startswith("epoch=auto-")] == [
-        "epoch=auto-4"
-    ]
-    final = dict(
-        (r["doc_id"], r["quality__n_tokens"])
-        for r in store.read("quality").collect()
-    )
-    assert final[1] == 103 and final[99] == 1
 
 
 def test_attr_compact_vacuum_and_auto_trigger(spark, tmp_path):
     store = AttributeStore(spark, str(tmp_path / "attrs"))
-    for v in range(3):
-        store.write(_quality(spark, [(v, v, 0.0)]), "quality")
-    store.compact("quality", vacuum=True)
+    for v in range(3):  # doc 1 re-tagged every round; doc (10+v) fresh
+        store.write(_quality(spark, [(1, 100 + v, 0.1), (10 + v, v, 0.0)]), "quality")
+    assert store.compact("quality", vacuum=True) == 3  # all auto scopes fold
     state = tmp_path / "attrs" / "quality" / "state"
-    assert not [d for d in os.listdir(state) if d.startswith("epoch=auto-")]
+    assert sorted(os.listdir(state)) == ["epoch=base-1"]
+    # pruned: within the base, doc 1 keeps ONLY its newest version
+    doc1 = spark.read.parquet(str(state / "epoch=base-1")).filter(F.col("doc_id") == 1)
+    assert [r["n_tokens"] for r in doc1.collect()] == [102]
     # auto-trigger: armed writes keep live scopes bounded
     for v in range(6):
         store.write(
             _quality(spark, [(100 + v, v, 0.0)]), "quality",
             max_live_epochs=3,
         )
-    live = [d for d in os.listdir(state) if d.startswith("epoch=")]
-    man = store._ns("quality")._read_manifest()
-    retired = set(man.get("retired") or [])
-    assert len([d for d in live if d[len("epoch="):] not in retired]) <= 4
-    assert store.read("quality").count() == 3 + 6
+        assert len(store._ns("quality").manifest()["live"]) <= 3
+    assert store.read("quality").count() == 1 + 3 + 6
 
 
 # ---------------------------------------------------------------------------
@@ -563,11 +492,8 @@ def test_attr_nested_map_rejected_and_torn_first_write_unlisted(spark, tmp_path)
     )
     with pytest.raises(ValueError, match="map type"):
         store.write(nested, "bad")
-    # simulate the torn first write: claim-time manifest, no data
-    ns = store._ns("torn")
-    ns._write_manifest(
-        extra={"last_ver": 1, "id_col": "doc_id", "columns": ["x"]}
-    )
+    # the torn first write: the scope is claimed, no data ever lands
+    assert store._ns("torn").begin() == "auto-0"
     store.write(_quality(spark, [(1, 1, 1.0)]), "quality")
     assert store.taggers() == ["quality"]
 
@@ -646,43 +572,6 @@ def test_attr_mix_on_streaming_docs(spark, tmp_path):
     # and both its rows now pass under the re-tagged n_tokens
     got2 = sorted(r["doc_id"] for r in spark.read.parquet(out2).collect())
     assert got2 == [1, 2, 2, 3]
-
-
-def test_attr_compact_racing_tagger_write_raises(spark, tmp_path):
-    """Compaction racing a concurrent tagger append in the SAME
-    namespace must lose loudly (the dedup-store maintenance
-    contract): the racer's version bump moves commit_seq, so the
-    compactor's CAS manifest write raises ConcurrentWriterError
-    instead of silently dropping the racer's epoch dir from the fold
-    accounting — and afterwards the racer's data is intact, reads
-    resolve, and a fresh compaction succeeds."""
-    path = str(tmp_path / "attrs")
-    a = AttributeStore(spark, path)
-    for v in range(3):
-        a.write(_quality(spark, [(1, 100 + v, 0.1), (20 + v, v, 0.5)]), "quality")
-    b = AttributeStore(spark, path)
-    _hook_first_read(
-        a._ns("quality"),
-        lambda: b.write(_quality(spark, [(99, 999, 0.9)]), "quality"),
-    )
-    with pytest.raises(ConcurrentWriterError, match="single-writer"):
-        a.compact("quality")
-    # nothing lost: the racer's row and every pre-race version resolve
-    got = {
-        r["doc_id"]: r["quality__n_tokens"]
-        for r in b.read("quality").collect()
-    }
-    assert got[99] == 999 and got[1] == 102 and {20, 21, 22} <= set(got)
-    # the loser's base-1 dir is torn (data written, manifest CAS
-    # refused) — latest-wins resolution makes its duplicate rows
-    # harmless, and the NEXT compaction folds it away with the 3
-    # original autos + the racer's auto: 5 scopes
-    assert b.compact("quality") == 5
-    after = {
-        r["doc_id"]: r["quality__n_tokens"]
-        for r in b.read("quality").collect()
-    }
-    assert after == got
 
 
 def test_attr_compact_racing_other_namespace_is_independent(spark, tmp_path):

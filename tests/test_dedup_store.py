@@ -132,27 +132,6 @@ def test_span_store_matches_batch_operator(spark, tmp_path):
     assert got[10]["clean_text"] == "x y z"
 
 
-def test_span_store_replay_is_effectively_once(spark, tmp_path):
-    """Re-processing the same batch (at-least-once delivery): every
-    window hits history, the docs vanish from the replay output, and a
-    LATER batch's decisions are identical to a no-replay run."""
-    from balboa_spark.operators.dedup_store import SpanDedupStore
-
-    b1 = [(1, "a b c d e")]
-    b2 = [(20, "f g a b c d h")]
-    s1 = SpanDedupStore(spark, str(tmp_path / "s1"), span_tokens=4)
-    s1.process_batch(_span_store_docs(spark, b1))
-    s1.process_batch(_span_store_docs(spark, b1))  # replay
-    replay_out = s1.process_batch(_span_store_docs(spark, b1)).collect()
-    assert replay_out == []  # replayed doc fully covered
-    got = {r["doc_id"]: r["clean_text"] for r in s1.process_batch(_span_store_docs(spark, b2)).collect()}
-
-    s2 = SpanDedupStore(spark, str(tmp_path / "s2"), span_tokens=4)
-    s2.process_batch(_span_store_docs(spark, b1))
-    want = {r["doc_id"]: r["clean_text"] for r in s2.process_batch(_span_store_docs(spark, b2)).collect()}
-    assert got == want == {20: "f g h"}
-
-
 def test_span_store_param_mismatch_rejected(spark, tmp_path):
     import pytest
 
@@ -177,124 +156,6 @@ def test_span_store_history_stays_distinct(spark, tmp_path):
     store.process_batch(_span_store_docs(spark, [(9, "a b c d")]))
     assert store.hashes().count() == n1
     assert store.hashes().distinct().count() == n1
-
-
-# --- torn-batch crash window (VERDICT r7-r9, closed r10) -------------------
-# The window: foreachBatch runs store-append then sink-write; a crash
-# BETWEEN them replays the epoch against a history that already holds
-# the batch's own state. With epoch_id passed, decisions exclude the
-# current epoch and the epoch write is an overwrite — replay output
-# must equal a never-crashed run byte-for-byte.
-
-
-def test_minhash_store_torn_batch_replay_parity(spark, tmp_path):
-    b0 = [(1, BASE)]
-    # doc 10: novel content (must SURVIVE the replay — this is the row
-    # the pre-r10 design lost to its own torn bands); doc 11: near-dup
-    # of epoch-0 content (must drop in both runs)
-    b1 = [(10, FRESH), (11, NEAR), (12, "unrelated novel text payload here")]
-
-    # control: never-crashed run
-    ctrl = MinHashDedupStore(spark, str(tmp_path / "ctrl"))
-    ctrl.process_batch(_docs(spark, b0), epoch_id=0)
-    want = sorted(
-        r["doc_id"] for r in ctrl.process_batch(_docs(spark, b1), epoch_id=1).collect()
-    )
-
-    # crashed run: epoch 1's append lands, the sink never commits
-    # (output discarded), process dies; restart replays epoch 1
-    store = MinHashDedupStore(spark, str(tmp_path / "s"))
-    store.process_batch(_docs(spark, b0), epoch_id=0)
-    store.process_batch(_docs(spark, b1), epoch_id=1)  # torn: output lost
-    restarted = MinHashDedupStore(spark, str(tmp_path / "s"))
-    got = sorted(
-        r["doc_id"]
-        for r in restarted.process_batch(_docs(spark, b1), epoch_id=1).collect()
-    )
-    assert got == want
-    assert 10 in got  # the replayed batch is NOT swallowed by its own bands
-
-    # later epoch unaffected by the replay
-    b2 = [(20, NEAR), (21, "another brand new unseen document body")]
-    got2 = sorted(
-        r["doc_id"]
-        for r in restarted.process_batch(_docs(spark, b2), epoch_id=2).collect()
-    )
-    want2 = sorted(
-        r["doc_id"] for r in ctrl.process_batch(_docs(spark, b2), epoch_id=2).collect()
-    )
-    assert got2 == want2
-
-
-def test_minhash_store_torn_partial_append_self_heals(spark, tmp_path):
-    """Harsher tear: the epoch append itself died mid-write (partial
-    band files on disk). The replay's overwrite of the epoch dir must
-    restore full parity."""
-    import glob
-    import os
-
-    store = MinHashDedupStore(spark, str(tmp_path / "s"))
-    store.process_batch(_docs(spark, [(1, BASE)]), epoch_id=0)
-    store.process_batch(_docs(spark, [(2, FRESH)]), epoch_id=1)
-    # simulate the tear: delete half the epoch-1 band files
-    files = sorted(
-        glob.glob(str(tmp_path / "s" / "bands" / "epoch=default-1" / "*" / "*.parquet"))
-    )
-    assert files
-    for f in files[: max(1, len(files) // 2)]:
-        os.remove(f)
-    restarted = MinHashDedupStore(spark, str(tmp_path / "s"))
-    got = sorted(
-        r["doc_id"]
-        for r in restarted.process_batch(_docs(spark, [(2, FRESH)]), epoch_id=1).collect()
-    )
-    assert got == [2]
-    # epoch-1 state fully rebuilt: a near-dup of FRESH in epoch 2 drops
-    nxt = restarted.process_batch(
-        _docs(spark, [(3, FRESH), (4, "yet another novel body of text")]), epoch_id=2
-    )
-    assert sorted(r["doc_id"] for r in nxt.collect()) == [4]
-
-
-def _span_docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_span_store_torn_batch_replay_parity(spark, tmp_path):
-    from balboa_spark.operators.dedup_store import SpanDedupStore
-
-    b0 = [(1, "a b c d e")]
-    b1 = [(10, "f g h i j"), (11, "a b c d k")]
-
-    ctrl = SpanDedupStore(spark, str(tmp_path / "ctrl"), span_tokens=4)
-    ctrl.process_batch(_span_docs(spark, b0), epoch_id=0)
-    want = {
-        r["doc_id"]: r["clean_text"]
-        for r in ctrl.process_batch(_span_docs(spark, b1), epoch_id=1).collect()
-    }
-
-    s = SpanDedupStore(spark, str(tmp_path / "s"), span_tokens=4)
-    s.process_batch(_span_docs(spark, b0), epoch_id=0)
-    s.process_batch(_span_docs(spark, b1), epoch_id=1)  # torn: sink never saw it
-    restarted = SpanDedupStore(spark, str(tmp_path / "s"), span_tokens=4)
-    got = {
-        r["doc_id"]: r["clean_text"]
-        for r in restarted.process_batch(_span_docs(spark, b1), epoch_id=1).collect()
-    }
-    assert got == want
-    assert 10 in got  # replay does NOT vanish into its own history
-
-    # and a later epoch's decisions match the control exactly
-    b2 = [(20, "f g h i z"), (21, "p q r s t")]
-    got2 = {
-        r["doc_id"]: r["clean_text"]
-        for r in restarted.process_batch(_span_docs(spark, b2), epoch_id=2).collect()
-    }
-    want2 = {
-        r["doc_id"]: r["clean_text"]
-        for r in ctrl.process_batch(_span_docs(spark, b2), epoch_id=2).collect()
-    }
-    assert got2 == want2
 
 
 def test_postings_upsert_torn_gen_replay(spark, tmp_path):
@@ -343,24 +204,32 @@ def test_postings_upsert_torn_gen_replay(spark, tmp_path):
 
 
 def test_store_format_version_guard(spark, tmp_path):
-    """A store written by the unversioned pre-scoped-epoch layout must
-    be rejected with a rebuild error, not read into a partition
-    conflict."""
+    """Stores written by an older on-disk format (unversioned, the
+    format-2 dir-listing dedup layout, format-1 attribute namespaces)
+    are rejected with a rebuild error, never read."""
     import json as _json
-    import os as _os
 
-    p = str(tmp_path / "old")
-    _os.makedirs(p)
-    with open(_os.path.join(p, "manifest.json"), "w") as f:
-        _json.dump({"num_hashes": 16, "num_bands": 4, "k": 3}, f)
+    from balboa_spark.operators.attributes import AttributeStore
+    from balboa_spark.operators.dedup_store import ExactDedupStore
+
+    def old(name, man):
+        (tmp_path / name).mkdir(parents=True)
+        (tmp_path / name / "manifest.json").write_text(_json.dumps(man))
+        return str(tmp_path / name)
+
+    cfg = {"num_hashes": 16, "num_bands": 4, "k": 3}
+    for i, (opener, man) in enumerate([
+        (MinHashDedupStore, cfg),
+        (MinHashDedupStore, {**cfg, "format": 2}),
+        (ExactDedupStore, {"format": 2}),
+        (SpanDedupStore, {"span_tokens": 16, "format": 2}),
+    ]):
+        with pytest.raises(ValueError, match="rebuild"):
+            opener(spark, old(f"s{i}", man))
+    attrs = AttributeStore(spark, str(tmp_path / "attrs"))
+    old("attrs/quality", {"format": 1, "id_col": "doc_id", "columns": ["x"]})
     with pytest.raises(ValueError, match="rebuild"):
-        MinHashDedupStore(spark, p)
-    p2 = str(tmp_path / "old2")
-    _os.makedirs(p2)
-    with open(_os.path.join(p2, "manifest.json"), "w") as f:
-        _json.dump({"span_tokens": 16}, f)
-    with pytest.raises(ValueError, match="rebuild"):
-        SpanDedupStore(spark, p2)
+        attrs.read("quality")
 
 
 def test_minhash_store_epochs_scoped_per_stream(spark, tmp_path):
@@ -421,26 +290,6 @@ def test_exact_store_cross_and_within_batch(spark, tmp_path):
         epoch_id=1, stream_id="s",
     )
     assert sorted(r.doc_id for r in kept2.collect()) == [11]
-
-
-def test_exact_store_replay_is_stable(spark, tmp_path):
-    from balboa_spark.operators.dedup_store import ExactDedupStore
-
-    store = ExactDedupStore(spark, str(tmp_path / "xr"))
-    b0 = _docs(spark, [(1, "one two three"), (2, "four five six")])
-    store.process_batch(b0, epoch_id=0, stream_id="s")
-    b1 = _docs(spark, [(3, "one two three"), (4, "seven eight nine")])
-    first = sorted(
-        r.doc_id
-        for r in store.process_batch(b1, epoch_id=1, stream_id="s").collect()
-    )
-    # torn-batch replay of epoch 1: history excludes its own epoch, so
-    # the decisions (and rewritten state) are identical
-    replay = sorted(
-        r.doc_id
-        for r in store.process_batch(b1, epoch_id=1, stream_id="s").collect()
-    )
-    assert first == replay == [4]
 
 
 def test_exact_store_compact_preserves_decisions(spark, tmp_path):

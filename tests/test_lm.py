@@ -399,17 +399,15 @@ def test_bigram_count_store_incremental_equals_one_shot(spark, tmp_path):
     for k in a:
         assert a[k] == pytest.approx(b[k], rel=1e-12)
 
-    # two batches + compact(): both model views equal the one-shot
-    # trainers (add-alpha and KN scored through their public scorers)
-    fresh = lm.BigramCountStore(spark, str(tmp_path / "fresh"))
-    for e in range(2):
-        fresh.process_batch(df.where(f"doc_id % 2 = {e}"), epoch_id=e)
-    fresh.compact()
-    assert fresh._live() == ["base-1"]
+    # compact() folds all but the latest epoch: both model views still
+    # equal the one-shot trainers (add-alpha and KN scored through
+    # their public scorers)
+    assert store.compact() == 2
+    assert store.log.manifest()["live"] == ["base-1", "default-2"]
     for got_df, want_df in (
-        (lm.score_bigram_lm(df, fresh.model()), lm.score_bigram_lm(df, one_shot)),
+        (lm.score_bigram_lm(df, store.model()), lm.score_bigram_lm(df, one_shot)),
         (
-            lm.score_kn_bigram_lm(df, fresh.kn_model()),
+            lm.score_kn_bigram_lm(df, store.kn_model()),
             lm.score_kn_bigram_lm(df, lm.train_kn_bigram_lm(df)),
         ),
     ):
@@ -444,27 +442,26 @@ def test_bigram_count_store_replay_idempotent_and_compacts(spark, tmp_path):
         [(1, "a b a b"), (2, "a c d"), (3, "b c")], ["doc_id", "text"]
     )
     store = lm.BigramCountStore(spark, str(tmp_path / "store"))
-    store.process_batch(df.where("doc_id <= 2"), epoch_id=0)
-    store.process_batch(df.where("doc_id <= 2"), epoch_id=0)  # replay
-    store.process_batch(df.where("doc_id = 3"), epoch_id=1)
-    store.process_batch(df.where("doc_id < 0"), epoch_id=2)  # empty: no-op
+    for e in range(3):
+        store.process_batch(df.where(f"doc_id = {e + 1}"), epoch_id=e)
+    store.process_batch(df.where("doc_id = 1"), epoch_id=0)  # replay
+    store.process_batch(df.where("doc_id < 0"), epoch_id=3)  # empty: no-op
     before = _bigram_counts(store.counts())
     assert before[("a", "b")] == 2  # not doubled by the replay
-    assert store._live() == ["default-0", "default-1"]
+    assert store.log.manifest()["live"] == ["default-0", "default-1", "default-2"]
     # a plan built BEFORE the flip must survive the compaction
     pre_flip = store.counts()
-    store.compact()
-    assert store._live() == ["base-1"]
+    assert store.compact() == 2
+    assert store.log.manifest()["live"] == ["base-1", "default-2"]
     after = _bigram_counts(store.counts())
     assert after == before
     # folded dirs kept by default — old plans still read
     assert _bigram_counts(pre_flip) == before
     # vacuum removes them once no pre-flip plans remain
-    store.compact()  # single live generation: no-op
-    assert store._live() == ["base-1"]
+    assert store.compact() == 0  # one base + the latest epoch: no fold
     store2 = lm.BigramCountStore(spark, str(tmp_path / "store2"))
-    store2.process_batch(df, epoch_id=0)
-    store2.process_batch(df.where("doc_id = 3"), epoch_id=1)
+    for e in range(3):
+        store2.process_batch(df.where(f"doc_id = {e + 1}"), epoch_id=e)
     store2.compact(vacuum=True)
     assert not os.path.exists(
         str(tmp_path / "store2" / "grams" / "epoch=default-0")
@@ -617,21 +614,21 @@ def test_streaming_lm_count_store_e2e(spark, tmp_path):
 def test_bigram_count_store_replay_after_compact_does_not_double_count(
     spark, tmp_path
 ):
-    """The torn-checkpoint x compaction race: an epoch is folded into
-    a base generation while the stream is down, then foreachBatch
-    replays it on restart — the persistent applied mark must make the
-    replay a no-op instead of re-appending the folded counts."""
+    """An epoch folded into a base generation and then replayed (a
+    restart from an older checkpoint) is skipped by the persistent
+    applied mark instead of re-appending the folded counts."""
     df = spark.createDataFrame([(1, "a b a b"), (2, "a c")], ["doc_id", "text"])
     store = lm.BigramCountStore(spark, str(tmp_path / "store"))
     store.process_batch(df.where("doc_id = 1"), epoch_id=0)
     store.process_batch(df.where("doc_id = 2"), epoch_id=1)
+    store.process_batch(df.where("doc_id = 2"), epoch_id=2)
     want = _bigram_counts(store.counts())
-    store.compact()  # epoch dirs folded into base-1
+    assert store.compact() == 2  # epochs 0 and 1 folded into base-1
     store.process_batch(df.where("doc_id = 2"), epoch_id=1)  # the replay
     got = _bigram_counts(store.counts())
     assert got == want  # not doubled
     # a genuinely NEW epoch after compaction still lands
-    store.process_batch(df.where("doc_id = 1"), epoch_id=2)
+    store.process_batch(df.where("doc_id = 1"), epoch_id=3)
     bumped = _bigram_counts(store.counts())
     assert bumped[("a", "b")] == want[("a", "b")] * 2
 

@@ -511,6 +511,41 @@ def test_load_any_lm_reads_artifacts_written_before_the_ngram_core(spark, tiny):
             assert got[k] == pytest.approx(want[k], rel=1e-12), kind
 
 
+def test_ngram_store_written_before_the_epoch_log_opens_unchanged(spark, tmp_path):
+    """tests/fixtures/ngram_store holds an NgramCountStore written before
+    the store moved onto genstore.EpochLog (a grace-retired dict in its
+    manifest, two streams): it opens with the same counts and keeps
+    working — a new epoch lands and a compaction reclaims the old
+    retirees."""
+    import json
+    import os
+    import shutil
+
+    root = os.path.join(os.path.dirname(__file__), "fixtures", "ngram_store")
+    with open(os.path.join(root, "expected_counts.json")) as fh:
+        want = sorted(tuple(r) for r in json.load(fh))
+    path = str(tmp_path / "store")
+    shutil.copytree(os.path.join(root, "store"), path)
+    store = lm.NgramCountStore(spark, path, n=3)
+    assert sorted(tuple(r) for r in store.counts().collect()) == want
+    store.process_batch(
+        spark.createDataFrame([(9, "the cat")], "doc_id long, text string"),
+        epoch_id=1,
+        stream_id="b",
+    )
+    assert store.compact() == 2  # base-1 + b-0; b-1 stays
+    man = store.log.manifest()
+    assert man["live"] == ["base-2", "b-1"] and man["retired"] == ["base-1", "b-0"]
+    assert sorted(os.listdir(store.log.state_path)) == [
+        "epoch=b-0", "epoch=b-1", "epoch=base-1", "epoch=base-2"
+    ]
+    bumped = {(k, c, w): n for k, c, w, n in want}
+    for key in [(1, "", "the"), (1, "", "cat"), (2, "the", "cat")]:
+        bumped[key] += 1
+    got = {(r["k"], r["ctx"], r["w"]): r["c"] for r in store.counts().collect()}
+    assert got == bumped
+
+
 def test_cli_lm_train_kn_and_score(spark, tiny, tmp_path):
     from balboa_spark.cli import main as cli_main
 
@@ -583,12 +618,15 @@ def test_ngram_store_kn_and_sbo_equal_one_shot(spark, tmp_path):
 def test_ngram_store_replay_gate_and_n_mismatch(spark, tmp_path):
     docs = _ncorpus(spark)
     store = lm.NgramCountStore(spark, str(tmp_path / "nr"), n=3)
-    store.process_batch(docs, epoch_id=0)
+    for e in range(3):
+        store.process_batch(docs.where(f"doc_id % 3 = {e}"), epoch_id=e)
     before = sorted(tuple(r) for r in store.counts().collect())
-    store.process_batch(docs, epoch_id=0)  # same-epoch overwrite: no-op fold
+    # same-epoch overwrite of the live latest epoch: no double count
+    store.process_batch(docs.where("doc_id % 3 = 2"), epoch_id=2)
     assert sorted(tuple(r) for r in store.counts().collect()) == before
-    store.compact()
-    store.process_batch(docs, epoch_id=0)  # replay of a folded epoch: skipped
+    assert store.compact() == 2
+    # replay of a folded epoch: skipped
+    store.process_batch(docs.where("doc_id % 3 = 0"), epoch_id=0)
     assert sorted(tuple(r) for r in store.counts().collect()) == before
     with pytest.raises(ValueError, match="built with n=3"):
         lm.NgramCountStore(spark, str(tmp_path / "nr"), n=5)
@@ -601,7 +639,7 @@ def test_ngram_store_auto_compaction_bound(spark, tmp_path):
         store.process_batch(
             docs.where(f"doc_id % 6 = {e}"), epoch_id=e, max_live_epochs=2
         )
-        assert len(store._manifest()["live"]) <= 3
+        assert len(store.log.manifest()["live"]) <= 3
     ctrl = lm.NgramCountStore(spark, str(tmp_path / "nactrl"), n=3)
     for e in range(6):
         ctrl.process_batch(docs.where(f"doc_id % 6 = {e}"), epoch_id=e)

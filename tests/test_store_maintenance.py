@@ -1,7 +1,6 @@
-"""r11 persisted-store maintenance: concurrent-writer CAS detection
-(the lost-update raise) across the four manifest-flipping stores,
-size-triggered auto-compaction for both LSM paths, and dedup-store
-epoch compaction with the one-generation reader grace.
+"""Persisted-store maintenance: concurrent-writer CAS detection (the
+lost-update raise) for the generation stores, size-triggered
+auto-compaction, vacuum, stream-id and one-shot-claim guards.
 """
 
 from __future__ import annotations
@@ -83,21 +82,6 @@ def test_observation_store_concurrent_append_raises(spark, tmp_path):
     assert len(man["deltas"]) == 1 and man["last_epochs"] == {"b": 0}
 
 
-def test_bigram_count_store_concurrent_batch_raises(spark, tmp_path):
-    path = str(tmp_path / "lmstore")
-    a = lm.BigramCountStore(spark, path)
-    b = lm.BigramCountStore(spark, path)
-    batch = _docs(spark, [(1, "a b c"), (2, "b c d")])
-    _hook_first_read(
-        a,
-        "_manifest",
-        lambda: b.process_batch(batch, epoch_id=0, stream_id="other"),
-    )
-    with pytest.raises(ConcurrentWriterError, match="single-writer"):
-        a.process_batch(batch, epoch_id=0, stream_id="mine")
-    assert b._manifest()["live"] == ["other-0"]
-
-
 def test_postings_index_concurrent_upsert_raises(spark, tmp_path):
     from balboa_spark.operators.search import PostingsIndex
 
@@ -133,31 +117,8 @@ def test_vector_store_concurrent_upsert_raises(spark, tmp_path):
     assert b._manifest()["generation"] == 1
 
 
-def test_dedup_store_compact_racing_append_raises(spark, tmp_path):
-    path = str(tmp_path / "ms")
-    a = MinHashDedupStore(spark, path)
-    for e in range(3):
-        a.process_batch(
-            _docs(spark, [(10 * e + 1, f"unique content {e} " * 6)]),
-            epoch_id=e,
-            stream_id="s",
-        )
-    b = MinHashDedupStore(spark, path)
-    _hook_first_read(
-        a,
-        "_read_manifest",
-        lambda: b.process_batch(
-            _docs(spark, [(99, "racer content entirely fresh " * 4)]),
-            epoch_id=3,
-            stream_id="s",
-        ),
-    )
-    with pytest.raises(ConcurrentWriterError, match="single-writer"):
-        a.compact()
-
-
 # ---------------------------------------------------------------------------
-# BigramCountStore: retired-scope grace + reclamation + auto-compaction
+# BigramCountStore: vacuum + auto-compaction
 # ---------------------------------------------------------------------------
 
 def _lm_slice(spark, e):
@@ -171,42 +132,15 @@ def _lm_counts(store):
     return sorted(tuple(r) for r in store.counts().collect())
 
 
-def test_lm_compact_grace_then_reclaim(spark, tmp_path):
-    store = lm.BigramCountStore(spark, str(tmp_path / "lmc"))
-    for e in range(4):
-        store.process_batch(_lm_slice(spark, e), epoch_id=e)
-    before = _lm_counts(store)
-    old_scopes = store._manifest()["live"]
-
-    store.compact()  # default: fold with one-generation grace
-    man = store._manifest()
-    assert man["live"] == ["base-1"]
-    assert sorted(man["retired"]) == sorted(old_scopes)
-    for s in old_scopes:  # folded dirs still present (grace)
-        assert os.path.isdir(str(tmp_path / "lmc" / "grams" / f"epoch={s}"))
-    assert _lm_counts(store) == before
-
-    store.process_batch(_lm_slice(spark, 9), epoch_id=9)
-    after_append = _lm_counts(store)
-    store.compact()  # second compaction reclaims the first's retirees
-    for s in old_scopes:
-        assert not os.path.isdir(str(tmp_path / "lmc" / "grams" / f"epoch={s}"))
-        assert not os.path.isdir(str(tmp_path / "lmc" / "uni" / f"epoch={s}"))
-    man = store._manifest()
-    assert man["live"] == ["base-2"]
-    assert sorted(man["retired"]) == sorted(["base-1", "default-9"])
-    assert _lm_counts(store) == after_append
-
-
 def test_lm_compact_vacuum_deletes_immediately(spark, tmp_path):
     store = lm.BigramCountStore(spark, str(tmp_path / "lmv"))
     for e in range(3):
         store.process_batch(_lm_slice(spark, e), epoch_id=e)
-    live = store._manifest()["live"]
-    store.compact(vacuum=True)
-    man = store._manifest()
-    assert man["live"] == ["base-1"] and man["retired"] == {}
-    for s in live:
+    assert store.compact(vacuum=True) == 2
+    man = store.log.manifest()
+    # one base plus the stream's latest epoch, no grace list
+    assert man["live"] == ["base-1", "default-2"] and man["retired"] == []
+    for s in ("default-0", "default-1"):
         assert not os.path.isdir(str(tmp_path / "lmv" / "grams" / f"epoch={s}"))
 
 
@@ -216,7 +150,7 @@ def test_lm_auto_compaction_bounds_live_epochs(spark, tmp_path):
     for e in range(7):
         store.process_batch(_lm_slice(spark, e), epoch_id=e, max_live_epochs=2)
         ctrl.process_batch(_lm_slice(spark, e), epoch_id=e)
-        assert len(store._manifest()["live"]) <= 3  # trigger fires past 2
+        assert len(store.log.manifest()["live"]) <= 3  # trigger fires past 2
     assert _lm_counts(store) == _lm_counts(ctrl)
     # replay gate survives the auto-compactions
     store.process_batch(_lm_slice(spark, 3), epoch_id=3, max_live_epochs=2)
@@ -246,47 +180,11 @@ def test_observation_store_auto_compaction(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# dedup stores: epoch compaction semantics
+# EpochLog stores: fold threshold and stream ids (the crash, replay and
+# race cells live in test_epoch_log_matrix.py)
 # ---------------------------------------------------------------------------
 
 BASE = "the quick brown fox jumps over the lazy dog again and again"
-NEAR = "the quick brown fox jumps over the lazy dog again and"
-
-
-def test_minhash_compact_preserves_decisions_and_reclaims(spark, tmp_path):
-    path = str(tmp_path / "msc")
-    store = MinHashDedupStore(spark, path)
-    batches = [
-        [(1, BASE), (2, "first batch other doc with plenty of words here")],
-        [(10, "second batch fresh content about stream processing ok")],
-        [(20, "third batch more fresh content regarding compaction")],
-        [(30, "fourth batch final fresh content for the fold window")],
-    ]
-    for e, rows in enumerate(batches):
-        store.process_batch(_docs(spark, rows), epoch_id=e, stream_id="s")
-
-    folded = store.compact()
-    assert folded == 3  # s-0..s-2 fold; latest s-3 stays excludable
-    man = store._read_manifest()
-    assert sorted(man["retired"]) == ["s-0", "s-1", "s-2"]
-    assert os.path.isdir(os.path.join(path, "bands", "epoch=base-1"))
-    for s in ("s-0", "s-1", "s-2"):  # grace: dirs kept this generation
-        assert os.path.isdir(os.path.join(path, "bands", f"epoch={s}"))
-
-    # decisions vs the folded history are unchanged: a near-dup of the
-    # epoch-0 doc still collides, fresh content still passes
-    kept = store.process_batch(
-        _docs(spark, [(40, NEAR), (41, "genuinely new content appearing now")]),
-        epoch_id=4,
-        stream_id="s",
-    )
-    assert sorted(r.doc_id for r in kept.collect()) == [41]
-
-    # next compaction reclaims the retired dirs (grace expired)
-    assert store.compact() >= 2  # base-1 + s-3 (s-4 stays)
-    for s in ("s-0", "s-1", "s-2"):
-        assert not os.path.isdir(os.path.join(path, "bands", f"epoch={s}"))
-    assert os.path.isdir(os.path.join(path, "bands", "epoch=base-2"))
 
 
 def test_minhash_compact_noop_below_two_foldables(spark, tmp_path):
@@ -299,50 +197,33 @@ def test_minhash_compact_noop_below_two_foldables(spark, tmp_path):
     assert store.compact() == 0
 
 
-def test_span_store_compact_matches_uncompacted_twin(spark, tmp_path):
-    rows0 = [(1, "alpha beta gamma delta " * 8)]
-    rows1 = [(2, "epsilon zeta eta theta " * 8)]
-    rows2 = [(3, "iota kappa lambda mu " * 8)]
-    probe = [(9, "alpha beta gamma delta " * 8 + "nu xi omicron pi " * 8)]
-
-    a = SpanDedupStore(spark, str(tmp_path / "sa"), span_tokens=8)
-    b = SpanDedupStore(spark, str(tmp_path / "sb"), span_tokens=8)
-    for e, rows in enumerate([rows0, rows1, rows2]):
-        a.process_batch(_docs(spark, rows), epoch_id=e, stream_id="s")
-        b.process_batch(_docs(spark, rows), epoch_id=e, stream_id="s")
-    assert a.compact() == 2  # s-0, s-1 fold; s-2 stays
-
-    out_a = a.process_batch(_docs(spark, probe), epoch_id=3, stream_id="s")
-    out_b = b.process_batch(_docs(spark, probe), epoch_id=3, stream_id="s")
-    assert sorted(tuple(r) for r in out_a.collect()) == sorted(
-        tuple(r) for r in out_b.collect()
-    )
-
-
-def test_span_store_auto_compaction_bounds_dirs(spark, tmp_path):
-    from balboa_spark.operators.dedup_store import _live_scope_count
-
-    store = SpanDedupStore(spark, str(tmp_path / "sauto"), span_tokens=8)
-    for e in range(6):
-        store.process_batch(
-            _docs(spark, [(e, f"w{e}a w{e}b w{e}c w{e}d " * 8)]),
-            epoch_id=e,
-            stream_id="s",
-            max_live_epochs=2,
-        )
-        assert _live_scope_count(store, store.hashes_path) <= 3
-
-
 def test_reserved_stream_ids_rejected(spark, tmp_path):
+    """Reserved and out-of-charset stream ids are rejected, never
+    sanitized: sanitizing mapped "feed-a" and "feed_a" to one scope dir,
+    so one stream's epoch overwrote the other's committed history and a
+    duplicate of the lost document survived dedup."""
+    from balboa_spark.plans.genstore import EpochLog
+
     ms = MinHashDedupStore(spark, str(tmp_path / "msr"))
     batch = _docs(spark, [(1, BASE)])
-    with pytest.raises(ValueError, match="reserved scope"):
-        ms.process_batch(batch, epoch_id=0, stream_id="auto")
-    with pytest.raises(ValueError, match="reserved scope"):
-        ms.process_batch(batch, epoch_id=0, stream_id="base")
+    for bad in ("auto", "base", "feed-a"):
+        with pytest.raises(ValueError, match="reserved scope"):
+            ms.process_batch(batch, epoch_id=0, stream_id=bad)
     ss = SpanDedupStore(spark, str(tmp_path / "ssr"))
     with pytest.raises(ValueError, match="reserved scope"):
         ss.process_batch(batch, epoch_id=0, stream_id="base")
+    ids = ["feed_a", "feed.a", "feed_a_", "FEED_A", "feed_a0"]
+    assert len({EpochLog.scope(0, i) for i in ids}) == len(ids)
+    ms.process_batch(batch, epoch_id=0, stream_id="feed_a")
+    ms.process_batch(
+        _docs(spark, [(2, "another document entirely about graphs")]),
+        epoch_id=0,
+        stream_id="feed.a",
+    )
+    kept = ms.process_batch(
+        _docs(spark, [(3, BASE)]), epoch_id=1, stream_id="feed.a"
+    )
+    assert kept.count() == 0
 
 
 # ---------------------------------------------------------------------------
@@ -405,14 +286,10 @@ def test_lm_vacuum_under_reader_contract(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# r12: two-writer auto-scope collision guard for the dir-truth stores
+# two one-shot writers racing for the same auto-N scope: the claim is
+# CAS'd before any data lands, so the loser raises instead of
+# overwriting the winner's parquet
 # ---------------------------------------------------------------------------
-# These stores' manifests carry no live list (reader truth is the
-# partition dirs), so before r12 two concurrent ONE-SHOT writers could
-# both mint auto-N from the same directory listing and silently
-# overwrite each other's parquet. The claim stamps the chosen N into
-# the manifest under the commit-seq CAS before any data lands — the
-# loser raises instead of reusing the winner's scope.
 
 def test_exact_dedup_store_two_oneshot_writers_raise(spark, tmp_path):
     from balboa_spark.operators.dedup_store import ExactDedupStore
@@ -422,11 +299,11 @@ def test_exact_dedup_store_two_oneshot_writers_raise(spark, tmp_path):
     b = ExactDedupStore(spark, path)
     batch_a = _docs(spark, [(1, "alpha beta"), (2, "gamma delta")])
     batch_b = _docs(spark, [(10, "epsilon zeta")])
-    _hook_first_read(a, "_read_manifest", lambda: b.process_batch(batch_b))
+    _hook_first_read(a.log, "manifest", lambda: b.process_batch(batch_b))
     with pytest.raises(ConcurrentWriterError, match="single-writer"):
         a.process_batch(batch_a)
-    # winner's scope committed and claimed; loser wrote nothing
-    assert b._read_manifest()["claimed_auto"] == 0
+    # winner's scope committed; loser claimed and wrote nothing
+    assert b.log.manifest()["live"] == ["auto-0"]
     assert b.fingerprints().count() == 1
 
 
@@ -435,10 +312,11 @@ def test_span_dedup_store_two_oneshot_writers_raise(spark, tmp_path):
     a = SpanDedupStore(spark, path, span_tokens=2)
     b = SpanDedupStore(spark, path, span_tokens=2)
     batch = _docs(spark, [(1, "a b c d"), (2, "e f g h")])
-    _hook_first_read(a, "_read_manifest", lambda: b.process_batch(batch))
+    _hook_first_read(a.log, "manifest", lambda: b.process_batch(batch))
     with pytest.raises(ConcurrentWriterError, match="single-writer"):
         a.process_batch(_docs(spark, [(5, "x y z w")]))
-    assert b._read_manifest()["claimed_auto"] == 0
+    assert b.log.manifest()["live"] == ["auto-0"]
+    assert sorted(os.listdir(b.log.state_path)) == ["epoch=auto-0"]
 
 
 def test_minhash_store_two_oneshot_writers_raise(spark, tmp_path):
@@ -446,16 +324,15 @@ def test_minhash_store_two_oneshot_writers_raise(spark, tmp_path):
     a = MinHashDedupStore(spark, path)
     b = MinHashDedupStore(spark, path)
     batch = _docs(spark, [(1, "the quick brown fox jumps over the dog")])
-    _hook_first_read(a, "_read_manifest", lambda: b.process_batch(batch))
+    _hook_first_read(a.log, "manifest", lambda: b.process_batch(batch))
     with pytest.raises(ConcurrentWriterError, match="single-writer"):
         a.process_batch(_docs(spark, [(9, "a wholly different sentence here")]))
-    assert b._read_manifest()["claimed_auto"] == 0
+    assert b.log.manifest()["live"] == ["auto-0"]
+    assert {r["id"] for r in b.bands().collect()} == {1}
 
 
 def test_auto_scopes_increment_across_serial_oneshot_batches(spark, tmp_path):
-    """Serial one-shot batches mint auto-0, auto-1, ... and the claim
-    tracks the max even if a dir listing lags (claim = max(dirs,
-    last claim + 1))."""
+    """Serial one-shot batches mint auto-0, auto-1, ..."""
     from balboa_spark.operators.dedup_store import ExactDedupStore
 
     store = ExactDedupStore(spark, str(tmp_path / "serial"))
@@ -466,7 +343,7 @@ def test_auto_scopes_increment_across_serial_oneshot_batches(spark, tmp_path):
         if d.startswith("epoch=")
     }
     assert scopes == {"epoch=auto-0", "epoch=auto-1"}
-    assert store._read_manifest()["claimed_auto"] == 1
+    assert store.log.manifest()["live"] == ["auto-0", "auto-1"]
 
 
 def test_size_trigger_skips_near_noop_compaction(spark, tmp_path):
@@ -519,8 +396,8 @@ def test_first_epoch_write_lands_config_manifest_before_data(spark, tmp_path):
         store.add(
             _docs(spark, [(1, "some words here for banding")]), epoch_id=0
         )
-    man = store._read_manifest()
-    assert man is not None and man["num_hashes"] == store.num_hashes
+    assert store.log.manifest()["num_hashes"] == store.num_hashes
+    assert os.path.exists(os.path.join(path, "manifest.json"))
     assert not os.path.exists(os.path.join(path, "bands"))
     # the guard makes the reopen-with-different-params check bite even
     # for this torn first write
