@@ -1,7 +1,7 @@
 """Public-Suffix-List registrable domain — the real PSL algorithm
 (longest-match with wildcard and exception rules) as a pure Column
-expression plus a DuckDB SQL twin, and a broadcast-join arm for a
-user-supplied full PSL file.
+expression, a staged-projection arm for the full published list, and
+a DuckDB SQL twin.
 
 Why: crawl curation is domain curation — C4 drops whole domains,
 per-domain caps stop one site from dominating the mixture, quality
@@ -33,9 +33,8 @@ rule ALGORITHM is stable. Snapshot provenance: hand-pinned from the
 publicsuffix.org list as published, pin refreshed 2026-08 (round 9:
 the retired ``*.fj`` / ``*.gu`` wildcards were replaced by the
 explicit second-level registries that superseded them upstream).
-Pipelines that need the full list load it with :func:`load_psl_rules`
-and either pass it to :func:`registered_domain_psl` or use the
-broadcast-join arm :func:`with_registered_domain_psl`.
+Pipelines that need a different list load it with
+:func:`load_psl_rules` and pass it to :func:`psl_staged_domain`.
 
 Scale: the Column arm is whole-stage codegen over per-row label
 arithmetic — no shuffle, no UDF. Rule membership is ONE ``isin`` per
@@ -58,13 +57,7 @@ hash probes). Measured same-session at sf0.1 (documents -> synth url
 -> domain -> groupBy count): full-list staged arm ~0.3s build +
 ~0.5s exec per query, vs 6.2s + 0.5s for the isin()-built staged arm
 and 5.9s/query for the pure-Column full-list arm; r9 InSet snapshot
-0.65s; broadcast-join snapshot 1.17s | full 1.19s. The join arm
-stays the fallback for rule sets too large to ship as literals (it
-is flat in rule count by construction): one
-posexplode (bounded by the max rule depth, <=5 candidate suffixes per
-row) + one broadcast join + one groupBy(row-id) max — no skew surface
-because the rules side is tiny and the candidate fan-out is a
-constant.
+0.65s.
 """
 
 from __future__ import annotations
@@ -72,7 +65,7 @@ from __future__ import annotations
 import functools
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: Pinned FULL published list (see :func:`full_psl_rules`): the
@@ -543,122 +536,3 @@ def registered_domain_psl_sql(
         f" WHEN regexp_matches({host}, '^[0-9.]+$') OR {nn} <= 1 THEN {host}"
         f" ELSE {reg} END"
     )
-
-
-# --- broadcast-join arm for arbitrary-size rule sets ------------------------
-
-
-def psl_rules_df(
-    spark: SparkSession, rules: tuple[str, ...] | list[str] | None = None
-) -> DataFrame:
-    """The rule set as a relation (match_key, match_labels, kind,
-    ps_len): ``match_key`` is the suffix string a host candidate must
-    equal; ``ps_len`` the public-suffix label count a match implies
-    (wildcards imply labels+1, exceptions labels-1)."""
-    normal, wild, exc = parse_rules(rules if rules is not None else PSL_SNAPSHOT)
-    rows = []
-    for k, vals in normal.items():
-        rows += [(v, k, "normal", k) for v in vals]
-    for k, vals in wild.items():
-        rows += [(v, k, "wildcard", k + 1) for v in vals]
-    for k, vals in exc.items():
-        rows += [(v, k, "exception", k - 1) for v in vals]
-    return spark.createDataFrame(
-        rows, "match_key string, match_labels int, kind string, ps_len int"
-    )
-
-
-def with_registered_domain_psl(
-    df: DataFrame,
-    url_col: str,
-    rules_df: DataFrame,
-    out_col: str = "domain",
-) -> DataFrame:
-    """Join-based PSL lookup for full-size rule sets: posexplode each
-    host into its <=max_labels candidate suffixes, broadcast-join to
-    the rule relation, keep the prevailing rule per row (exception
-    beats longest), then rebuild the registrable domain. One narrow
-    explode (constant fan-out), one broadcast join, one groupBy on a
-    generated row id — no skew surface, and fully-duplicate input
-    rows survive (r9: grouping previously keyed on ``*df.columns``
-    and silently merged duplicates; a NULL url previously fed
-    ``sequence`` a null bound and DROPPED the row — both arms now
-    agree with the Column arm's NULL-in-NULL-out).
-
-    Retry caveat (r10, advisor): row identity uses
-    ``monotonically_increasing_id()``, a nondeterministic expression —
-    if a map task is re-executed after a partial shuffle fetch, a
-    row's exploded candidates can land under two different ids and
-    yield duplicate partially-matched output rows. For strict
-    exactly-once under task retries, ``localCheckpoint`` the input
-    first (pins the ids); batch callers are otherwise fine because a
-    resubmitted STAGE recomputes the whole lineage. Temp columns are
-    collision-checked against ``df.columns``."""
-    for t in ("__rid", "__host", "__labels", "__k", "__cand",
-              "__n", "__rank", "__ps", "__best", "__ps_len"):
-        if t in df.columns:
-            raise ValueError(
-                f"with_registered_domain_psl temp column {t!r} already in input"
-            )
-    max_labels = rules_df.agg(F.max("match_labels")).collect()[0][0] or 1
-    base = (
-        df.withColumn("__rid", F.monotonically_increasing_id())
-        .withColumn("__host", host_of(F.col(url_col)))
-        .withColumn("__labels", F.split(F.col("__host"), r"\."))
-    )
-    # NULL short-circuit: a null/empty url never reaches the explode
-    # (sequence over a null size would drop the row); it rejoins the
-    # output below with a NULL domain, matching the Column arm.
-    null_leg = base.filter(F.col(url_col).isNull()).select(
-        *df.columns, F.lit(None).cast("string").alias(out_col)
-    )
-    live = base.filter(F.col(url_col).isNotNull())
-    cand = live.select(
-        "__rid",
-        "__host",
-        "__labels",
-        *df.columns,
-        F.explode(
-            F.sequence(F.lit(1), F.least(F.size("__labels"), F.lit(max_labels)))
-        ).alias("__k"),
-    ).withColumn(
-        "__cand",
-        F.concat_ws(".", F.slice(F.col("__labels"), -F.col("__k"), F.col("__k"))),
-    )
-    joined = cand.join(
-        F.broadcast(rules_df),
-        (cand["__cand"] == rules_df["match_key"])
-        & (
-            (rules_df["kind"] != "wildcard")
-            | (F.size(cand["__labels"]) > rules_df["match_labels"])
-        ),
-        "left",
-    )
-    # prevailing rule: exceptions rank above everything, then longest
-    ranked = joined.select(
-        "__rid",
-        *df.columns,
-        "__host",
-        F.size("__labels").alias("__n"),
-        "__labels",
-        F.when(F.col("kind") == "exception", F.lit(1000) + F.col("ps_len"))
-        .otherwise(F.coalesce(F.col("ps_len"), F.lit(1)))
-        .alias("__rank"),
-        F.coalesce(F.col("ps_len"), F.lit(1)).alias("__ps"),
-    )
-    best = (
-        ranked.groupBy("__rid", *df.columns, "__host", "__n", "__labels")
-        .agg(
-            F.max(F.struct("__rank", "__ps")).alias("__best"),
-        )
-        .withColumn("__ps_len", F.col("__best.__ps"))
-    )
-    reg_len = F.least(F.col("__ps_len") + 1, F.col("__n"))
-    is_ip = F.col("__host").rlike(r"^[0-9.]+$")
-    resolved = best.withColumn(
-        out_col,
-        F.when(is_ip | (F.col("__n") <= 1), F.col("__host")).otherwise(
-            F.concat_ws(".", F.slice(F.col("__labels"), -reg_len, reg_len))
-        ),
-    ).select(*df.columns, out_col)
-    return resolved.unionByName(null_leg)

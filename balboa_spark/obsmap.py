@@ -43,12 +43,6 @@ FROM events
 """
 
 
-def obs_view_sql(name: str = "input_observations") -> str:
-    """CREATE-less view text: callers register via createOrReplaceTempView
-    (Spark) or use as a CTE/subquery (DuckDB)."""
-    return OBS_SQL
-
-
 def with_obs_cte(body_sql: str) -> str:
     """Wrap a query body in a CTE exposing `input_observations`.
 

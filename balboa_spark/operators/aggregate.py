@@ -81,221 +81,3 @@ def fold_entries(stored: DataFrame, extra_keys=()) -> DataFrame:
 def total_count(agg_df: DataFrame) -> int:
     """A5: total number of aggregate entries (db/db.go:18 TotalCount)."""
     return agg_df.count()
-
-
-def approx_stats(agg_df: DataFrame, rsd: float = 0.02) -> DataFrame:
-    """Sketch-based stats for the 100 TB dashboard path: HLL++
-    approx_count_distinct per dimension in ONE pass over the table
-    (exact distincts would need one shuffle per dimension; the sketches
-    are mergeable partial aggregates, so this is a single scan with
-    map-side combine). rsd = target relative standard deviation."""
-    return agg_df.agg(
-        F.count(F.lit(1)).alias("n_entries"),
-        F.approx_count_distinct("rrname", rsd).alias("approx_rrnames"),
-        F.approx_count_distinct("rdata", rsd).alias("approx_rdatas"),
-        F.approx_count_distinct("sensor_id", rsd).alias("approx_sensors"),
-    )
-
-
-def distinct_sketches(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    lg_k: int = 12,
-) -> DataFrame:
-    """Persistable per-group distinct-count sketches: (group, sketch,
-    estimate) using the Apache DataSketches HLL aggregate built into
-    Spark (hll_sketch_agg). Unlike approx_count_distinct — whose
-    sketch state lives only inside one query — the binary sketch
-    column can be WRITTEN to a table and unioned with later batches'
-    sketches (merge_distinct_sketches), giving incremental distinct
-    counts over an unbounded stream with bounded state: the streaming
-    total-count dashboard path at 100 TB, where re-scanning history
-    per batch is not an option. lg_k=12 -> ~1.6% relative error at
-    4 KiB per sketch."""
-    return df.groupBy(group_col).agg(
-        F.hll_sketch_agg(value_col, F.lit(lg_k)).alias("sketch")
-    ).select(
-        group_col,
-        "sketch",
-        F.hll_sketch_estimate("sketch").alias("estimate"),
-    )
-
-
-def merge_distinct_sketches(
-    *sketch_dfs: DataFrame, group_col: str | None = None
-) -> DataFrame:
-    """Union per-group sketch tables from multiple batches/stores into
-    one (group, sketch, estimate) relation via hll_union_agg. One
-    groupBy over #groups x #batches sketch rows — never the raw data.
-
-    Accuracy contract (pinned by unit test): merging a SINGLE sketch
-    set is estimate-identical to the direct aggregate, and merging
-    separately-built batch sketches agrees with the full-stream sketch
-    within the lg_k error bound (~1.04/sqrt(2^lg_k) RSE — DataSketches
-    HLL register state can differ slightly with insertion order during
-    sparse-mode promotion, so bit-exactness across batch splits is NOT
-    guaranteed, only bounded error; both stay within the bound of the
-    exact distinct count)."""
-    assert sketch_dfs, "need at least one sketch relation"
-    if group_col is None:
-        # infer as "the column that isn't sketch/estimate" — positional
-        # columns[0] would silently group by the wrong column on a
-        # reordered selection
-        rest = [c for c in sketch_dfs[0].columns if c not in ("sketch", "estimate")]
-        if len(rest) != 1:
-            raise ValueError(
-                f"cannot infer group column from {sketch_dfs[0].columns}; "
-                "pass group_col="
-            )
-        group_col = rest[0]
-    for d in sketch_dfs:
-        if group_col not in d.columns or "sketch" not in d.columns:
-            raise ValueError(
-                f"sketch relation missing {group_col!r}/'sketch': {d.columns}"
-            )
-    u = sketch_dfs[0].select(group_col, "sketch")
-    for d in sketch_dfs[1:]:
-        u = u.unionByName(d.select(group_col, "sketch"))
-    return u.groupBy(group_col).agg(
-        F.hll_union_agg("sketch").alias("sketch")
-    ).select(
-        group_col,
-        "sketch",
-        F.hll_sketch_estimate("sketch").alias("estimate"),
-    )
-
-
-def quantile_sketches(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    k: int = 800,
-) -> DataFrame:
-    """Persistable per-group quantile sketches: (group, qsketch, n)
-    using the Apache DataSketches KLL double sketch built into Spark
-    (kll_sketch_agg_double) — the executable form of the "sketch at
-    scale" path that exact sort-based percentiles (events_quantiles,
-    quality_bins) document: the binary sketch column WRITES to a
-    table, merges with later batches' sketches
-    (merge_quantile_sketches), and answers any quantile after the
-    fact (sketch_quantiles) — so a streaming latency dashboard keeps
-    one bounded row per group instead of the full value multiset.
-    KLL rank error at k=800 is ~0.6%; the map-side partial state is
-    the sketch, not the multiset."""
-    return (
-        df.groupBy(group_col)
-        .agg(F.kll_sketch_agg_double(F.col(value_col).cast("double"), F.lit(k)).alias("qsketch"))
-        .select(
-            group_col,
-            "qsketch",
-            F.kll_sketch_get_n_double("qsketch").alias("n"),
-        )
-    )
-
-
-def merge_quantile_sketches(
-    *sketch_dfs: DataFrame, group_col: str | None = None
-) -> DataFrame:
-    """Union per-group KLL sketch tables from multiple batches into
-    one — the quantile twin of merge_distinct_sketches. One groupBy
-    over #groups x #batches sketch rows, never the raw data. KLL
-    merge is lossless in the rank-error sense: the merged sketch
-    keeps the same k-bound error as a single-pass build."""
-    assert sketch_dfs, "need at least one sketch relation"
-    if group_col is None:
-        rest = [
-            c for c in sketch_dfs[0].columns if c not in ("qsketch", "n")
-        ]
-        if len(rest) != 1:
-            raise ValueError(
-                f"cannot infer group column from {sketch_dfs[0].columns}; "
-                "pass group_col="
-            )
-        group_col = rest[0]
-    u = sketch_dfs[0].select(group_col, "qsketch")
-    for d in sketch_dfs[1:]:
-        u = u.unionByName(d.select(group_col, "qsketch"))
-    return (
-        u.groupBy(group_col)
-        .agg(F.kll_merge_agg_double("qsketch").alias("qsketch"))
-        .select(
-            group_col,
-            "qsketch",
-            F.kll_sketch_get_n_double("qsketch").alias("n"),
-        )
-    )
-
-
-def sketch_quantiles(
-    sketch_df: DataFrame,
-    probs: tuple[float, ...] = (0.5, 0.9, 0.99),
-    group_col: str | None = None,
-) -> DataFrame:
-    """Probe a (group, qsketch, ...) relation for quantile estimates:
-    one output column ``p<prob>`` per requested rank. Pure projection
-    over #groups rows."""
-    if group_col is None:
-        group_col = [
-            c for c in sketch_df.columns if c not in ("qsketch", "n")
-        ][0]
-    cols = [F.col(group_col), F.col("n")] if "n" in sketch_df.columns else [
-        F.col(group_col)
-    ]
-    for p in probs:
-        cols.append(
-            F.kll_sketch_get_quantile_double("qsketch", F.lit(float(p))).alias(
-                "p" + str(p).replace(".", "_")
-            )
-        )
-    return sketch_df.select(*cols)
-
-
-def frequency_sketch(
-    df: DataFrame,
-    value_col: str,
-    eps: float = 1e-4,
-    confidence: float = 0.99,
-    seed: int = 42,
-) -> bytes:
-    """Mergeable count-min frequency sketch of a column, built
-    DISTRIBUTED by Spark's count_min_sketch aggregate (map-side
-    partial sketches, counter-wise merge — the raw column never
-    leaves the executors) and returned as the serialized sketch:
-    parameter-sized driver state (depth x width counters,
-    ~ ln(1/(1-confidence)) x e/eps), independent of data volume.
-
-    Completes the persistable-sketch family next to HLL (distinct),
-    KLL (quantiles) and Theta (set overlap): CMS answers "how often
-    does item x occur" with estimate >= true and error <= eps * N at
-    the given confidence — the streaming-accumulable form of
-    heavy-key frequency tracking (plans/skew.py measures exactly;
-    this measures approximately but merges across batches for free,
-    CMS being a linear sketch)."""
-    row = df.agg(
-        F.expr(
-            f"count_min_sketch({value_col}, {eps}d, {confidence}d, {seed})"
-        ).alias("s")
-    ).collect()[0]
-    return bytes(row["s"])
-
-
-def merge_frequency_sketches(spark, *sketches: bytes) -> bytes:
-    """Counter-wise merge of same-parameter CMS sketches (linear:
-    merge(sketch(A), sketch(B)) is estimate-identical to
-    sketch(A ++ B), pinned by unit test). Per-batch sketches from an
-    unbounded stream fold into one with bounded state."""
-    assert sketches, "need at least one sketch"
-    jcls = spark._jvm.org.apache.spark.util.sketch.CountMinSketch
-    acc = jcls.readFrom(sketches[0])
-    for s in sketches[1:]:
-        acc.mergeInPlace(jcls.readFrom(s))
-    return bytes(acc.toByteArray())
-
-
-def estimate_frequencies(spark, sketch: bytes, items) -> dict:
-    """Probe a serialized CMS for item frequency estimates —
-    driver-side, O(#items)."""
-    jcls = spark._jvm.org.apache.spark.util.sketch.CountMinSketch
-    cms = jcls.readFrom(sketch)
-    return {it: cms.estimateCount(it) for it in items}

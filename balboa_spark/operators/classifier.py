@@ -45,9 +45,6 @@ QC_LR = 1.0
 QC_ROUND = 8  # per-iteration gradient/weight rounding (see module doc)
 QC_PUNCT_RE = r"[^\w\s]"
 
-FEATURE_NAMES = ("bias", "content", "punct", "stopword", "distinct")
-
-
 def _stopword_array() -> Column:
     flat = sorted({w for ws in STOPWORDS.values() for w in ws})
     return F.array(*[F.lit(w) for w in flat])
@@ -69,11 +66,6 @@ def _quality_features_from_tokens(text: Column, toks: Column) -> list[Column]:
         F.least(F.lit(1.0), 4.0 * sw / F.greatest(n, F.lit(1.0))),
         F.size(F.array_distinct(toks)).cast("double") / F.greatest(n, F.lit(1.0)),
     ]
-
-
-def quality_features(text: Column) -> list[Column]:
-    """The four signal columns (x1..x4), each in [0, 1]."""
-    return _quality_features_from_tokens(text, tokens(text))
 
 
 def _features_frame(

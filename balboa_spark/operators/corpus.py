@@ -2343,62 +2343,6 @@ def write_epoch_shards(
     )
 
 
-def contamination_overlap_sketch(
-    train: DataFrame,
-    evals: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-) -> DataFrame:
-    """Sketch-scale benchmark-contamination estimate: how many
-    distinct word n-grams do the training corpus and an eval set
-    share? ``contamination_ngrams`` answers per-document WHICH grams
-    collide (exact, needs the eval set broadcast); this answers the
-    corpus-level HOW MUCH with two Theta sketches
-    (theta_sketch_agg) and a set-intersection estimate — no join, no
-    broadcast, bounded state (~a few KiB per side), so it runs as a
-    pre-flight check at 100 TB where materializing either distinct
-    gram set is off the table.
-
-    Output: ONE row (train_grams_est, eval_grams_est, overlap_est,
-    containment_est) — containment = overlap / eval distinct grams,
-    the fraction of the eval set's n-grams present in training data.
-    Estimates carry Theta sketch error (~1% at default lg_k); the
-    unit test pins the bound against exact set arithmetic.
-    """
-
-    def gram_sketch(frame: DataFrame, side: str) -> DataFrame:
-        return frame.select(
-            tokens(F.col(text_col)).alias("_tk")
-        ).select(
-            F.explode(_shingles(F.col("_tk"), n)).alias("_g")
-        ).agg(F.theta_sketch_agg("_g").alias("_s")).select(
-            F.lit(side).alias("_side"), "_s"
-        )
-
-    both = gram_sketch(train, "train").unionByName(gram_sketch(evals, "eval"))
-    # one row each: union-agg for totals, intersection-agg for overlap
-    agg = both.agg(
-        F.theta_sketch_estimate(F.theta_intersection_agg("_s")).alias(
-            "overlap_est"
-        ),
-        F.max(
-            F.when(F.col("_side") == "train", F.theta_sketch_estimate("_s"))
-        ).alias("train_grams_est"),
-        F.max(
-            F.when(F.col("_side") == "eval", F.theta_sketch_estimate("_s"))
-        ).alias("eval_grams_est"),
-    )
-    return agg.select(
-        "train_grams_est",
-        "eval_grams_est",
-        "overlap_est",
-        F.round(
-            F.col("overlap_est") / F.greatest(F.col("eval_grams_est"), F.lit(1)),
-            4,
-        ).alias("containment_est"),
-    )
-
-
 def curriculum_order(
     df: DataFrame,
     score_col: str,

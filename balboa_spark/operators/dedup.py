@@ -132,27 +132,6 @@ def exact_dedup(
 
 # -- MinHash ----------------------------------------------------------------
 
-def minhash_signature(text: Column, num_hashes: int = 16, k: int = 3) -> Column:
-    """Array of ``num_hashes`` min-hashes: element h = min over word
-    k-shingles of md5('h<h>|' + shingle). md5 output is uniform, so the
-    lexicographic min is a proper MinHash; using seeded prefixes makes
-    the H functions independent."""
-    sh = _shingles(tokens(text), k)
-
-    # NB: the lambda must take exactly ONE parameter — PySpark treats a
-    # two-parameter lambda (incl. bound defaults) as (element, index).
-    def seeded(h: int):
-        prefix = F.lit(f"h{h}|")
-        return lambda s: F.md5(F.concat(prefix, s))
-
-    return F.array(
-        *[
-            F.array_min(F.transform(sh, seeded(h))).alias(f"mh{h}")
-            for h in range(num_hashes)
-        ]
-    )
-
-
 def minhash_bands(
     df: DataFrame,
     text_col: str = "text",
@@ -268,7 +247,8 @@ def _simhash_from_md5(md_arr: Column) -> Column:
     reference: 276 split(lower...) nodes in the dedup_simhash plan)."""
     n = F.size(md_arr).cast("long")
 
-    # one-parameter lambda per bit (see minhash_signature note)
+    # NB: the lambda must take exactly ONE parameter — PySpark treats a
+    # two-parameter lambda (incl. bound defaults) as (element, index).
     def bit_pred(j: int):
         return lambda m: F.ascii(F.substring(m, j + 1, 1)) % 2 == 1
 
@@ -280,16 +260,6 @@ def _simhash_from_md5(md_arr: Column) -> Column:
     for b in bits[1:]:
         total = total + b
     return F.when(n > 0, total).otherwise(F.lit(None).cast("long"))
-
-
-def simhash(text: Column) -> Column:
-    """32-bit SimHash of ``text`` as a single Column expression —
-    identical values to the staged path in :func:`simhash_pairs`.
-    Column expressions cannot alias subtrees, so every bit vote here
-    re-evaluates the md5 array; use the staged DataFrame form for
-    corpus-sized inputs."""
-    toks = tokens(text)
-    return _simhash_from_md5(F.transform(toks, lambda t: F.md5(t)))
 
 
 SIMHASH_BLOCKS = 4
@@ -808,7 +778,7 @@ def minhash_estimate_pairs(
     re-tokenization, no shingle-set shuffle.
     """
     # stage the shingle array BEFORE assembling the 16-element
-    # signature: minhash_signature as one Column expression references
+    # signature: built as one Column expression, the signature references
     # the shingle subtree once per hash (tokenize+shingle re-ran 16x
     # per row — measured 52s vs 3.5s for the graded query at sf0.1,
     # r16); aliased in a projection, CollapseProject keeps it staged

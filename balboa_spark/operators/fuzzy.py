@@ -1,4 +1,4 @@
-"""Fuzzy string matching: exact-recall edit-distance pairs and joins.
+"""Fuzzy string matching: exact-recall edit-distance value pairs.
 
 Entity-resolution workhorse the reference lacks (its only approximate
 match is the rrname prefix scan, `backend/balboa-rocksdb/rocksdb-impl.c:772`):
@@ -166,49 +166,3 @@ def variant_bucket_diagnostic(
     return skew_metrics(vals, ["_k"])
 
 
-def fuzzy_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_col: str,
-    right_col: str,
-    max_dist: int = 1,
-    min_length: int = FUZZY_MIN_LENGTH,
-) -> DataFrame:
-    """Join ``left`` to ``right`` on ``lev(left_col, right_col) <=
-    max_dist`` — exact semantics via the same deletion-variant
-    bucketing (both sides expand; candidates equi-join on the variant
-    key; exact refilter). Adds a ``dist`` column; all other columns of
-    both inputs pass through (name collisions are the caller's to
-    resolve beforehand).
-
-    Distinct-value candidate pairing keeps the variant join sized by
-    value cardinality, not row count; rows re-attach with one
-    equi-join per side."""
-    lv = fuzzy_value_pairs(
-        left.select(F.col(left_col).alias("_v"))
-        .unionByName(right.select(F.col(right_col).alias("_v")))
-        .withColumnRenamed("_v", "_both"),
-        "_both",
-        max_dist,
-        min_length=min_length,
-    )
-    # value pairs among the union, both orientations + exact matches
-    pairs = (
-        lv.select(F.col("val_a").alias("_lv"), F.col("val_b").alias("_rv"), "dist")
-        .unionByName(
-            lv.select(
-                F.col("val_b").alias("_lv"), F.col("val_a").alias("_rv"), "dist"
-            )
-        )
-        .unionByName(
-            left.select(F.col(left_col).alias("_lv"))
-            .filter(F.col("_lv").isNotNull())
-            .distinct()
-            .select("_lv", F.col("_lv").alias("_rv"), F.lit(0).alias("dist"))
-        )
-    )
-    return (
-        left.join(pairs, left[left_col] == pairs["_lv"])
-        .join(right, pairs["_rv"] == right[right_col])
-        .drop("_lv", "_rv")
-    )

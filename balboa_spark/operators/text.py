@@ -53,12 +53,6 @@ def _stopword_hits_from_tokens(toks: Column, lang: str) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
 
 
-def stopword_hits(text: Column, lang: str) -> Column:
-    """Number of tokens (with repeats) found in the language's
-    stopword list."""
-    return _stopword_hits_from_tokens(tokens(text), lang)
-
-
 def _lang_id_from_tokens(toks: Column) -> Column:
     """:func:`lang_id` over an already-staged token array — callers
     with a multi-signal projection alias the array once so the four
@@ -129,13 +123,6 @@ def fingerprint(text: Column) -> Column:
     """Document fingerprint: md5 of whitespace-normalized lowercase
     text — the exact-dedup key."""
     return F.md5(F.regexp_replace(F.trim(F.lower(text)), r"\s+", " "))
-
-
-def shingle_fingerprint(text: Column, k: int = 3) -> Column:
-    """Rolling-hash-style fingerprint: lexicographic min of md5 over
-    word k-shingles (a 1-hash MinHash; robust to local edits where
-    ``fingerprint`` is not)."""
-    return _shingle_fingerprint_from_tokens(tokens(text), k)
 
 
 def _shingle_fingerprint_from_tokens(toks: Column, k: int = 3) -> Column:

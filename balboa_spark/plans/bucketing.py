@@ -27,7 +27,7 @@ Trade-offs encoded here:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -53,10 +53,3 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def colocated_join(
-    spark: SparkSession, left: str, right: str, key: str, how: str = "inner"
-) -> DataFrame:
-    """Join two same-key bucketed tables. When bucket counts match,
-    the physical plan contains NO Exchange on either side — the whole
-    shuffle cost of the join disappears, every day the join re-runs."""
-    return spark.table(left).join(spark.table(right), key, how)

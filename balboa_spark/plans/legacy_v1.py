@@ -49,14 +49,6 @@ def _le_u32(value: Column, byte_offset: int) -> Column:
     return F.conv(swapped, 16, 10).cast("long")
 
 
-def _u32_le_bytes(col: Column) -> Column:
-    """Inverse of :func:`_le_u32` for the test/fixture encoder."""
-    h = F.lpad(F.hex(col.cast("long")), 8, "0")
-    return F.unhex(
-        F.concat(h.substr(7, 2), h.substr(5, 2), h.substr(3, 2), h.substr(1, 2))
-    )
-
-
 def _utf8_clean(key: Column) -> Column:
     """True iff the binary key is valid UTF-8. The v1 store treats
     keys as raw bytes end-to-end; our observation schema is
@@ -141,33 +133,3 @@ def migrate_v1(store, v1_path: str, strict: bool = True) -> None:
                 "migrate the clean subset"
             )
     store.merge(decode_v1(store.spark, v1_path))
-
-
-def encode_v1(agg_df: DataFrame) -> DataFrame:
-    """Fixture encoder: an aggregate relation → v1 ``(key, value)``
-    pairs, BOTH forward ``o`` rows (packed value) and inverted ``i``
-    rows (empty value, rocksdb-impl.c:789-800) so decode's skip path
-    is exercised. Times accept either timestamp or long columns."""
-    ts = lambda c: F.unix_timestamp(F.col(c)).cast("long")  # noqa: E731
-    value = F.concat(
-        _u32_le_bytes(F.col("count")),
-        _u32_le_bytes(ts("last_seen")),
-        _u32_le_bytes(ts("first_seen")),
-    )
-    fwd = agg_df.select(
-        F.concat_ws(
-            SEP, F.lit("o"), "rrname", "sensor_id", "rrtype", "rdata"
-        )
-        .cast("binary")
-        .alias("key"),
-        value.alias("value"),
-    )
-    inv = agg_df.select(
-        F.concat_ws(
-            SEP, F.lit("i"), "rdata", "sensor_id", "rrname", "rrtype"
-        )
-        .cast("binary")
-        .alias("key"),
-        F.lit(b"").alias("value"),
-    )
-    return fwd.unionByName(inv)

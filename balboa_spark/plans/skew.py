@@ -26,9 +26,7 @@ Scale design:
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -80,19 +78,6 @@ def skew_metrics(df: DataFrame, keys: list[str]) -> DataFrame:
         .cast("long")
         .alias("skew_permille"),
     )
-
-
-def suggest_salt(
-    max_key_rows: int, total_rows: int, partitions: int
-) -> int:
-    """Salt factor that spreads the heaviest key down to roughly one
-    even partition's worth of rows: ceil(max_key_rows / (total /
-    partitions)), floored at 1. Driver-side arithmetic on the
-    skew_metrics output — no data pass."""
-    if total_rows <= 0 or max_key_rows <= 0:
-        return 1
-    per_part = max(total_rows / partitions, 1.0)
-    return max(1, math.ceil(max_key_rows / per_part))
 
 
 def with_salt(df: DataFrame, key: str, factor: int, shard_col: str) -> DataFrame:

@@ -102,28 +102,6 @@ def zorder_code(
     )
 
 
-def zorder_layout(
-    df: DataFrame,
-    col_a: str,
-    col_b: str,
-    path: str,
-    bits: int = 8,
-    num_files: int = 32,
-) -> None:
-    """Write ``df`` clustered by the (col_a, col_b) Z-curve: range-
-    partition on zcode (near-square tiles per file) and sort within
-    partitions so parquet row-group min/max stats are tight in BOTH
-    dimensions. Readers prune with ordinary min/max skipping on either
-    column — no special reader support needed."""
-    (
-        zorder_code(df, col_a, col_b, bits)
-        .repartitionByRange(num_files, "zcode")
-        .sortWithinPartitions("zcode")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
 def zorder_oracle_expr(col_a: str, col_b: str, bits: int = 8) -> str:
     """The DuckDB twin of zorder_code's quantize+interleave for a
     relation exposing (col_a, col_b) and the min/max columns _mna,

@@ -341,53 +341,3 @@ def write_wet_shards(
     )
 
 
-def start_wet_manifest_ingest(
-    spark: SparkSession,
-    manifest_dir: str,
-    process,
-    checkpoint_dir: str,
-    record_types: Iterable[str] | None = ("conversion",),
-    trigger_available_now: bool = True,
-):
-    """Manifest-driven streaming ingest — the shape crawl snapshots
-    actually ship in (Common Crawl publishes a ``wet.paths`` listing
-    per snapshot; new snapshots mean new manifest files): stream the
-    MANIFEST lines (one archive path per line) with the supported
-    text file source, and inside ``foreachBatch`` read the batch's
-    archives through :func:`read_wet` and hand the record relation to
-    ``process(records_df, epoch_id)``.
-
-    Why a manifest stream instead of streaming the archives: the file
-    stream source cannot read binaryFile, and a snapshot's 100k
-    archives would drown per-file listing anyway — one manifest line
-    per archive is the natural unit of exactly-once tracking (the
-    text source checkpoints which manifest FILES are consumed;
-    within-batch archive reads are deterministic).
-
-    Replay contract: a crashed micro-batch is re-run with the same
-    epoch_id and the same manifest lines — ``process`` must be
-    idempotent per epoch, which every sink in this engine already is
-    (ObservationStore/PostingsIndex/VectorStore epoch gates,
-    SpanDedupStore/MinHashDedupStore effect-idempotent appends).
-
-    Returns the StreamingQuery."""
-
-    paths = spark.readStream.format("text").load(manifest_dir)
-
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        lines = [
-            r["value"].strip()
-            for r in batch_df.collect()
-            if r["value"] and r["value"].strip()
-        ]
-        if not lines:
-            return
-        records = read_wet(spark, lines, record_types=record_types)
-        process(records, epoch_id)
-
-    writer = paths.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

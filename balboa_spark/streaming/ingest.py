@@ -194,18 +194,3 @@ def ingest_stream(
     return writer.start()
 
 
-def ingest_files(
-    spark: SparkSession,
-    input_path: str,
-    fmt: str,
-    store: ObservationStore,
-    selector: Callable[[DataFrame], DataFrame] | None = None,
-    sensor_id=None,
-) -> None:
-    """Batch (re)ingest of a landing directory — the replay/backfill
-    path (S6 analog) sharing the exact same normalize/tag/fold code."""
-    lines = spark.read.format("text").load(input_path)
-    obs = normalize_json_lines(lines, fmt, sensor_id=sensor_id)
-    if selector is not None:
-        obs = selector(obs)
-    store.merge(obs.drop("tags") if "tags" in obs.columns else obs)

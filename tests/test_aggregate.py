@@ -41,24 +41,6 @@ def test_incremental_merge_invariant(spark, tables):
     assert merged.exceptAll(full).count() == 0
 
 
-def test_approx_stats_error_bound(spark, tables, duck):
-    """HLL++ sketches: within 5x the configured rsd of the exact
-    distinct counts (one-pass, mergeable — the sketch path for stats
-    at 100 TB)."""
-    from balboa_spark.operators.aggregate import approx_stats
-
-    agg = aggregate(obs_df(spark, tables))
-    row = approx_stats(agg, rsd=0.02).collect()[0]
-    exact = duck.sql(
-        with_obs_cte(
-            "SELECT count(DISTINCT rrname), count(DISTINCT rdata),"
-            " count(DISTINCT sensor_id) FROM input_observations"
-        )
-    ).fetchone()
-    for approx, true in ((row.approx_rrnames, exact[0]), (row.approx_rdatas, exact[1]), (row.approx_sensors, exact[2])):
-        assert abs(approx - true) <= max(1, 0.1 * true), (approx, true)
-
-
 def test_total_count(spark, tables, duck):
     agg = aggregate(obs_df(spark, tables))
     expected = duck.sql(
@@ -69,152 +51,3 @@ def test_total_count(spark, tables, duck):
     assert total_count(agg) == expected
 
 
-def test_distinct_sketches_merge_and_error_bound(spark):
-    """Persistable HLL sketches: per-group estimates within the lg_k
-    error bound of exact; union of one sketch set == direct aggregate
-    (estimate-identical); incremental batch merge agrees with the
-    full-stream sketch within the bound; and the sketch column
-    round-trips through parquet (the persist-and-merge-later
-    contract)."""
-    import importlib
-    import tempfile
-
-    A = importlib.import_module("balboa_spark.operators.aggregate")
-    df = spark.range(3000).select((F.col("id") % 3).alias("g"), F.col("id"))
-    exact = 1000  # ids 0..2999 split evenly, all distinct
-    full = A.distinct_sketches(df, "id", "g")
-    est = {r.g: r.estimate for r in full.collect()}
-    rse = 1.04 / (2**12) ** 0.5  # lg_k=12
-    for g, e in est.items():
-        assert abs(e - exact) / exact < 4 * rse, (g, e)
-    one = {r.g: r.estimate for r in A.merge_distinct_sketches(full).collect()}
-    assert one == est
-    b1, b2 = df.filter("id < 1700"), df.filter("id >= 1700")
-    with tempfile.TemporaryDirectory() as d:
-        # persist batch sketches, reload, merge — the incremental path
-        A.distinct_sketches(b1, "id", "g").write.parquet(d + "/s1")
-        A.distinct_sketches(b2, "id", "g").write.parquet(d + "/s2")
-        inc = {
-            r.g: r.estimate
-            for r in A.merge_distinct_sketches(
-                spark.read.parquet(d + "/s1"), spark.read.parquet(d + "/s2")
-            ).collect()
-        }
-    for g in est:
-        assert abs(inc[g] - est[g]) / exact < 4 * rse, (g, inc[g], est[g])
-
-
-def test_quantile_sketches_merge_and_rank_error(spark):
-    """Persistable KLL quantile sketches: per-group quantile estimates
-    within the k=800 rank-error bound of the exact quantile, parquet
-    round-trip, and incremental batch merge matching the full-stream
-    sketch's error contract."""
-    import importlib
-    import tempfile
-
-    A = importlib.import_module("balboa_spark.operators.aggregate")
-    # values 0..5999 per 2 groups -> exact quantile q of group g is
-    # ~q*3000 (uniform ranks)
-    df = spark.range(6000).select(
-        (F.col("id") % 2).alias("g"), (F.col("id") / 2).cast("double").alias("v")
-    )
-    full = A.quantile_sketches(df, "v", "g", k=800)
-    probed = {r.g: r for r in A.sketch_quantiles(full, (0.5, 0.9)).collect()}
-    for g, r in probed.items():
-        assert r.n == 3000
-        # KLL rank error at k=800 is ~0.6%; allow 2% of the range
-        assert abs(r.p0_5 - 1500) <= 60, (g, r.p0_5)
-        assert abs(r.p0_9 - 2700) <= 60, (g, r.p0_9)
-    b1, b2 = df.filter("id < 2500"), df.filter("id >= 2500")
-    with tempfile.TemporaryDirectory() as d:
-        A.quantile_sketches(b1, "v", "g", k=800).write.parquet(d + "/q1")
-        A.quantile_sketches(b2, "v", "g", k=800).write.parquet(d + "/q2")
-        inc = {
-            r.g: r
-            for r in A.sketch_quantiles(
-                A.merge_quantile_sketches(
-                    spark.read.parquet(d + "/q1"), spark.read.parquet(d + "/q2")
-                ),
-                (0.5, 0.9),
-            ).collect()
-        }
-    for g in probed:
-        assert inc[g].n == 3000
-        assert abs(inc[g].p0_5 - 1500) <= 60
-        assert abs(inc[g].p0_9 - 2700) <= 60
-
-
-def test_contamination_overlap_sketch_bound(spark):
-    """Theta-sketch corpus/eval n-gram overlap: estimates within a few
-    percent of exact set arithmetic on planted overlap."""
-    from balboa_spark.operators.corpus import contamination_overlap_sketch
-
-    # train doc i has tokens [i..i+40]; eval reuses train docs 0..4
-    # (overlapping 8-grams) plus disjoint vocab docs
-    def doc(i, base):
-        return (i, " ".join(f"w{base + j}" for j in range(40)))
-
-    train = spark.createDataFrame(
-        [doc(i, i * 40) for i in range(50)], ["doc_id", "text"]
-    )
-    evals = spark.createDataFrame(
-        [doc(100 + i, i * 40) for i in range(5)]
-        + [doc(200 + i, 100000 + i * 40) for i in range(5)],
-        ["doc_id", "text"],
-    )
-    row = contamination_overlap_sketch(train, evals, n=8).collect()[0]
-    # exact: each doc contributes 33 distinct 8-grams, all distinct
-    # across docs (disjoint vocab windows)
-    assert abs(row.train_grams_est - 50 * 33) / (50 * 33) < 0.05
-    assert abs(row.eval_grams_est - 10 * 33) / (10 * 33) < 0.05
-    assert abs(row.overlap_est - 5 * 33) / (5 * 33) < 0.05
-    assert 0.4 < row.containment_est < 0.6  # true containment 0.5
-
-
-# -- count-min frequency sketch ---------------------------------------------
-
-
-def test_frequency_sketch_estimates_and_merges(spark):
-    from balboa_spark.operators.aggregate import (
-        estimate_frequencies,
-        frequency_sketch,
-        merge_frequency_sketches,
-    )
-
-    rows_a = [("hot",)] * 50 + [("warm",)] * 10 + [("cool",)] * 2
-    rows_b = [("hot",)] * 30 + [("new",)] * 5
-    a = spark.createDataFrame(rows_a, ["k"])
-    b = spark.createDataFrame(rows_b, ["k"])
-
-    sk_a = frequency_sketch(a, "k")
-    est = estimate_frequencies(spark, sk_a, ["hot", "warm", "cool", "absent"])
-    # CMS overestimates only; at this width / tiny distinct set it is exact
-    assert est == {"hot": 50, "warm": 10, "cool": 2, "absent": 0}
-
-    # linear-sketch merge: per-batch sketches fold to the full-stream one
-    sk_b = frequency_sketch(b, "k")
-    merged = merge_frequency_sketches(spark, sk_a, sk_b)
-    full = frequency_sketch(a.unionByName(b), "k")
-    probe = ["hot", "warm", "cool", "new"]
-    assert estimate_frequencies(spark, merged, probe) == estimate_frequencies(
-        spark, full, probe
-    )
-    assert estimate_frequencies(spark, merged, ["hot"])["hot"] == 80
-
-
-def test_frequency_sketch_partitioning_independent(spark):
-    from balboa_spark.operators.aggregate import (
-        estimate_frequencies,
-        frequency_sketch,
-    )
-
-    df = spark.createDataFrame([(f"k{i % 7}",) for i in range(700)], ["k"])
-    e1 = estimate_frequencies(
-        spark, frequency_sketch(df, "k"), [f"k{i}" for i in range(7)]
-    )
-    e2 = estimate_frequencies(
-        spark,
-        frequency_sketch(df.repartition(13), "k"),
-        [f"k{i}" for i in range(7)],
-    )
-    assert e1 == e2 == {f"k{i}": 100 for i in range(7)}

@@ -93,32 +93,6 @@ def test_nulls_dropped_and_dist_zero_excluded_from_value_pairs(spark):
     assert [(r["val_a"], r["val_b"], r["dist"]) for r in rows] == [("x", "y", 1)]
 
 
-def test_fuzzy_join_both_orientations_and_exact(spark):
-    left = spark.createDataFrame(
-        [(1, "kitten"), (2, "cat"), (3, None)], "lid long, lname string"
-    )
-    right = spark.createDataFrame(
-        [(10, "sitten"), (11, "kitten"), (12, "dog"), (13, "cut")],
-        "rid long, rname string",
-    )
-    got = {
-        (r["lid"], r["rid"], r["dist"])
-        for r in fuzzy.fuzzy_join(left, right, "lname", "rname", 1, min_length=0)
-        .select("lid", "rid", "dist")
-        .collect()
-    }
-    assert got == {(1, 10, 1), (1, 11, 0), (2, 13, 1)}
-
-
-def test_fuzzy_join_row_multiplicity(spark):
-    """Duplicate rows on both sides multiply (join semantics), even
-    though candidate pairing ran on distinct values."""
-    left = spark.createDataFrame([(1, "aa"), (2, "aa")], "lid long, lname string")
-    right = spark.createDataFrame([(7, "ab"), (8, "ab")], "rid long, rname string")
-    rows = fuzzy.fuzzy_join(left, right, "lname", "rname", 1, min_length=0).collect()
-    assert len(rows) == 4 and all(r["dist"] == 1 for r in rows)
-
-
 def test_deletion_variants_rejects_k3(spark):
     import pytest
 

@@ -339,200 +339,6 @@ selectors:
     assert evil_rows[0].sensor_id == "sensorY"
 
 
-def test_streaming_quality_monitor(spark, tmp_path):
-    """Expectation suite per micro-batch: two file-source batches ->
-    two epochs of per-rule rows in the series, and the alert hook
-    fires only for the batch whose violation rate crosses the
-    threshold."""
-    import json
-
-    from balboa_spark.streaming.quality_monitor import (
-        quality_monitor_sink,
-        read_quality_series,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    out = str(tmp_path / "series")
-    alerts = []
-    checks = {"text_nonempty": "length(text) > 0"}
-
-    # batch 1: clean; batch 2: half empty-text
-    (src / "b1.json").write_text(
-        "\n".join(json.dumps({"doc_id": i, "text": f"doc {i}"}) for i in range(4))
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    q = stream.writeStream.foreachBatch(
-        quality_monitor_sink(
-            checks, out, alert_threshold=0.25,
-            on_alert=lambda e, rows: alerts.append((e, [r["rule"] for r in rows])),
-        )
-    ).option("checkpointLocation", str(tmp_path / "ckpt")).start()
-    try:
-        q.processAllAvailable()
-        (src / "b2.json").write_text(
-            "\n".join(
-                json.dumps({"doc_id": 10 + i, "text": "" if i % 2 else f"d{i}"})
-                for i in range(4)
-            )
-        )
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    series = read_quality_series(spark, out).collect()
-    by_epoch = {}
-    for r in series:
-        by_epoch.setdefault(r.epoch_id, {})[r.rule] = r
-    assert len(by_epoch) == 2
-    epochs = sorted(by_epoch)
-    clean, dirty = by_epoch[epochs[0]], by_epoch[epochs[1]]
-    assert clean["text_nonempty"].n_violations == 0
-    assert dirty["text_nonempty"].n_violations == 2
-    assert dirty["text_nonempty"].violation_rate == 0.5
-    assert alerts == [(epochs[1], ["text_nonempty"])]
-
-
-def test_streaming_windowed_counts_watermark_drops_late(spark, tmp_path):
-    """Append-mode watermarked windows: a window is emitted exactly
-    once after the watermark passes its end, and an event older than
-    the watermark bound is DROPPED (its closed window never updates).
-    Batches arrive as landed NDJSON files; watermark advances with
-    each batch's max event time."""
-    import json
-
-    from balboa_spark.streaming.windows import windowed_counts
-
-    land = tmp_path / "wland"
-    land.mkdir()
-
-    def batch(name, rows):
-        (land / name).write_text(
-            "\n".join(
-                json.dumps({"ts": ts, "user_id": u, "value": v})
-                for ts, u, v in rows
-            )
-            + "\n"
-        )
-
-    stream = spark.readStream.schema("ts timestamp, user_id string, value long").json(
-        str(land)
-    )
-    out = windowed_counts(stream, window="5 minutes", watermark="10 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "wckpt"))
-        .start()
-    )
-    try:
-        # batch 1: two events in [10:00,10:05), one in [10:05,10:10)
-        batch(
-            "b1.ndjson",
-            [
-                ("2024-01-01T10:00:30", "alice", 1),
-                ("2024-01-01T10:01:00", "alice", 2),
-                ("2024-01-01T10:06:00", "bob", 5),
-            ],
-        )
-        q.processAllAvailable()
-        # batch 2: advances event time to 10:30 (watermark becomes
-        # 10:20 for the NEXT batch); plus a late event at 10:02 that
-        # is still within the CURRENT watermark (9:56) -> counted
-        batch(
-            "b2.ndjson",
-            [
-                ("2024-01-01T10:30:00", "carol", 7),
-                ("2024-01-01T10:02:00", "alice", 10),
-            ],
-        )
-        q.processAllAvailable()
-        # batch 3: watermark is now 10:20, so windows ending <= 10:20
-        # finalize; this TOO-LATE event at 10:01 is behind the
-        # watermark and must be dropped from the already-closed window
-        batch("b3.ndjson", [("2024-01-01T10:01:30", "alice", 100)])
-        q.processAllAvailable()
-
-        rows = {
-            (r.window_start.minute, r.user_id): (r.n_events, r.total_value)
-            for r in spark.sql("SELECT * FROM win_counts").collect()
-        }
-        # alice's [10:00,10:05) window: 2 on-time + 1 within-watermark
-        # late event; the batch-3 too-late event (value 100) excluded
-        assert rows[(0, "alice")] == (3, 13)
-        assert rows[(5, "bob")] == (1, 5)
-        # carol's window (ends 10:35) is still open — not emitted yet
-        assert (30, "carol") not in rows
-    finally:
-        q.stop()
-
-
-def test_stream_stream_interval_join_attribution(spark, tmp_path):
-    """Two live streams joined on key + event-time range: a click
-    within the attribution window matches its impression; one outside
-    the window (or keyless) never appears. State is bounded by the
-    watermark (the plan must carry event-time range conditions both
-    ways — Spark refuses unbounded inner stream-stream joins)."""
-    import json
-
-    from balboa_spark.streaming.joins import stream_interval_join
-
-    iland, cland = tmp_path / "impr", tmp_path / "clicks"
-    iland.mkdir(), cland.mkdir()
-
-    def put(d, name, rows):
-        (d / name).write_text(
-            "\n".join(json.dumps({"ts": t, "user_id": u, "value": v}) for t, u, v in rows) + "\n"
-        )
-
-    schema = "ts timestamp, user_id string, value long"
-    impressions = spark.readStream.schema(schema).json(str(iland))
-    clicks = spark.readStream.schema(schema).json(str(cland))
-    joined = stream_interval_join(
-        impressions, clicks, key="user_id", max_delay="5 minutes"
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("attrib")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "jckpt"))
-        .start()
-    )
-    try:
-        put(iland, "i1.ndjson", [
-            ("2024-01-01T10:00:00", "alice", 1),
-            ("2024-01-01T10:00:00", "bob", 2),
-        ])
-        put(cland, "c1.ndjson", [
-            ("2024-01-01T10:03:00", "alice", 10),   # within 5 min -> match
-            ("2024-01-01T10:07:00", "bob", 20),     # outside 5 min -> no match
-            ("2024-01-01T10:02:00", "carol", 30),   # no impression -> no match
-        ])
-        q.processAllAvailable()
-        # advance both watermarks so matched results emit
-        put(iland, "i2.ndjson", [("2024-01-01T10:30:00", "zz", 0)])
-        put(cland, "c2.ndjson", [("2024-01-01T10:30:00", "zz", 0)])
-        q.processAllAvailable()
-        put(iland, "i3.ndjson", [("2024-01-01T10:40:00", "zz2", 0)])
-        put(cland, "c3.ndjson", [("2024-01-01T10:40:00", "zz2", 0)])
-        q.processAllAvailable()
-
-        rows = spark.sql(
-            "SELECT user_id, left_value, right_value FROM attrib"
-            " WHERE user_id NOT LIKE 'zz%'"
-        ).collect()
-        assert [(r.user_id, r.left_value, r.right_value) for r in rows] == [
-            ("alice", 1, 10)
-        ]
-    finally:
-        q.stop()
-
-
 def test_time_travel_reads_previous_generation(spark, store):
     """Generations are immutable snapshots: after a merge, the
     previous generation still answers with the pre-merge data (within
@@ -590,72 +396,6 @@ def test_fresh_store_generation_reads_error_clearly(spark, tmp_path):
     # the implicit read contract is unchanged: current-state reads on
     # a fresh store are an empty table, not an error
     assert s.forward().count() == 0
-
-
-def test_streaming_enrichment_sees_generation_flip(spark, store, tmp_path):
-    """Stream-static enrichment resolves the dimension PER BATCH: a
-    merge that lands between micro-batches is visible to the next
-    batch (each batch joins exactly one committed generation)."""
-    import json
-
-    from balboa_spark.streaming.enrich import enrich_foreach_batch
-
-    land = tmp_path / "eland"
-    land.mkdir()
-    seen: list[dict] = []
-
-    def sink(df, epoch):
-        for r in df.collect():
-            seen.append({"epoch": epoch, **r.asDict()})
-
-    (land / "b1.ndjson").write_text(json.dumps({"rrname": "foo"}) + "\n")
-    stream = spark.readStream.schema("rrname string").json(str(land))
-    q = (
-        stream.writeStream.foreachBatch(enrich_foreach_batch(store, sink))
-        .option("checkpointLocation", str(tmp_path / "eckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # merge more 'foo' observations between batches (count 10 -> 15)
-        ts2 = dt.datetime(2021, 6, 1)
-        store.merge(
-            spark.createDataFrame(
-                [(5, "NOERROR", "1.2.3.4", "A", "foo", "abc", ts2, ts2, [])],
-                seed_obs(spark).schema,
-            )
-        )
-        (land / "b2.ndjson").write_text(
-            json.dumps({"rrname": "foo"}) + "\n" + json.dumps({"rrname": "nope"}) + "\n"
-        )
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    by_epoch = {}
-    for r in seen:
-        by_epoch.setdefault(r["epoch"], {})[r["rrname"]] = r["seen_count"]
-    epochs = sorted(by_epoch)
-    assert by_epoch[epochs[0]]["foo"] == 10  # pre-merge generation
-    assert by_epoch[epochs[1]]["foo"] == 15  # post-merge generation
-    assert by_epoch[epochs[1]]["nope"] is None  # unseen key -> NULLs
-
-
-def test_enrich_batch_rejects_unknown_key_and_broadcasts_dim(spark, store):
-    from balboa_spark.streaming.enrich import enrich_batch
-
-    batch = spark.createDataFrame([("foo",)], ["rrname"])
-    with pytest.raises(ValueError):
-        enrich_batch(store, batch.withColumnRenamed("rrname", "domain"),
-                     key_col="domain")
-    out = enrich_batch(store, batch)
-    assert out.collect()[0]["seen_count"] == 10
-    # the key-pruned dimension aggregate is the broadcast build side —
-    # the batch is never shuffled (a hint on the row-preserved side of
-    # a left join would be silently dropped)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
 
 
 # -- LSM delta path (append_delta / compact, r10) ---------------------------

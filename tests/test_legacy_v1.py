@@ -4,21 +4,60 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+
 from balboa_spark.operators.aggregate import aggregate
 from balboa_spark.operators.query import Query
 from balboa_spark.plans.layout import ObservationStore
-import pytest
-
 from balboa_spark.plans.legacy_v1 import (
     SEP,
     decode_v1,
-    encode_v1,
     invalid_v1_keys,
     migrate_v1,
 )
 
 TS1 = dt.datetime(2019, 6, 1)
 TS2 = dt.datetime(2019, 7, 1)
+
+
+def _u32_le_bytes(col: Column) -> Column:
+    """Inverse of legacy_v1._le_u32 for the fixture encoder."""
+    h = F.lpad(F.hex(col.cast("long")), 8, "0")
+    return F.unhex(
+        F.concat(h.substr(7, 2), h.substr(5, 2), h.substr(3, 2), h.substr(1, 2))
+    )
+
+
+def encode_v1(agg_df: DataFrame) -> DataFrame:
+    """Fixture encoder: an aggregate relation → v1 ``(key, value)``
+    pairs, BOTH forward ``o`` rows (packed value) and inverted ``i``
+    rows (empty value, rocksdb-impl.c:789-800) so decode's skip path
+    is exercised. Times accept either timestamp or long columns."""
+    ts = lambda c: F.unix_timestamp(F.col(c)).cast("long")  # noqa: E731
+    value = F.concat(
+        _u32_le_bytes(F.col("count")),
+        _u32_le_bytes(ts("last_seen")),
+        _u32_le_bytes(ts("first_seen")),
+    )
+    fwd = agg_df.select(
+        F.concat_ws(
+            SEP, F.lit("o"), "rrname", "sensor_id", "rrtype", "rdata"
+        )
+        .cast("binary")
+        .alias("key"),
+        value.alias("value"),
+    )
+    inv = agg_df.select(
+        F.concat_ws(
+            SEP, F.lit("i"), "rdata", "sensor_id", "rrname", "rrtype"
+        )
+        .cast("binary")
+        .alias("key"),
+        F.lit(b"").alias("value"),
+    )
+    return fwd.unionByName(inv)
 
 
 def _v1_agg(spark):

@@ -206,136 +206,6 @@ def test_ccnet_per_language_lm_requires_lid(spark):
         lm.ccnet_pipeline(docs, per_language_lm=True)
 
 
-def test_lang_drift_monitor_streaming_e2e(spark, tmp_path):
-    """Streaming language-mix drift: batch 1 mirrors the reference's
-    50/50 aa/bb mix (PSI ~ 0, no alert); batch 2 is all-bb (mix
-    collapsed — PSI past the 0.25 line, alert fires). Replaying an
-    epoch overwrites its own partition dir."""
-    import json
-
-    from balboa_spark.streaming.quality_monitor import (
-        lang_drift_monitor_sink,
-        read_quality_series,  # noqa: F401  (format guard shared)
-    )
-
-    a_docs, b_docs = _two_lang_corpus()
-    train = spark.createDataFrame(
-        [("aa", t) for t in a_docs[:5]] + [("bb", t) for t in b_docs[:5]],
-        ["lang", "text"],
-    )
-    m = lid.train_char_ngram_lid(train)
-    reference = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(a_docs[5:10])]
-        + [(50 + i, t) for i, t in enumerate(b_docs[5:10])],
-        ["doc_id", "text"],
-    )
-    alerts = []
-    out = str(tmp_path / "series")
-    sink = lang_drift_monitor_sink(
-        m, reference, out,
-        alert_psi=0.25, on_alert=lambda e, p: alerts.append((e, p)),
-    )
-
-    land = tmp_path / "land"
-    land.mkdir()
-    (land / "b1.ndjson").write_text(
-        "\n".join(
-            json.dumps({"doc_id": i, "text": t})
-            for i, t in enumerate(a_docs[10:14] + b_docs[10:14])
-        )
-    )
-    stream = spark.readStream.schema("doc_id long, text string").json(
-        str(land)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        (land / "b2.ndjson").write_text(
-            "\n".join(
-                json.dumps({"doc_id": 200 + i, "text": t})
-                for i, t in enumerate(b_docs[14:20])
-            )
-        )
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    series = spark.read.parquet(out)
-    psis = {
-        int(r["epoch_id"]): r["psi"]
-        for r in series.select("epoch_id", "psi").distinct().collect()
-    }
-    assert abs(psis[0]) < 0.05          # balanced batch: no drift
-    assert psis[1] > 0.25               # collapsed mix: drifted
-    assert alerts and alerts[0][0] == 1 and alerts[0][1] == psis[1]
-    # shares recorded per language, p_new(aa)=0 in the drifted epoch
-    drifted = {
-        r["lang"]: r["p_new"]
-        for r in series.where(F.col("epoch_id") == 1).collect()
-    }
-    assert drifted["aa"] == 0.0 and drifted["bb"] == 1.0
-
-
-def test_lang_drift_shares_ignore_unclassifiable_docs(spark, tmp_path):
-    """Shares must be normalized by the CLASSIFIED count, not the raw
-    doc count: docs shorter than the n-gram width emit no LID row, so
-    a raw-count denominator would deflate every language's share and
-    a short-doc fraction shift would masquerade as language drift.
-    Here the batch has the same 50/50 mix as the reference plus a
-    pile of unclassifiable 1-char docs — PSI must stay ~0."""
-    import json
-
-    from balboa_spark.streaming.quality_monitor import lang_drift_monitor_sink
-
-    a_docs, b_docs = _two_lang_corpus()
-    train = spark.createDataFrame(
-        [("aa", t) for t in a_docs[:5]] + [("bb", t) for t in b_docs[:5]],
-        ["lang", "text"],
-    )
-    m = lid.train_char_ngram_lid(train)
-    reference = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(a_docs[5:10])]
-        + [(50 + i, t) for i, t in enumerate(b_docs[5:10])],
-        ["doc_id", "text"],
-    )
-    out = str(tmp_path / "series")
-    alerts = []
-    sink = lang_drift_monitor_sink(
-        m, reference, out,
-        alert_psi=0.25, on_alert=lambda e, p: alerts.append((e, p)),
-    )
-    land = tmp_path / "land"
-    land.mkdir()
-    # same mix + 10 unclassifiable short docs (raw-count shares would
-    # each halve, contributing spurious PSI)
-    batch = (
-        [(i, t) for i, t in enumerate(a_docs[10:14] + b_docs[10:14])]
-        + [(100 + i, "x") for i in range(10)]
-    )
-    (land / "b1.ndjson").write_text(
-        "\n".join(json.dumps({"doc_id": i, "text": t}) for i, t in batch)
-    )
-    stream = spark.readStream.schema("doc_id long, text string").json(str(land))
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    series = spark.read.parquet(out)
-    rows = series.collect()
-    assert abs(rows[0]["psi"]) < 0.05 and not alerts
-    shares = {r["lang"]: r["p_new"] for r in rows}
-    assert abs(sum(shares.values()) - 1.0) < 1e-9  # classified-mass norm
-
-
 def test_ccnet_per_language_lm_order5(spark):
     """CCNet at its REAL depth: per_language_lm=True composes with
     order=5 (one order-5 interpolated-KN model per detected language,

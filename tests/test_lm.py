@@ -293,94 +293,6 @@ def test_bigram_lm_save_load_roundtrip_scores_identically(spark, tiny, tmp_path)
         assert reloaded[k] == pytest.approx(direct[k], rel=1e-12)
 
 
-def test_streaming_perplexity_monitor_alerts_on_gibberish_feed(spark, tmp_path):
-    """Two file-source micro-batches against a frozen LM artifact:
-    the in-domain batch stays inside the alert band, the gibberish
-    batch trips it; both epochs land in the series."""
-    import json
-
-    from balboa_spark.streaming.quality_monitor import perplexity_monitor_sink
-
-    fluent = "the cat sat on the mat and the dog sat on the rug"
-    train = spark.createDataFrame(
-        [(i, fluent) for i in range(8)], ["doc_id", "text"]
-    )
-    model_path = str(tmp_path / "model")
-    lm.save_bigram_lm(lm.train_bigram_lm(train), model_path)
-    # calibration: in-domain ppl under this model, used as the band
-    in_domain = lm.score_bigram_lm(
-        train.limit(1), lm.load_any_lm(spark, model_path)[0]
-    )
-    base_ppl = in_domain.collect()[0]["perplexity"]
-
-    src = tmp_path / "src"
-    src.mkdir()
-    out = str(tmp_path / "series")
-    alerts = []
-    (src / "b1.json").write_text(
-        "\n".join(json.dumps({"doc_id": i, "text": fluent}) for i in range(4))
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            perplexity_monitor_sink(
-                model_path,
-                out,
-                alert_bounds=(0.0, base_ppl * 2),
-                on_alert=lambda e, ppl: alerts.append((e, ppl)),
-            )
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        (src / "b2.json").write_text(
-            "\n".join(
-                json.dumps({"doc_id": 10 + i, "text": "zq xv qj vx jz qx kw uy"})
-                for i in range(4)
-            )
-        )
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    series = sorted(
-        spark.read.parquet(out).collect(), key=lambda r: r["epoch_id"]
-    )
-    assert len(series) == 2
-    assert series[0]["n_docs"] == 4 and series[1]["n_docs"] == 4
-    # clean epoch at the calibrated ppl; gibberish epoch far above
-    assert series[0]["mean_ppl"] == pytest.approx(base_ppl, rel=1e-9)
-    assert series[1]["mean_ppl"] > base_ppl * 2
-    assert [e for e, _ in alerts] == [series[1]["epoch_id"]]
-
-
-def test_perplexity_monitor_sink_replay_idempotent(spark, tiny, tmp_path):
-    """foreachBatch replay contract: re-running an epoch OVERWRITES its
-    rows instead of appending duplicates to the series."""
-    from balboa_spark.streaming.quality_monitor import perplexity_monitor_sink
-
-    model_path = str(tmp_path / "model")
-    lm.save_bigram_lm(lm.train_bigram_lm(tiny), model_path)
-    out = str(tmp_path / "series")
-    sink = perplexity_monitor_sink(model_path, out)
-    batch = tiny.where("doc_id <= 2")
-    sink(batch, 7)
-    sink(batch, 7)  # replay of the same epoch
-    series = spark.read.parquet(out).collect()
-    assert len(series) == 1
-    assert series[0]["n_docs"] == 2
-    # empty batch and all-short-docs batch record nothing
-    sink(tiny.where("doc_id < 0"), 8)
-    sink(tiny.where("doc_id = 3"), 9)  # one-token doc: no bigrams
-    assert len(spark.read.parquet(out).collect()) == 1
-
-
 def test_bigram_count_store_incremental_equals_one_shot(spark, tmp_path):
     rows = [(i, f"w{i % 3} common w{(i + 1) % 3} tail{i}") for i in range(12)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])

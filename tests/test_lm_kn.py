@@ -564,24 +564,6 @@ def test_cli_lm_train_kn_and_score(spark, tiny, tmp_path):
         assert got[k] == pytest.approx(want[k], rel=1e-12)
 
 
-def test_perplexity_monitor_accepts_kn_artifact(spark, tiny, tmp_path):
-    from balboa_spark.streaming.quality_monitor import perplexity_monitor_sink
-
-    art = str(tmp_path / "monart")
-    lm.save_kn_bigram_lm(lm.train_kn_bigram_lm(tiny), art)
-    series = str(tmp_path / "series")
-    alerts = []
-    sink = perplexity_monitor_sink(
-        art, series, alert_bounds=(0.0, 1.0),
-        on_alert=lambda e, m: alerts.append((e, m)),
-    )
-    sink(tiny, 0)  # foreachBatch functions are plain callables
-    rows = spark.read.parquet(series).collect()
-    assert len(rows) == 1 and rows[0]["n_docs"] == 2
-    # mean ppl of the tiny corpus is > 1, so the (0, 1) band alerts
-    assert alerts and alerts[0][0] == 0
-
-
 # ---------------------------------------------------------------------------
 # NgramCountStore (r11): incremental order-n counts
 # ---------------------------------------------------------------------------

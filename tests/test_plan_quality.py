@@ -331,21 +331,26 @@ def test_zorder_layout_bounds_both_dimensions(spark):
 
 def test_zorder_layout_real_file_stats_prune(spark, tmp_path):
     """End-to-end layout claim on REAL parquet footers: write the grid
-    z-ordered via zorder_layout, read each file's min/max stats with
-    pyarrow, and check that a selective range predicate on EITHER
-    column intersects only a minority of files — while a single-key
-    sorted layout leaves the other column's predicate touching every
-    file."""
+    range-partitioned and sorted on zorder_code, read each file's
+    min/max stats with pyarrow, and check that a selective range
+    predicate on EITHER column intersects only a minority of files —
+    while a single-key sorted layout leaves the other column's
+    predicate touching every file."""
     import os
 
     import pyarrow.parquet as pq_
 
-    from balboa_spark.plans.zorder import zorder_layout
+    from balboa_spark.plans.zorder import zorder_code
 
     rows = [(a * 32 + b, a, b) for a in range(32) for b in range(32)]
     df = spark.createDataFrame(rows, "rid long, a long, b long")
     zpath = str(tmp_path / "z")
-    zorder_layout(df, "a", "b", zpath, bits=5, num_files=16)
+    (
+        zorder_code(df, "a", "b", bits=5)
+        .repartitionByRange(16, "zcode")
+        .sortWithinPartitions("zcode")
+        .write.parquet(zpath)
+    )
 
     def file_ranges(path, col):
         out = []
@@ -412,7 +417,7 @@ def test_bucketed_join_has_no_exchange(spark, tables, tmp_path):
     physical plan — the repeated-big-join cost model at scale."""
     from pyspark.sql import functions as F
 
-    from balboa_spark.plans.bucketing import colocated_join, write_bucketed
+    from balboa_spark.plans.bucketing import write_bucketed
 
     docs = tables["documents"].select("doc_id", "n_chars")
     scores = tables["documents"].select(
@@ -433,7 +438,7 @@ def test_bucketed_join_has_no_exchange(spark, tables, tmp_path):
         write_bucketed(
             scores, "b_scores", str(tmp_path / "b_scores"), "doc_id", 8
         )
-        joined = colocated_join(spark, "b_docs", "b_scores", "doc_id")
+        joined = spark.table("b_docs").join(spark.table("b_scores"), "doc_id")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
         assert "SortMergeJoin" in plan or "BroadcastHashJoin" not in plan

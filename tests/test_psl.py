@@ -1,7 +1,7 @@
 """PSL-backed registrable domain (functions/psl.py): the published
 checkPublicSuffix semantics (longest match, wildcard, exception) with
-three-way parity — Column codegen arm vs DuckDB SQL twin vs the
-broadcast-join arm — plus the full-file loader."""
+three-way parity — Column codegen arm vs staged-projection arm vs the
+DuckDB SQL twin — plus the full-file loader."""
 
 from __future__ import annotations
 
@@ -73,72 +73,6 @@ def test_column_arm_and_sql_twin_parity(spark):
         assert dom == got[i], (CASES[i][0], dom, got[i])
 
 
-def test_broadcast_join_arm_parity(spark):
-    """Join arm matches the vectors INCLUDING the null row (r9: nulls
-    previously fell out of the explode and vanished)."""
-    df = spark.createDataFrame(
-        [(i, u) for i, (u, _) in enumerate(CASES)], "i long, u string"
-    )
-    rules = P.psl_rules_df(spark)
-    rows = P.with_registered_domain_psl(df, "u", rules).collect()
-    assert len(rows) == len(CASES)
-    got = {r["i"]: r["domain"] for r in rows}
-    for i, (u, exp) in enumerate(CASES):
-        assert got[i] == exp, (u, got[i], exp)
-
-
-def test_join_arm_keeps_duplicate_rows(spark):
-    """Fully-duplicate input rows each produce an output row (r9: the
-    groupBy previously keyed on *df.columns and merged them)."""
-    df = spark.createDataFrame(
-        [("https://a.example.co.uk/",)] * 3 + [(None,)] * 2, "u string"
-    )
-    out = P.with_registered_domain_psl(df, "u", P.psl_rules_df(spark))
-    doms = [r["domain"] for r in out.collect()]
-    assert sorted(doms, key=lambda d: (d is None, d)) == [
-        "example.co.uk", "example.co.uk", "example.co.uk", None, None,
-    ]
-
-
-def test_join_vs_column_arm_property(spark):
-    """Property: on randomized rule subsets and randomized hosts, the
-    broadcast-join arm equals the Column arm row-for-row (nulls and
-    duplicates included)."""
-    import random
-
-    rng = random.Random(0xB41B0A)
-    for trial in range(3):
-        rules = tuple(
-            sorted(rng.sample(P.PSL_SNAPSHOT, k=len(P.PSL_SNAPSHOT) // 2))
-        )
-        # the raw half-sample is used as-is: an orphaned '!x.y' whose
-        # '*.y' fell out of the sample is legal PSL input and both
-        # arms must still agree on it
-        labels_pool = ["a", "bb", "ck", "uk", "co", "x9", "jp", "kawasaki"]
-        hosts = [
-            ".".join(rng.choices(labels_pool, k=rng.randint(1, 5)))
-            for _ in range(40)
-        ] + [None, "192.168.0.1", "a.b.ck", "www.ck", "x.co.uk"]
-        hosts += [hosts[2], hosts[2]]  # duplicates
-        df = spark.createDataFrame(
-            [(i, h) for i, h in enumerate(hosts)], "i long, u string"
-        )
-        col_arm = {
-            r["i"]: r["d"]
-            for r in df.select(
-                "i",
-                P.registered_domain_psl(F.col("u"), rules=rules).alias("d"),
-            ).collect()
-        }
-        join_arm = {
-            r["i"]: r["domain"]
-            for r in P.with_registered_domain_psl(
-                df, "u", P.psl_rules_df(spark, rules)
-            ).collect()
-        }
-        assert join_arm == col_arm, trial
-
-
 def test_load_psl_rules_roundtrip(spark, tmp_path):
     """A user-supplied PSL file (comments, blanks, wildcard,
     exception) parses and drives both arms identically."""
@@ -167,13 +101,11 @@ def test_load_psl_rules_roundtrip(spark, tmp_path):
     assert col["https://a.b.co.uk/"] == "b.co.uk"
     assert col["http://x.foo.ck/"] == "x.foo.ck"
     assert col["http://www.ck/"] == "www.ck"
-    join = {
-        r["u"]: r["domain"]
-        for r in P.with_registered_domain_psl(
-            df, "u", P.psl_rules_df(spark, rules)
-        ).collect()
+    staged = {
+        r["u"]: r["d"]
+        for r in P.psl_staged_domain(df, "u", rules=rules, out_col="d").collect()
     }
-    assert join == col
+    assert staged == col
 
 
 def test_unlisted_registry_differs_from_heuristic(spark):
@@ -284,9 +216,10 @@ def test_domain_ops_use_full_list_by_default(spark):
     assert capped.count() == 2  # one per registrable domain
 
 
-def test_staged_arm_equals_join_arm_on_full_list(spark):
+def test_staged_arm_equals_sql_twin_on_full_list(spark):
     """Cross-arm agreement ON THE FULL LIST: staged-projection Column
-    arm == broadcast-join arm row-for-row (incl. NULL and an IP)."""
+    arm == the DuckDB SQL twin the graded oracles replay, row-for-row
+    (incl. NULL and an IP)."""
     hosts = [u for u, _ in FULL_LIST_VECTORS] + [None, "192.168.0.1", "localhost"]
     df = spark.createDataFrame(
         [(i, h) for i, h in enumerate(hosts)], "i long, u string"
@@ -296,13 +229,11 @@ def test_staged_arm_equals_join_arm_on_full_list(spark):
         r["i"]: r["d"]
         for r in P.psl_staged_domain(df, "u", rules=full, out_col="d").collect()
     }
-    joined = {
-        r["i"]: r["d"]
-        for r in P.with_registered_domain_psl(
-            df, "u", P.psl_rules_df(spark, full), out_col="d"
-        ).collect()
-    }
-    assert staged == joined
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t(i BIGINT, u VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(hosts)))
+    sql = f"SELECT i, {P.registered_domain_psl_sql('u', full)} AS d FROM t"
+    assert dict(con.execute(sql).fetchall()) == staged
 
 
 def test_staged_arm_temp_collision_rejected(spark):

@@ -31,14 +31,6 @@ def test_heavy_keys_order_and_share(spark):
     ]
 
 
-def test_suggest_salt_scales_with_hotness(spark):
-    # hot key is 80 of 100 rows over 8 partitions: one partition's
-    # share is 12.5 rows -> ceil(80/12.5) = 7
-    assert skew.suggest_salt(80, 100, 8) == 7
-    assert skew.suggest_salt(10, 100, 8) == 1  # already fits
-    assert skew.suggest_salt(0, 0, 8) == 1  # degenerate
-
-
 def test_salted_count_equals_plain_and_is_deterministic(spark):
     df = _skewed(spark)
     plain = {
@@ -130,34 +122,3 @@ def test_psi_drift_hand_case_and_edges(spark):
         psi_drift(ref, new, "value", (5.0, 1.0))
 
 
-def test_streaming_drift_monitor_sink(spark, tmp_path):
-    """drift_monitor_sink as a plain function (foreachBatch contract):
-    a same-distribution batch records psi ~ 0 and no alert; a shifted
-    batch records psi > 0.25 and fires the alert; empty batches are
-    no-ops."""
-    from balboa_spark.streaming.quality_monitor import drift_monitor_sink
-
-    ref = spark.createDataFrame(
-        [(float(v),) for v in [1, 2, 3, 6, 7, 8]], "value double"
-    )
-    alerts = []
-    out = str(tmp_path / "drift")
-    sink = drift_monitor_sink(
-        ref, "value", (5.0,), out, alert_psi=0.25,
-        on_alert=lambda e, p: alerts.append((e, p)),
-    )
-    sink(ref, 0)  # identical distribution
-    shifted = spark.createDataFrame(
-        [(float(v),) for v in [6, 7, 8, 9]], "value double"
-    )
-    sink(shifted, 1)
-    sink(ref.limit(0), 2)  # empty: no row
-
-    series = spark.read.parquet(out)
-    psis = {
-        r["epoch_id"]: r["psi"] for r in series.select("epoch_id", "psi").distinct().collect()
-    }
-    assert set(psis) == {0, 1}
-    assert abs(psis[0]) < 1e-9
-    assert psis[1] > 0.25
-    assert alerts == [(1, psis[1])]

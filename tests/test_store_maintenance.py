@@ -230,26 +230,6 @@ def test_reserved_stream_ids_rejected(spark, tmp_path):
 # r11 ADVICE guards
 # ---------------------------------------------------------------------------
 
-def test_monitor_series_legacy_layout_rejected(spark, tmp_path):
-    """Pre-r10 series (data files directly under the root, epoch_id as
-    a data column) must be rejected up front, mirroring the dedup
-    stores' format gate."""
-    from balboa_spark.streaming.quality_monitor import (
-        quality_monitor_sink,
-        read_quality_series,
-    )
-
-    legacy = str(tmp_path / "series")
-    spark.createDataFrame(
-        [("r", 1, 0, 0.0, 1)],
-        "rule string, n_rows long, n_violations long, "
-        "violation_rate double, epoch_id long",
-    ).coalesce(1).write.mode("overwrite").parquet(legacy)
-    with pytest.raises(ValueError, match="pre-r10 layout"):
-        read_quality_series(spark, legacy)
-    with pytest.raises(ValueError, match="pre-r10 layout"):
-        quality_monitor_sink({"r": "doc_id IS NOT NULL"}, legacy)
-
 
 def test_psl_staged_domain_out_col_collision_rejected(spark):
     from balboa_spark.functions.psl import psl_staged_domain

@@ -127,64 +127,6 @@ def test_no_shuffle_in_read_plan(spark, tmp_path):
     assert "Exchange" not in plan
 
 
-def test_manifest_driven_streaming_ingest(spark, tmp_path):
-    """The wet.paths pattern: stream manifest lines, read each batch's
-    archives in foreachBatch, feed an idempotent sink — here the
-    cross-batch SpanDedupStore, so the second snapshot's duplicated
-    pages vanish."""
-    from pyspark.sql import functions as F
-
-    from balboa_spark.operators.dedup_store import SpanDedupStore
-    from balboa_spark.sources import wet
-
-    arch = tmp_path / "archives"
-    man = tmp_path / "manifests"
-    arch.mkdir()
-    man.mkdir()
-    (arch / "s1.wet").write_bytes(
-        wet.wet_bytes(
-            [("<a1>", "u1", "w1 w2 w3 w4 w5"), ("<a2>", "u2", "x1 x2 x3 x4")]
-        )
-    )
-    (arch / "s2.wet").write_bytes(
-        wet.wet_bytes(
-            [("<b1>", "u3", "w1 w2 w3 w4 w5"),  # dup of snapshot 1
-             ("<b2>", "u4", "y1 y2 y3 y4 y5")]
-        )
-    )
-    (man / "m1.paths").write_text(str(arch / "s1.wet") + "\n")
-
-    store = SpanDedupStore(spark, str(tmp_path / "spans"), span_tokens=4)
-    out_dir = str(tmp_path / "out")
-
-    def process(records, epoch_id):
-        docs = records.select(
-            F.col("record_id").alias("doc_id"), "text"
-        )
-        store.process_batch(docs, id_col="doc_id").write.mode("append").parquet(
-            out_dir
-        )
-
-    q = wet.start_wet_manifest_ingest(
-        spark, str(man), process, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(60)
-
-    # second snapshot arrives as a NEW manifest file
-    (man / "m2.paths").write_text(str(arch / "s2.wet") + "\n")
-    q2 = wet.start_wet_manifest_ingest(
-        spark, str(man), process, str(tmp_path / "ckpt")
-    )
-    q2.awaitTermination(60)
-
-    rows = {r["doc_id"]: r["clean_text"] for r in spark.read.parquet(out_dir).collect()}
-    assert rows == {
-        "<a1>": "w1 w2 w3 w4 w5",
-        "<a2>": "x1 x2 x3 x4",
-        "<b2>": "y1 y2 y3 y4 y5",
-    }  # <b1> fully duplicated snapshot 1 -> removed by the span store
-
-
 def test_parser_never_crashes_on_random_bytes():
     """Pure-function fuzz: _parse_warc_bytes must terminate and yield
     well-formed tuples for ARBITRARY byte blobs (the task-level
